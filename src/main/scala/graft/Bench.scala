@@ -203,8 +203,8 @@ object Bench {
         // REGENERATED corpus at the same path can't be silently
         // measured (ADVICE r9)
         tools.Artifacts.ensureFor(spark, sfDir, dir)
-        // session caches hold the frames the derive passes built —
-        // drop them so attached lookups actually hit the tables
+        // attach dropped the session caches; release the derive
+        // passes' persisted RDDs too
         SweepCheck.clearSessionArtifacts(spark)
         val prepSec = (System.nanoTime() - p0) / 1e9
         // guard the measurement's meaning: if any derivation counter

@@ -20,19 +20,18 @@ import org.apache.spark.sql.SparkSession
   */
 object SweepCheck {
 
-  /** Drop every session-scoped artifact: the named caches plus any
-    * still-persisted RDD (localCheckpoints register here). Safe only
-    * when no live DataFrame still depends on a checkpointed plan —
-    * true between sweep queries. */
+  /** Drop every session-scoped artifact: every [[tools.SessionCache]]
+    * plus any still-persisted RDD (localCheckpoints register here).
+    * Safe only when no live DataFrame still depends on a checkpointed
+    * plan — true between sweep queries. */
   def clearSessionArtifacts(spark: SparkSession): Unit = {
     // the full-store unpersist below subsumes the deferred scratch
     // releases — drain first so the registry drops its strong frame
     // references instead of growing for the whole sweep
     tools.Checkpoints.drainDeferred(spark)
-    queries.Dedup.clearSignatureCache()
-    queries.Cdc.clearBaseEdgeCache()
-    queries.Cdc.clearWeightedBaseEdgeCache()
-    queries.TextAnalysis.clearBpeCache()
+    // every cache, every session: the unpersist below is context-wide,
+    // so frames cached for any session are dead after it
+    tools.SessionCache.clearAll()
     // SQL-cache entries are PLAN-matched session-wide: a df.cache()
     // from any earlier consumer silently substitutes InMemoryRelation
     // into every later plan sharing that fragment — different stats,
@@ -42,21 +41,9 @@ object SweepCheck {
     // Unpersisting the RDDs below does NOT drop the CacheManager
     // entries; this does.
     spark.catalog.clearCache()
-    // Unpersisting a locally-checkpointed RDD makes Spark WARN that
-    // the truncated lineage can't recompute it — which is the POINT
-    // here (nothing depends on these plans between queries; that's
-    // this method's precondition), and hundreds of those WARNs were
-    // burying the Bench metric line in the driver-recorded tail
-    // (VERDICT r9). Expected-by-construction, so silence the RDD
-    // logger for exactly this loop.
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.config.Configurator
-    val rddLogger = "org.apache.spark.rdd"
-    val prev = LogManager.getLogger(rddLogger).getLevel
-    Configurator.setLevel(rddLogger, Level.ERROR)
-    try spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    finally Configurator.setLevel(rddLogger, prev)
+    tools.Checkpoints.silencingRddLogger(
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true)))
   }
 
   def main(args: Array[String]): Unit = {

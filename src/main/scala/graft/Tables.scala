@@ -46,17 +46,6 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Order-independent double sum: per-row decimal(…,6) rounding, then
-    * EXACT integer accumulation (associative, so shuffle/partition
-    * order can't change the result) and a single conversion back to
-    * double. The DuckDB oracle does the same cast dance, so both sides
-    * agree bit-for-bit. Implementation is the codegen'd two-long i128
-    * aggregate [[org.apache.spark.sql.graft.I128Sum]] — numerically
-    * identical to sum(cast(x as decimal(28,6))).cast(double) (the
-    * equivalence is spec-gated in VectorExprSpec) at ~half its cost on
-    * the q1 hot path.
-    * Oracle shape: CAST(SUM(CAST(x AS DECIMAL(28,6))) AS DOUBLE)
-    */
   /** Scale-adaptive EXPLICIT partition count for the layout-declared
     * loop checkpoints (guide §2.2/§2.4): max(session shuffle
     * partitions, on-disk input bytes / bytesPerPartition). An explicit
@@ -80,11 +69,20 @@ object Tables {
       else 0L
     }.sum
     val base = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val n = math.max(base, math.ceil(bytes.toDouble / bytesPerPartition).toInt)
-    // dev knob for partition-count A/B probes (LoopProbe experiments)
-    sys.env.get("SPARK_GRAFT_CKPT_PARTS").map(_.toInt).getOrElse(n)
+    math.max(base, math.ceil(bytes.toDouble / bytesPerPartition).toInt)
   }
 
+  /** Order-independent double sum: per-row decimal(…,6) rounding, then
+    * EXACT integer accumulation (associative, so shuffle/partition
+    * order can't change the result) and a single conversion back to
+    * double. The DuckDB oracle does the same cast dance, so both sides
+    * agree bit-for-bit. Implementation is the codegen'd two-long i128
+    * aggregate [[org.apache.spark.sql.graft.I128Sum]] — numerically
+    * identical to sum(cast(x as decimal(28,6))).cast(double) (the
+    * equivalence is spec-gated in VectorExprSpec) at ~half its cost on
+    * the q1 hot path.
+    * Oracle shape: CAST(SUM(CAST(x AS DECIMAL(28,6))) AS DOUBLE)
+    */
   def dsum(c: Column): Column = org.apache.spark.sql.graft.I128Sum.dsum(c)
 
   /** The decimal-routed original, kept as the reference implementation

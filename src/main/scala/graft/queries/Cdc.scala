@@ -3,6 +3,7 @@ package graft.queries
 import graft.{GraftQuery, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.tools.SessionCache
 import graft.tools.Checkpoints.SerCheckpoint
 import org.apache.spark.sql.graft.ArgMax2
 
@@ -532,35 +533,17 @@ object Cdc {
   private[graft] val baseEdgeDerivations =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Session-scoped base-edge artifact, same WeakHashMap shape and
-    * lifetime rules as Dedup's signature caches: the pre-split edge
-    * history is derived once per (session, dataset, split) and every
-    * refresh probes the checkpointed table instead of re-walking
-    * history. */
-  private val baseEdgeCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String), DataFrame]]
+  /** Session-scoped base-edge artifact: the pre-split edge history
+    * is derived once per (session, dataset, split) and every refresh
+    * probes the checkpointed table instead of re-walking history. */
+  private val baseEdgeCache = SessionCache[(String, String), DataFrame]()
   private[graft] def cachedBaseEdges(s: org.apache.spark.sql.SparkSession,
-      d: String, split: String): DataFrame = {
-    val perSession = baseEdgeCache.synchronized {
-      var m = baseEdgeCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-        baseEdgeCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate((d, split), {
+      d: String, split: String): DataFrame =
+    baseEdgeCache(s, (d, split)) {
       baseEdgeDerivations.incrementAndGet()
       tradeEdges(s, d, col("o_orderdate") < lit(split).cast("date"))
         .localCheckpoint(true)
-    })
-  }
-
-  /** Drop the cached base-edge artifacts (dataset rewritten in place
-    * or a sweep wants cold-artifact timings). */
-  def clearBaseEdgeCache(): Unit =
-    baseEdgeCache.synchronized(baseEdgeCache.clear())
+    }
 
   /** Incremental PageRank — the graph analytic composed with the
     * dd_incremental / IncrementalAgg philosophy, and the engine-side
@@ -958,36 +941,20 @@ object Cdc {
     confs = LpaAdvisory)
 
   /** Session-scoped weighted base-edge artifact for the incremental
-    * communities refresh — same WeakHashMap lifetime rules as
-    * [[cachedBaseEdges]], but carrying the co-trade COUNTS (the
-    * decomposable aggregate the merge sums). */
-  private val baseWeightedCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String), DataFrame]]
+    * communities refresh — as [[cachedBaseEdges]], but carrying the
+    * co-trade COUNTS (the decomposable aggregate the merge sums). */
+  private val baseWeightedCache = SessionCache[(String, String), DataFrame]()
   private[graft] val baseWeightedDerivations =
     new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] def cachedWeightedBaseEdges(
       s: org.apache.spark.sql.SparkSession, d: String,
-      split: String): DataFrame = {
-    val perSession = baseWeightedCache.synchronized {
-      var m = baseWeightedCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-        baseWeightedCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate((d, split), {
+      split: String): DataFrame =
+    baseWeightedCache(s, (d, split)) {
       baseWeightedDerivations.incrementAndGet()
       weightedTradeEdges(s, d,
         col("o_orderdate") < lit(split).cast("date"))
         .localCheckpoint(true)
-    })
-  }
-
-  /** Drop the cached weighted base-edge artifacts too. */
-  def clearWeightedBaseEdgeCache(): Unit =
-    baseWeightedCache.synchronized(baseWeightedCache.clear())
+    }
 
   /** Incremental communities — [[qGraphPagerankInc]]'s refresh
     * contract transplanted to LPA, with one addition: the merged

@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.tools.{Artifacts, SessionCache}
 import graft.tools.Checkpoints.SerCheckpoint
 import org.apache.spark.sql.graft.ArgMax2
 
@@ -89,13 +90,13 @@ object Dedup {
         FROM sig, (SELECT unnest(range(0, 4)) AS band) b)"""
 
   /** Exact dedup: canonical doc per md5(normalized text). Reads the
-    * session fingerprint artifact ([[cachedFingerprints]]) — same
+    * session fingerprint artifact ([[sessionFingerprints]]) — same
     * expression when derived, zero text scan when attached. */
   val qDedupExact = GraftQuery(
     "dd_exact",
     (s, d) => {
       import s.implicits._
-      cachedFingerprints(s, d)
+      sessionFingerprints(s, d)
         .groupBy($"fp")
         .agg(min($"doc_id").as("canonical_id"),
              count(lit(1)).as("n_copies"))
@@ -110,7 +111,7 @@ object Dedup {
     * per-row array expressions (zero shuffle). */
   val qMinhashSig = GraftQuery(
     "dd_minhash_signature",
-    (s, d) => cachedSignatures(s, d),
+    (s, d) => sessionSignatures(s, d),
     Some(s"""$sigCte SELECT doc_id, ${(0 until 8).map(i => s"mh$i").mkString(", ")} FROM sig"""))
 
   /** Materialized signature table (doc_id, mh0..mh7), checkpointed
@@ -123,64 +124,33 @@ object Dedup {
       .select(col("doc_id") +: (0 until 8).map(i => col(s"mh$i")): _*)
       .localCheckpoint(true)
 
-  /** Session-scoped signature cache: three registry queries
-    * (dd_minhash_signature, dd_lsh_candidate_pairs, dd_dup_clusters)
-    * read the same artifact; computing the signatures once per
-    * (session, dataset) is exactly the persisted-artifact shape —
-    * a sweep pays the signature pass once instead of three times.
-    *
-    * Keyed on the session OBJECT via a WeakHashMap so a GC'd session
-    * releases its checkpointed frames and can never collide with a
-    * later one (identityHashCode reuse). The cache assumes the files
-    * under `d` are immutable for the session's lifetime — call
-    * [[clearSignatureCache]] after refreshing a dataset in place. */
-  private val sigCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]
-
-  /** How many times any of the three artifacts was actually DERIVED
-    * (vs served from the session cache or a persisted table) — the
-    * ArtifactLifecycleSpec contract counter. */
+  /** How many times any of the four dedup artifacts was actually
+    * DERIVED (vs served from the session cache or a persisted table)
+    * — the ArtifactLifecycleSpec contract counter. */
   private[graft] val artifactDerivations =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def cachedSignatures(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val perSession = sigCache.synchronized {
-      var m = sigCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        sigCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(d,
-      graft.tools.Artifacts.lookup(s, d, "signatures").getOrElse {
-        artifactDerivations.incrementAndGet()
-        signatureTable(Tables.documents(s, d))
-      })
-  }
+  /** The dedup artifact `name` for dataset `d`, cached per session:
+    * the persisted table if one is attached, else `derive` (counted).
+    * The public accessors below are also what tools/Artifacts
+    * materializes, so the persisted tables can never drift from the
+    * session derivation. */
+  private def artifact(cache: SessionCache[String, DataFrame], name: String,
+      s: SparkSession, d: String)(derive: => DataFrame): DataFrame =
+    cache(s, d)(Artifacts.lookup(s, d, name).getOrElse {
+      artifactDerivations.incrementAndGet()
+      derive
+    })
 
-  /** Public artifact accessors — what tools/Artifacts materializes
-    * (same frames the queries consume, so the persisted tables can
-    * never drift from the session derivation). */
-  def sessionSignatures(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = cachedSignatures(s, d)
-  def sessionClusters(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = cachedClusters(s, d)
-  def sessionShingleSets(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = cachedShingleSets(s, d)
-  def sessionFingerprints(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = cachedFingerprints(s, d)
-
-  /** Drop all cached signature and cluster tables (e.g. after
-    * rewriting a dataset path in place); the next consumer recomputes. */
-  def clearSignatureCache(): Unit = {
-    sigCache.synchronized(sigCache.clear())
-    clusterCache.synchronized(clusterCache.clear())
-    shingleCache.synchronized(shingleCache.clear())
-    fpCache.synchronized(fpCache.clear())
-  }
+  /** Session-scoped signature table: three registry queries
+    * (dd_minhash_signature, dd_lsh_candidate_pairs, dd_dup_clusters)
+    * read the same artifact; computing the signatures once per
+    * (session, dataset) is exactly the persisted-artifact shape —
+    * a sweep pays the signature pass once instead of three times. */
+  private val signatureCache = SessionCache[String, DataFrame]()
+  def sessionSignatures(s: SparkSession, d: String): DataFrame =
+    artifact(signatureCache, "signatures", s, d)(
+      signatureTable(Tables.documents(s, d)))
 
   /** The normalized-text exact-dup fingerprint — ONE expression shared
     * by dd_exact, the keeper derivation, incremental triage and the
@@ -194,93 +164,44 @@ object Dedup {
   private[graft] def fingerprintTable(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), fingerprintExpr.as("fp"))
 
-  /** Session-scoped fingerprint cache — the fourth dedup artifact
+  /** Session-scoped fingerprint table — the fourth dedup artifact
     * (alongside signatures, clusters, shingles): dd_exact, the
     * keeper frame (dd_keep_list, t_corpus_yield) and dd_incremental
     * all read (doc_id, fp), and the corpus-drop job needs the OLD
     * corpus's fingerprints persisted to classify a new batch without
-    * re-scanning corpus text. Same WeakHashMap lifetime +
-    * immutability rules as [[cachedSignatures]]. */
-  private val fpCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]
-  private def cachedFingerprints(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val perSession = fpCache.synchronized {
-      var m = fpCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        fpCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(d,
-      graft.tools.Artifacts.lookup(s, d, "fingerprints").getOrElse {
-        artifactDerivations.incrementAndGet()
-        fingerprintTable(Tables.documents(s, d)).localCheckpoint(true)
-      })
-  }
+    * re-scanning corpus text. */
+  private val fingerprintCache = SessionCache[String, DataFrame]()
+  def sessionFingerprints(s: SparkSession, d: String): DataFrame =
+    artifact(fingerprintCache, "fingerprints", s, d)(
+      fingerprintTable(Tables.documents(s, d)).localCheckpoint(true))
 
-  /** Session-scoped cluster cache, same shape and lifetime rules as
-    * [[cachedSignatures]]: dd_dup_clusters, dd_keep_list and
+  /** Session-scoped cluster table: dd_dup_clusters, dd_keep_list and
     * t_corpus_yield all consume the LSH cluster table, and a
     * production pipeline materializes it once per corpus — the
     * iterative CC rounds are the most expensive dedup step, so
     * re-deriving them per consumer is pure waste. The result frame is
     * already localCheckpoint'd by [[connectedComponents]]. */
-  private val clusterCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]
-  private def cachedClusters(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val perSession = clusterCache.synchronized {
-      var m = clusterCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        clusterCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(d,
-      graft.tools.Artifacts.lookup(s, d, "clusters").getOrElse {
-        artifactDerivations.incrementAndGet()
-        connectedComponents(
-          pairsFromSignatures(cachedSignatures(s, d))
-            .select(col("doc_a"), col("doc_b")))
-          .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-      })
-  }
+  private val clusterCache = SessionCache[String, DataFrame]()
+  def sessionClusters(s: SparkSession, d: String): DataFrame =
+    artifact(clusterCache, "clusters", s, d)(
+      connectedComponents(
+        pairsFromSignatures(sessionSignatures(s, d))
+          .select(col("doc_a"), col("doc_b")))
+        .select(col("node").as("doc_id"), col("label").as("cluster_id")))
 
-  /** Session-scoped per-doc shingle-hash set cache — the third
+  /** Session-scoped per-doc shingle-hash set table — the third
     * persisted artifact alongside signatures and clusters: the exact
     * verify/containment queries (array-shaped) and both contamination
     * screens (explode-shaped) read the same sorted-distinct int64
     * arrays, and a production pipeline lands them next to the MinHash
-    * signatures in the same materialization pass. Same WeakHashMap
-    * lifetime + immutability rules as [[cachedSignatures]];
-    * [[clearSignatureCache]] drops this cache too. */
-  private val shingleCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]
-  private def cachedShingleSets(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val perSession = shingleCache.synchronized {
-      var m = shingleCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        shingleCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(d,
-      graft.tools.Artifacts.lookup(s, d, "shingles").getOrElse {
-        artifactDerivations.incrementAndGet()
-        Tables.documents(s, d)
-          .select(col("doc_id"),
-            org.apache.spark.sql.graft.ShingleHashes.of(col("text")).as("hsh"))
-          .localCheckpoint(true)
-      })
-  }
+    * signatures in the same materialization pass. */
+  private val shingleCache = SessionCache[String, DataFrame]()
+  def sessionShingleSets(s: SparkSession, d: String): DataFrame =
+    artifact(shingleCache, "shingles", s, d)(
+      Tables.documents(s, d)
+        .select(col("doc_id"),
+          org.apache.spark.sql.graft.ShingleHashes.of(col("text")).as("hsh"))
+        .localCheckpoint(true))
 
   /** Candidate near-dup pairs via LSH banding (4 bands × 2 rows):
     * docs sharing any band bucket, estimated Jaccard = signature
@@ -324,7 +245,7 @@ object Dedup {
     * candidate near-dup pairs; estimated Jaccard = signature agreement. */
   val qLshPairs = GraftQuery(
     "dd_lsh_candidate_pairs",
-    (s, d) => pairsFromSignatures(cachedSignatures(s, d)),
+    (s, d) => pairsFromSignatures(sessionSignatures(s, d)),
     Some(s"""$sigCte, $bandsCte
       SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
         CAST(${(0 until 8).map(i => s"(CASE WHEN l.mh$i = r.mh$i THEN 1 ELSE 0 END)").mkString(" + ")} AS DOUBLE) / 8 AS est_jaccard
@@ -433,7 +354,7 @@ object Dedup {
 
   val qDupClusters = GraftQuery(
     "dd_dup_clusters",
-    (s, d) => cachedClusters(s, d),
+    (s, d) => sessionClusters(s, d),
     Some(s"""${sigCte.replaceFirst("WITH ", "WITH RECURSIVE ")}, $bandsCte,
       $clusterCtes
       SELECT doc_id, cluster_id FROM clusters"""))
@@ -443,7 +364,7 @@ object Dedup {
     * on LSH candidates; here the pair generator is pinned
     * deterministic so the oracle can replay it.
     *
-    * Keyed on the HASHED shingle sets ([[cachedShingleSets]] — the
+    * Keyed on the HASHED shingle sets ([[sessionShingleSets]] — the
     * same sorted-distinct int64 arrays every other verify consumer
     * reads), not the string shingles: the hashed sets are one of the
     * three persisted dedup artifacts, so in attached mode this query
@@ -458,7 +379,7 @@ object Dedup {
     "dd_ngram_jaccard",
     (s, d) => {
       import s.implicits._
-      val docs = cachedShingleSets(s, d)
+      val docs = sessionShingleSets(s, d)
       val a = docs.select($"doc_id".as("doc_a"), $"hsh".as("sh_a"))
       val b = docs.select($"doc_id".as("doc_b"), $"hsh".as("sh_b"))
       a.join(b, col("doc_b") === col("doc_a") + 1)
@@ -507,7 +428,7 @@ object Dedup {
     "dd_contamination",
     (s, d) => {
       import s.implicits._
-      val sh = cachedShingleSets(s, d)
+      val sh = sessionShingleSets(s, d)
         .select($"doc_id", explode($"hsh").as("h"))
       val bench = sh.filter($"doc_id" < 50).select($"h").distinct()
       val corpus = sh.filter($"doc_id" >= 50)
@@ -858,7 +779,7 @@ object Dedup {
     "dd_bloom_contamination",
     (s, d) => {
       import s.implicits._
-      val sh = cachedShingleSets(s, d)
+      val sh = sessionShingleSets(s, d)
         .select($"doc_id", explode($"hsh").as("h"))
       // Materialize the benchmark shingle set once: count(), the bloom
       // build, and the exact confirm join each launch a job over it,
@@ -902,9 +823,9 @@ object Dedup {
     "dd_verified_pairs",
     (s, d) => {
       import s.implicits._
-      val cand = pairsFromSignatures(cachedSignatures(s, d))
+      val cand = pairsFromSignatures(sessionSignatures(s, d))
         .select($"doc_a", $"doc_b")
-      val hs = cachedShingleSets(s, d)
+      val hs = sessionShingleSets(s, d)
       val a = hs.select($"doc_id".as("doc_a"), $"hsh".as("hs_a"))
       val b = hs.select($"doc_id".as("doc_b"), $"hsh".as("hs_b"))
       // nullif guard mirrored in the oracle (see qContainment): two
@@ -954,9 +875,9 @@ object Dedup {
     "dd_containment",
     (s, d) => {
       import s.implicits._
-      val cand = pairsFromSignatures(cachedSignatures(s, d))
+      val cand = pairsFromSignatures(sessionSignatures(s, d))
         .select($"doc_a", $"doc_b")
-      val hs = cachedShingleSets(s, d)
+      val hs = sessionShingleSets(s, d)
       val a = hs.select($"doc_id".as("doc_a"), $"hsh".as("hs_a"))
       val b = hs.select($"doc_id".as("doc_b"), $"hsh".as("hs_b"))
       // nullif guard, mirrored in the oracle: an empty shingle set
@@ -1013,7 +934,7 @@ object Dedup {
     *  - `novel`      — neither.
     *
     * Exact wins over near. Scale shape: the batch probes the
-    * corpus's PERSISTED signature artifact (cachedSignatures — no
+    * corpus's PERSISTED signature artifact (sessionSignatures — no
     * corpus re-scan); both the fingerprint join and the band probe
     * shuffle batch-sized, not corpus-sized, data on hash keys; the
     * best-candidate pick is a max(struct) hash-aggregate keyed on
@@ -1022,13 +943,13 @@ object Dedup {
     "dd_incremental",
     (s, d) => {
       import s.implicits._
-      val fps = cachedFingerprints(s, d)
+      val fps = sessionFingerprints(s, d)
       val corpusFp = fps.filter($"doc_id" < 400)
         .groupBy($"fp").agg(min($"doc_id").as("exact_of"))
       val exact = fps.filter($"doc_id" >= 400)
         .join(corpusFp, Seq("fp"), "left")
         .select($"doc_id", $"exact_of")
-      val bands = bandFrame(cachedSignatures(s, d))
+      val bands = bandFrame(sessionSignatures(s, d))
       val near = bands.filter(col("doc_id") < 400).as("l")
         .join(bands.filter(col("doc_id") >= 400).as("r"),
           col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket"))
@@ -1183,10 +1104,10 @@ object Dedup {
   private[queries] def keeperFrame(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
     import s.implicits._
-    val fps = cachedFingerprints(s, d)
+    val fps = sessionFingerprints(s, d)
     val canon = fps.groupBy($"fp").agg(min($"doc_id").as("exact_canonical"))
     val base = fps.join(canon, "fp").select($"doc_id", $"exact_canonical")
-    base.join(cachedClusters(s, d), Seq("doc_id"), "left")
+    base.join(sessionClusters(s, d), Seq("doc_id"), "left")
       .withColumn("keeper", coalesce($"cluster_id", $"exact_canonical"))
       .select($"doc_id", $"exact_canonical", $"keeper")
   }
@@ -1239,7 +1160,7 @@ object Dedup {
     "dd_cluster_stats",
     (s, d) => {
       import s.implicits._
-      cachedClusters(s, d)
+      sessionClusters(s, d)
         .groupBy($"cluster_id")
         .agg(count(lit(1)).as("cluster_size"))
         .groupBy($"cluster_size")
@@ -1542,9 +1463,9 @@ object Dedup {
     "dd_cross_source_matrix",
     (s, d) => {
       import s.implicits._
-      val cand = pairsFromSignatures(cachedSignatures(s, d))
+      val cand = pairsFromSignatures(sessionSignatures(s, d))
         .select($"doc_a", $"doc_b")
-      val hs = cachedShingleSets(s, d)
+      val hs = sessionShingleSets(s, d)
       val a = hs.select($"doc_id".as("doc_a"), $"hsh".as("hs_a"))
       val b = hs.select($"doc_id".as("doc_b"), $"hsh".as("hs_b"))
       val jac = round(
@@ -1614,7 +1535,7 @@ object Dedup {
       // exceeds the distinct volume, so losing the plain distinct()'s
       // map-side partial dedup before the exchange costs more than
       // the probe-side exchanges the shared layout removes. Floor.
-      val mem = cachedShingleSets(s, d).join(srcOf, "doc_id")
+      val mem = sessionShingleSets(s, d).join(srcOf, "doc_id")
         .select($"source", explode($"hsh").as("h"))
         .distinct()
         .localCheckpoint(true) // sizes + the intersection both read it
@@ -1623,7 +1544,7 @@ object Dedup {
         .join(mem.select($"source".as("src_b"), $"h"), "h")
         .where($"src_a" < $"src_b")
         .groupBy($"src_a", $"src_b").agg(count(lit(1)).as("n_inter"))
-      val ssig = cachedSignatures(s, d).join(srcOf, "doc_id")
+      val ssig = sessionSignatures(s, d).join(srcOf, "doc_id")
         .groupBy($"source")
         .agg(min(col("mh0")).as("m0"),
           (1 until 8).map(i => min(col(s"mh$i")).as(s"m$i")): _*)
@@ -1711,7 +1632,7 @@ object Dedup {
       import s.implicits._
       val scored = Tables.documents(s, d).select($"doc_id",
         TextAnalysis.qualityScoreExpr($"text").as("score"))
-      val withCl = cachedClusters(s, d).join(scored, "doc_id")
+      val withCl = sessionClusters(s, d).join(scored, "doc_id")
       val keep = withCl.groupBy($"cluster_id")
         .agg(ArgMax2.of($"score", -$"doc_id").as("m"))
         .select($"cluster_id", (-$"m.tie").as("keeper"),

@@ -545,23 +545,12 @@ object Relational {
     * free; here the first run per session pays one bounded sample and
     * later runs (and re-runs) scan orders exactly once. */
   private val splitCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, Int), Array[Double]]]
+    graft.tools.SessionCache[(String, Int), Array[Double]]()
   private def cachedSplitPoints(s: SparkSession, d: String,
-      nb: Int): Array[Double] = {
-    val perSession = splitCache.synchronized {
-      var m = splitCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap
-          .empty[(String, Int), Array[Double]]
-        splitCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate((d, nb),
+      nb: Int): Array[Double] =
+    splitCache(s, (d, nb))(
       sampledSplitPoints(Tables.orders(s, d)
         .select(col("o_totalprice")), nb))
-  }
 
   /** The single corpus window pass of [[qWindowFuncs]] (pre-
     * materialization), exposed so ScaleLayoutSpec can assert its

@@ -314,27 +314,16 @@ object TextAnalysis {
   private[graft] val bpeTrainings =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Session-scoped trained merge table — same lifetime/lookup rules
-    * as Dedup's signature cache: resolve the persisted "bpe_merges"
-    * artifact if one is attached for this dataset, else train once
-    * per (session, dataset) and share across consumers (the bench
-    * warmup pass trains; measured passes encode — the same
+  /** Session-scoped trained merge table: resolve the persisted
+    * "bpe_merges" artifact if one is attached for this dataset, else
+    * train once per (session, dataset) and share across consumers
+    * (the bench warmup pass trains; measured passes encode — the same
     * warmed-artifact protocol the dedup family gets). */
   private val bpeCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String, Seq[graft.operators.BpeTrainer.Merge]]]
+    graft.tools.SessionCache[String, Seq[graft.operators.BpeTrainer.Merge]]()
   private[graft] def trainedBpeMerges(s: org.apache.spark.sql.SparkSession,
-      d: String): Seq[graft.operators.BpeTrainer.Merge] = {
-    val perSession = bpeCache.synchronized {
-      var m = bpeCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap
-          .empty[String, Seq[graft.operators.BpeTrainer.Merge]]
-        bpeCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(d,
+      d: String): Seq[graft.operators.BpeTrainer.Merge] =
+    bpeCache(s, d)(
       graft.tools.Artifacts.lookup(s, d, "bpe_merges")
         .map(graft.operators.BpeTrainer.mergesFromFrame)
         .getOrElse {
@@ -343,10 +332,6 @@ object TextAnalysis {
             Tables.documents(s, d).select(col("doc_id"), col("text")),
             BpeMergeBudget)
         })
-  }
-
-  /** Drop the cached merge tables (sweep teardown). */
-  def clearBpeCache(): Unit = bpeCache.synchronized(bpeCache.clear())
 
   /** DuckDB SQL replaying [[qBpeEncode]]'s ENCODER against a learned
     * merge table, with the k merges inlined as literals — emitted into

@@ -219,7 +219,8 @@ object Artifacts {
     * Locations and bucket counts come from ONE manifest snapshot —
     * never from per-artifact pointer files — so a concurrent
     * re-materialization can only ever hand this session a wholly-old
-    * or wholly-new consistent set. */
+    * or wholly-new consistent set. Clears every [[SessionCache]]: a
+    * cached entry depends on the attach state its key doesn't carry. */
   def attach(spark: SparkSession, outDir: String): Unit = {
     val m = readManifest(outDir)
     names.foreach { n =>
@@ -238,6 +239,7 @@ object Artifacts {
     }
     spark.conf.set(ConfDir, outDir)
     spark.conf.set(ConfSource, m.source)
+    SessionCache.clearAll()
   }
 
   /** Materialize-if-needed + attach: re-materializes when no manifest
@@ -267,11 +269,13 @@ object Artifacts {
   }
 
   /** Drop the registrations and return the session to
-    * derive-on-demand. The files under the materialized dir remain. */
+    * derive-on-demand, clearing the session caches as [[attach]] does.
+    * The files under the materialized dir remain. */
   def detach(spark: SparkSession): Unit = {
     names.foreach(n => spark.sql(s"DROP TABLE IF EXISTS ${tableName(n)}"))
     spark.conf.unset(ConfDir)
     spark.conf.unset(ConfSource)
+    SessionCache.clearAll()
   }
 
   /** The consumer hook: the persisted artifact `name` for dataset `d`,

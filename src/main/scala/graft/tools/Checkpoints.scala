@@ -208,7 +208,7 @@ object Checkpoints {
     * lineage can't recompute it — deliberate and by-construction safe
     * here (see the object scaladoc), and the WARNs were burying the
     * Bench metric line (VERDICT r9). */
-  private def silencingRddLogger[A](body: => A): A = {
+  private[graft] def silencingRddLogger[A](body: => A): A = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.config.Configurator
     val rddLogger = "org.apache.spark.rdd"

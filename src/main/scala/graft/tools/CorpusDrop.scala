@@ -175,10 +175,7 @@ object CorpusDrop {
           graft.Tables.documents(spark, gen1),
           keeperState(spark, gen1).select(col("doc_id"), col("keeper"))))
         .write.mode("overwrite").parquet(yieldDir(stateDir, 1))
-    } finally {
-      Artifacts.detach(spark)
-      Dedup.clearSignatureCache()
-    }
+    } finally Artifacts.detach(spark)
     flipPointer(stateDir, 1)
     1
   }
@@ -485,11 +482,11 @@ object CorpusDrop {
         counts.getOrElse("exact_dup", 0L), counts.getOrElse("near_dup", 0L),
         counts.getOrElse("novel", 0L), nAffected, times.toMap)
     } finally {
+      // detach also clears the session caches: frames built during the
+      // drop read the just-dropped catalog registrations (and, after
+      // the NEXT drop, GC'd artifact files) — a maintenance op leaves
+      // no cache
       Artifacts.detach(spark)
-      // session caches built during the drop hold frames over the
-      // just-dropped catalog registrations (and, after the NEXT drop,
-      // over GC'd artifact files) — a maintenance op leaves no cache
-      Dedup.clearSignatureCache()
     }
   }
 

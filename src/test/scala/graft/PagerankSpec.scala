@@ -59,7 +59,7 @@ class PagerankSpec extends SparkSpec {
 
   test("incremental pagerank: base artifact derived once, delta scan is filtered") {
     val d = sf("sf0.001")
-    queries.Cdc.clearBaseEdgeCache()
+    tools.SessionCache.clearAll()
     val before = queries.Cdc.baseEdgeDerivations.get()
     queries.Cdc.qGraphPagerankInc.run(spark, d).collect()
     val afterFirst = queries.Cdc.baseEdgeDerivations.get()
@@ -140,7 +140,7 @@ class PagerankSpec extends SparkSpec {
       assert(inc == batch, s"split $split drifted from the batch communities")
     }
     // the registry query: artifact derived once, then served cached
-    queries.Cdc.clearWeightedBaseEdgeCache()
+    tools.SessionCache.clearAll()
     val before = queries.Cdc.baseWeightedDerivations.get()
     queries.Cdc.qGraphCommunitiesInc.run(spark, d).collect()
     assert(queries.Cdc.baseWeightedDerivations.get() == before + 1)

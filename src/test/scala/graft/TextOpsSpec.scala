@@ -447,7 +447,7 @@ class TextOpsSpec extends SparkSpec {
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length($"text").cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    queries.Dedup.clearSignatureCache()
+    tools.SessionCache.clearAll()
     val r = queries.Dedup.qSourceOverlap.run(spark, dir).collect()
       .map(x => (x.getString(0), x.getString(1)) ->
         (x.getLong(4), x.getLong(5), x.getLong(6))).toMap
@@ -458,7 +458,7 @@ class TextOpsSpec extends SparkSpec {
     assert(abInter > 0L)
     val (acInter, acJac, _) = r(("srcA", "srcC"))
     assert(acInter === 0L && acJac === 0L, "disjoint vocab: zero overlap")
-    queries.Dedup.clearSignatureCache()
+    tools.SessionCache.clearAll()
   }
 
   test("dd_source_overlap: set-algebra invariants on sf0.001") {
