@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions._
   *
   * The reference's CSV round-trip between the two stages
   * (data_processing.py:17 re-reads the file written at
-  * agent_manager.py:34) disappears — both outputs derive from one
-  * cached plan. contacts is broadcast (small dim).
+  * agent_manager.py:34) disappears — both outputs derive from the same
+  * lazy `unique` plan. Nothing is cached: each output's action
+  * recomputes the anti-join, the aggregate and the sort from the
+  * listings it is given. contacts is broadcast (small dim).
   */
 object AgentPipeline {
 

@@ -17,13 +17,23 @@ import org.apache.spark.sql.functions._
   *       checkpoint in streaming, CsvSinks.writeState in batch)
   *
   * The reference runs this serially per zip with per-row sink round
-  * trips (main.py:109-138); here one cycle is one distributed plan:
+  * trips (main.py:109-138); here a cycle is two materialized frames:
   * sources parallelize per page partition, the union is free (no
-  * shuffle), dedup + CDC shuffle once on mls, and the sink writes per
-  * partition. Trulia rows join the same state machine instead of
-  * bypassing it (trulia_scraper.py:140's unconditional new_listing —
-  * reproduced only in `trulia_bypasses_state = true` mode for
-  * fidelity).
+  * shuffle), and the deduplicated batch is materialized once (every
+  * page parsed once, one dedup shuffle on mls). The events are built
+  * from that batch and materialized once too (the CDC full-outer join
+  * against the previous state). Both materializations run inside
+  * [[runCycle]], before it returns, with or without a writer;
+  * the graph sink, the returned `events` and `newState`, and every
+  * later consumer (agents, state dump, the next cycle's CDC) read
+  * those blocks instead of re-parsing pages. They are local
+  * checkpoints, not `cache()` entries, so nothing has to unpersist
+  * them: Spark's ContextCleaner frees their blocks once the returned
+  * Datasets are unreachable, and a long-running loop keeps at most
+  * the current and the previous cycle. Trulia rows join the same
+  * state machine instead of bypassing it (trulia_scraper.py:140's
+  * unconditional new_listing — reproduced only in
+  * `trulia_bypasses_state = true` mode for fidelity).
   */
 object ScrapePipeline {
 
@@ -60,15 +70,16 @@ object ScrapePipeline {
           .orderBy($"source", $"price", $"foundDate", $"url")))
       .filter($"rn" === 1).drop("rn")
       .as[Listing]
+      .localCheckpoint(true)
 
     val events = Cdc.batchEvents(prevState, batch, nowEpoch)
 
     // Trulia fidelity mode: unconditional new_listing, state untouched
     val allEvents =
-      if (truliaBypassesState)
+      (if (truliaBypassesState)
         events.union(truliaRows.map(t => ListingEvent(
           t.mls, "new_listing", None, t.price, None, None, None, t.source)))
-      else events
+      else events).localCheckpoint(true)
 
     writer.foreach { w =>
       // K1: evented rows only, node props carry the event —

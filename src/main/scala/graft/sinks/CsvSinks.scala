@@ -3,6 +3,7 @@ package graft.sinks
 import graft.model.Listing
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** K2/K3/K4 — the reference's file sinks (SURVEY §2.2). */
 object CsvSinks {
@@ -45,7 +46,10 @@ object CsvSinks {
     * (which would surface half-corrupt files as null rows at action
     * time) is not faithful: read FAILFAST and validate eagerly with a
     * distributed full pass (state is one row per active listing —
-    * bounded, and scanned once per restart, never collected). */
+    * bounded, and scanned once per restart, never collected). Only
+    * non-fatal errors empty the state: a fatal one (OOM, interrupt)
+    * propagates, since an empty state would re-list every listing as
+    * new and drop every price change. */
   def readState(spark: org.apache.spark.sql.SparkSession, path: String)
       : Dataset[Listing] = {
     import spark.implicits._
@@ -58,7 +62,7 @@ object CsvSinks {
       ds.foreach(_ => ()) // force parse+decode errors inside the catch
       ds
     } catch {
-      case _: Throwable => spark.emptyDataset[Listing]
+      case NonFatal(_) => spark.emptyDataset[Listing]
     }
   }
 }
