@@ -163,7 +163,7 @@ def tolerance_check(con, out_dir, oracles, name):
 
 def tolerance_tier(con, out_dir, oracles):
     """Returns list of (name, ok, detail). Skips entries whose spark
-    output is absent (partial RunQueries dirs)."""
+    output is absent (partial Verify dirs)."""
     results = []
     for name in TOLERANCE_QUERIES:
         try:

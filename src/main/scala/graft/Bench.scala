@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Headline benchmark (driver contract): run the bench-flagged
   * registry queries against SPARK_GRAFT_SF_DIR and print ONE JSON
@@ -71,49 +71,20 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // initialPartitionNum >> cores: shuffles START at fine granularity
-      // and AQE coalesces DOWN to the advisory size at small scale — so
-      // the same binary neither over-partitions sf0.1 nor starves sf10+
-      // (measured: at sf10 the 32-partition graph iterations spilled
-      // 10-89 GB per query; the cluster-shaped setting is thousands)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same rationale as Verify: the allowlisted bounded-table global
-    // windows (PlanAuditSpec) make WindowExec's single-partition
-    // caution pure noise in the recorded bench tail
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
-
     // SPARK_GRAFT_BENCH_ONLY=q1,q2: solo-probe subset for perf triage
     // (isolating one query's heap/GC behavior from the full pass).
     // Recorded round tables always run the full flagged set.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd/stale name would silently shrink the set and the run
-    // would "measure" nothing — fail fast instead (ADVICE r12)
-    only.foreach { names =>
-      val unknown = names -- Registry.all.map(_.name).toSet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in the registry: " +
-          unknown.toSeq.sorted.mkString(", "))
-      val unflagged = names -- Registry.all.filter(_.bench).map(_.name).toSet
-      if (unflagged.nonEmpty) System.err.println(
-        s"[bench] WARNING: not bench-flagged, skipped: " +
-          unflagged.toSeq.sorted.mkString(", "))
-    }
-    val qs = Registry.all.filter(_.bench)
-      .filter(q => only.forall(_.contains(q.name)))
+    // select fails fast on a typo'd/stale name, which would otherwise
+    // shrink the set and "measure" nothing (ADVICE r12)
+    val selected = only.fold(Registry.all)(Registry.select)
+    val (qs, unflagged) = selected.partition(_.bench)
+    if (only.isDefined && unflagged.nonEmpty) System.err.println(
+      s"[bench] WARNING: not bench-flagged, skipped: " +
+        unflagged.map(_.name).sorted.mkString(", "))
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
+    val spark = Sessions.local()
 
     def loadAvg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
@@ -163,10 +134,10 @@ object Bench {
     def measure(set: Seq[GraftQuery]): Seq[(String, Double, Double)] = {
       set.foreach(q =>
         try exec(q)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench-warm] ${q.name}: ${e.getMessage}") })
       val samples: Seq[Seq[(String, Double)]] = (1 to passes).map { _ =>
-        set.map(q => q.name -> (try exec(q) catch { case _: Throwable => -1.0 }))
+        set.map(q => q.name -> (try exec(q) catch { case NonFatal(_) => -1.0 }))
       }
       set.map { q =>
         val ts = samples.map(_.find(_._1 == q.name).map(_._2).getOrElse(-1.0))
@@ -231,7 +202,7 @@ object Bench {
             f""","queries_attached_min":${obj(att.map(t => t._1 -> t._3))}""" +
             f""","attached_total":$aTotal%.4f,"artifact_prep_sec":$prepSec%.1f"""
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench-attached] skipped: ${e.getMessage}")
         ""
       }
@@ -272,7 +243,7 @@ object Bench {
       "bench_last.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     println(line)
     spark.stop()

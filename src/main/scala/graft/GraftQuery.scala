@@ -52,4 +52,15 @@ object Registry {
       queries.Multimodal.all
 
   lazy val byName: Map[String, GraftQuery] = all.map(q => q.name -> q).toMap
+
+  /** The named queries in registry order. A typo'd or stale name
+    * would otherwise silently shrink a run to nothing, so any unknown
+    * name throws (IllegalArgumentException) listing all of them. */
+  def select(names: Iterable[String]): Seq[GraftQuery] = {
+    val unknown = names.filterNot(byName.contains).toSeq.distinct.sorted
+    require(unknown.isEmpty,
+      s"query names not in the registry: ${unknown.mkString(", ")}")
+    val wanted = names.toSet
+    all.filter(q => wanted(q.name))
+  }
 }

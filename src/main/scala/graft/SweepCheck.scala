@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev tool: execute EVERY registered query (not just the bench set)
   * against a given SF dir and report wall time + row count, to catch
@@ -48,22 +49,9 @@ object SweepCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // initialPartitionNum >> cores: shuffles START at fine granularity
-      // and AQE coalesces DOWN to the advisory size at small scale — so
-      // the same binary neither over-partitions sf0.1 nor starves sf10+
-      // (measured: at sf10 the 32-partition graph iterations spilled
-      // 10-89 GB per query; the cluster-shaped setting is thousands)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = args.drop(1).toSeq
+    val qs = if (names.isEmpty) Registry.all else Registry.select(names)
+    val spark = Sessions.local()
     // SPARK_GRAFT_ARTIFACTS_DIR: sweep against PERSISTED dedup
     // artifacts — materialize once if absent, attach, and every query
     // (even after per-query cache teardown) probes the bucketed tables
@@ -79,9 +67,7 @@ object SweepCheck {
         s" sim=${queries.Similarity.indexDerivations.get()}" +
         s" bpe=${queries.TextAnalysis.bpeTrainings.get()})")
     }
-    val results = Registry.all
-      .filter(q => names.isEmpty || names.contains(q.name))
-      .map { q =>
+    val results = qs.map { q =>
       val t0 = System.nanoTime()
       // full noop materialization like Bench — a bare count() lets
       // Catalyst prune expensive subtrees (a windowed projection
@@ -90,7 +76,7 @@ object SweepCheck {
         val df = q.run(spark, sfDir)
         df.write.format("noop").mode("overwrite").save()
         df.count()
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(f"${q.name}%-28s FAILED ${e.getMessage.take(100)}"); -1L }
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"${q.name}%-28s ${sec}%8.2fs ${n}%10d rows")

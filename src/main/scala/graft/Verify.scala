@@ -1,33 +1,29 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.control.NonFatal
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (scripts/check.py).
+  *
+  * Usage: scripts/run.sh graft.Verify <sfDir> <outDir> [name,name...]
+  * — with a name list only those queries are (re)written, into the
+  * same layout, so scripts/check.py can compare just them. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // initialPartitionNum >> cores: shuffles START at fine granularity
-      // and AQE coalesces DOWN to the advisory size at small scale — so
-      // the same binary neither over-partitions sf0.1 nor starves sf10+
-      // (measured: at sf10 the 32-partition graph iterations spilled
-      // 10-89 GB per query; the cluster-shaped setting is thousands)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The registry's only partition-less windows run over BOUNDED
-    // tables (PlanAuditSpec gates the allowlist), so WindowExec's
-    // single-partition caution is expected-by-design here — at sf10
-    // it printed hundreds of times, burying real warnings in the
-    // recorded tail.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    require(args.length == 2 || args.length == 3,
+      "usage: Verify <sfDir> <outDir> [name,name...]")
+    val spark = Sessions.local()
+    dump(spark, args(0), args(1),
+      args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
+    spark.stop()
+  }
+
+  /** Write the selected queries (all when `names` is None) under
+    * `outDir`, then the FULL oracle map. Unknown names throw before
+    * anything is written. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      names: Option[Seq[String]]): Unit = {
+    val qs = names.fold(Registry.all)(Registry.select)
     new java.io.File(outDir).mkdirs()
     // coalesce(1) keeps the driver's per-query dir a single file; at
     // synthetic large SFs (sf1/sf10 scale records) the single-threaded
@@ -40,12 +36,12 @@ object Verify {
     // from, same names and plans) so each query's conf advisories wrap
     // its materialization — withConfs must surround the WRITE, which
     // the bare (SparkSession, String) => DataFrame signature can't
-    Registry.all.foreach { q =>
+    qs.foreach { q =>
       try q.withConfs(spark) {
         val df = q.run(spark, sfDir)
         (if (coalesce1) df.coalesce(1) else df)
           .write.mode("overwrite").parquet(s"$outDir/${q.name}")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       } finally
         // free this query's registered scratch checkpoints — 150
@@ -69,17 +65,19 @@ object Verify {
     // learned-artifact-dependent oracles (t_bpe_encode): generated
     // from the SAME per-(session, dataset) cached merge table the
     // query run used, so the inlined literals cannot drift from the
-    // output being checked; a failure here degrades that one query to
-    // the old rows-only record instead of sinking the dump
+    // output being checked — and only when that query ran (a subset
+    // that skips it shouldn't pay for training); a failure here
+    // degrades that one query to the old rows-only record instead of
+    // sinking the dump
     val dynamic =
-      try queries.TextAnalysis.dynamicOracles(spark, sfDir)
-      catch { case e: Throwable =>
+      if (!qs.exists(_.name == "t_bpe_encode")) Map.empty[String, String]
+      else try queries.TextAnalysis.dynamicOracles(spark, sfDir)
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] dynamic oracle failed: ${e.getMessage}")
         Map.empty[String, String]
       }
     val json = (SparkEntry.oracleSql ++ dynamic)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -813,13 +813,13 @@ object Cdc {
     // repartition+aggregate stage — while the skew-proof form
     // ((node, lab)-keyed raw exchange, then the argmax's own
     // partial-aggregated exchange) pays ~30% more on uniform graphs
-    // (LpaGatherProbe, 20M votes: uniform 3.4s vs 4.8s; 30%-hot-node
+    // (OPTIMIZATION_r16.md, 20M votes: uniform 3.4s vs 4.8s; 30%-hot-node
     // 8.0s vs 3.8s). Pick per graph from the degree stats the selfW
     // aggregate already computes: skew-proof iff the hottest node's
     // vote stream exceeds 4× a balanced partition's share. One
     // bounded driver action on a checkpointed V-scale table; both
     // forms are exact aggregations, so results are identical either
-    // way (probe-verified parity).
+    // way (PagerankSpec's degree-cap gate case checks the parity).
     val degStats = selfW.agg(sum($"dg"), max($"dg")).first
     val hotGather = !degStats.isNullAt(1) &&
       degStats.getLong(1) > 4L * math.max(1L, degStats.getLong(0) / n)

@@ -288,11 +288,7 @@ object Artifacts {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Artifacts <srcDir> <outDir> [targetBucketBytes]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local()
     val written = materialize(spark, args(0), args(1),
       args.lift(2).map(_.toLong).getOrElse(32L << 20))
     written.foreach { case (n, rows, b) =>

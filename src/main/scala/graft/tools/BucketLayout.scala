@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed table layout — the co-located-join story at 100 TB: two
   * fact tables that join repeatedly on the same key (orders ⋈
@@ -65,11 +65,7 @@ object BucketLayout {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: BucketLayout <srcDir> <table> <key> [buckets]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local()
     val df = spark.read.parquet(args(0))
     writeBucketed(df, args(1), args(2),
       args.lift(3).map(_.toInt).getOrElse(8))

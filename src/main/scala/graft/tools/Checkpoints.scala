@@ -129,7 +129,7 @@ object Checkpoints {
     * query builder (the runner has not materialized the result yet and
     * a released localCheckpoint can never be recomputed). Queries
     * register them with [[defer]]; every runner that materializes one
-    * query at a time (Bench, Verify, RunQueries — SweepCheck's
+    * query at a time (Bench, Verify — SweepCheck's
     * full-store teardown subsumes it) calls [[drainDeferred]] AFTER
     * the materialization.
     *

@@ -35,11 +35,7 @@ import org.apache.spark.sql.SparkSession
 object Compact {
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: Compact <datasetDir> [targetBytes]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local()
     val (before, after, rows) =
       run(spark, args(0), args.lift(1).map(_.toLong).getOrElse(128L << 20))
     println(s"[compact] files $before -> $after ($rows rows)")

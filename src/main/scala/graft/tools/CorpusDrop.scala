@@ -592,14 +592,7 @@ object CorpusDrop {
     * `CorpusDrop init <srcDir> <stateDir>` or
     * `CorpusDrop drop <stateDir> <batchDir> <dropId>` */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     args.toList match {
       case "init" :: src :: state :: Nil =>
         val g = init(spark, src, state)

@@ -72,18 +72,10 @@ object Layout {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: Layout <src.parquet> <dst.parquet> <key> [nFiles]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-layout")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // pass nanosecond-precision columns through untouched (the
-      // ScaleUp convention — relevant when laying out events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
+    // pass nanosecond-precision columns through untouched (the
+    // ScaleUp convention — relevant when laying out events)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(args(0))
     val srcFiles = df.inputFiles.length
     val n = args.lift(3).map(_.toInt).getOrElse(srcFiles.max(1))

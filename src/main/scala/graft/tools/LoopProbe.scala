@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Registry
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe (round 15): run ONE registry query with the Checkpoints
   * plan tap on, printing per-checkpoint wall time and plan-shape
@@ -13,16 +12,7 @@ import org.apache.spark.sql.SparkSession
 object LoopProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     var last = System.nanoTime()
     var i = 0
     Checkpoints.planTap = Some { plan =>

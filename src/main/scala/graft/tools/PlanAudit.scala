@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.Registry
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Plan auditor: one row of physical-plan shape metrics per registry
   * query, so the 100 TB questions — does it shuffle more than it
@@ -210,19 +211,12 @@ object PlanAudit {
         globalWindows = globalWins,
         pushed = "PushedFilters: \\[[^\\]]*(?:GreaterThan|LessThan|EqualTo|In\\(|StringContains|Between)"
           .r.findFirstIn(plan).isDefined))
-    } catch { case e: Throwable => Left(s"$name: ${e.getMessage}") }
+    } catch { case NonFatal(e) => Left(s"$name: ${e.getMessage}") }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     val rows = Registry.all.map(q => audit(spark, sfDir, q.name))
     val (errs, oks) = rows.partitionMap(identity)
     val header =
@@ -236,8 +230,9 @@ object PlanAudit {
     val doc = Seq(
       "# PLAN_AUDIT — physical-plan shape per registry query",
       "",
-      s"Generated by `graft.tools.PlanAudit` at $sfDir (AQE initial",
-      "plans; see the tool's scaladoc for column meanings). Counts",
+      s"Generated by `graft.tools.PlanAudit` at $sfDir on the session",
+      "Bench and Verify run (`Sessions.local()`; AQE initial plans;",
+      "see the tool's scaladoc for column meanings). Counts",
       "include every eager ser/deser checkpoint's OWN plan via the",
       "Checkpoints plan tap — iterative queries execute their rounds",
       "inside the builder, so the output frame's executedPlan alone",

@@ -1,29 +1,30 @@
 package graft.tools
 
-import graft.Registry
-import org.apache.spark.sql.SparkSession
+import graft.{Registry, Sessions}
+import scala.util.control.NonFatal
 
-/** Dev utility: print the formatted physical plan of named registry
-  * queries against a dataset dir — the `.explain("formatted")`
-  * feedback loop for the plan-audit habit, without editing code.
+/** Dev utility: print the formatted physical plan of registry queries
+  * (every query when no names are given) against a dataset dir, on
+  * the session Bench runs — scan pruning (PushedFilters/ReadSchema),
+  * join strategies and WholeStageCodegen spans, audited without
+  * editing code.
   *
-  * Usage: scripts/run.sh graft.tools.PlanCheck <sfDir> name[,name...]
+  * Usage: scripts/run.sh graft.tools.PlanCheck <sfDir> [name[,name...]]
   */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.split(",").foreach { name =>
-      println(s"==== $name @ $sfDir ====")
-      Registry.byName(name).run(spark, sfDir).explain("formatted")
+    require(args.length == 1 || args.length == 2,
+      "usage: PlanCheck <sfDir> [name,name...]")
+    val sfDir = args(0)
+    val qs = args.lift(1).fold(Registry.all)(n => Registry.select(n.split(",")))
+    val spark = Sessions.local()
+    qs.foreach { q =>
+      println(s"==== ${q.name} @ $sfDir ====")
+      try q.run(spark, sfDir).explain("formatted")
+      catch { case NonFatal(e) => println(s"FAILED: ${e.getMessage}") }
+      // localCheckpoint is EAGER — building the plan materialized any
+      // loop scratch even though nothing was saved; free it per query
+      finally Checkpoints.drainDeferred(spark)
     }
     spark.stop()
   }

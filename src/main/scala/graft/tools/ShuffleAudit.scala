@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import graft.{GraftQuery, Registry, SweepCheck}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Shuffle auditor — the "minimize shuffles" rule as a MEASURED
   * number instead of a plan-reading judgment: runs queries once
@@ -86,7 +87,7 @@ object ShuffleAudit {
         try q.withConfs(spark) {
           q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
           true
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[shuffle-audit] ${q.name}: ${e.getMessage}")
           false
         }
@@ -149,21 +150,7 @@ object ShuffleAudit {
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
     val out = rest.lift(1)
     val all = flags.contains("--all")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // initialPartitionNum >> cores: shuffles START at fine granularity
-      // and AQE coalesces DOWN to the advisory size at small scale — so
-      // the same binary neither over-partitions sf0.1 nor starves sf10+
-      // (measured: at sf10 the 32-partition graph iterations spilled
-      // 10-89 GB per query; the cluster-shaped setting is thousands)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
 
     val base = if (all) Registry.all else Registry.all.filter(_.bench)
     // --only=a,b re-measures a named subset (substring match) — for

@@ -4,7 +4,7 @@ import graft.Tables
 import graft.model.Listing
 import graft.operators.Cdc
 import graft.streaming.{StreamingCusum, StreamingDedup}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -85,17 +85,9 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val slices = sys.env.getOrElse("SPARK_GRAFT_STREAM_SLICES", "20").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local()
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val work = java.nio.file.Files.createTempDirectory("stream_bench")
       .toString

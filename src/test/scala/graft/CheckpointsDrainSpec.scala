@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The deferred-release contract (tools.Checkpoints.defer/drainDeferred):
@@ -15,7 +16,8 @@ import org.apache.spark.sql.functions._
   * actually unpersists it; (2) drain never touches the session
   * ARTIFACT caches (their reuse across queries is the point); (3) a
   * re-run after drain reproduces identical rows (nothing the query
-  * needs was freed). */
+  * needs was freed). The layout case covers the checkpoint itself:
+  * a serCheckpoint keeps the hash layout it was built with. */
 class CheckpointsDrainSpec extends SparkSpec {
   import spark.implicits._
 
@@ -72,6 +74,50 @@ class CheckpointsDrainSpec extends SparkSpec {
       val b = run(name)
       assert(a == b, s"$name drifted across a drain")
       assert(a.nonEmpty)
+    }
+  }
+
+  test("serCheckpoint keeps the key layout: exchange-free agg and self-join") {
+    import tools.Checkpoints.SerCheckpoint
+    val base = spark.range(200000)
+      .select(($"id" % 997).as("a"), $"id".as("b"))
+    // repartition($"a") lets AQE coalesce, which is declared verbatim
+    // (CoalescedHashPartitioning): enough for an aggregate on the key,
+    // but EnsureRequirements re-shuffles BOTH sides of a join between
+    // two coalesced layouts. An explicit count — the loops' form —
+    // declares a plain HashPartitioning both join sides can reuse.
+    def laidOut(parts: Option[Int]) = parts
+      .fold(base.repartition($"a"))(n => base.repartition(n, $"a"))
+      .sortWithinPartitions($"a")
+    // deferred, so the finally's drain frees every checkpoint
+    def ck(parts: Option[Int]) = (
+      tools.Checkpoints.defer(laidOut(parts).serCheckpoint()),
+      tools.Checkpoints.defer(laidOut(parts).localCheckpoint(true)))
+    def agg(df: DataFrame) = df.groupBy($"a").agg(count(lit(1)).as("n"))
+    def selfJoin(df: DataFrame) =
+      df.join(df.select($"a".as("a2"), $"b".as("b2")), $"a" === $"a2")
+    def plan(df: DataFrame) = df.queryExecution.executedPlan.toString
+    def sig(df: DataFrame): String =
+      df.select(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)").as("h"))
+        .agg(sum($"h").cast("string")).as[String].collect()(0)
+    // a broadcast would hide whether the sides are aligned: force the
+    // join that must shuffle both sides unless the layout is declared
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val (kept, plain) = ck(None)
+      assert(!plan(agg(kept)).contains("Exchange"),
+        s"aggregate on the checkpoint's key re-shuffled:\n${plan(agg(kept))}")
+      assert(sig(agg(kept)) == sig(agg(plain)))
+      val (keptN, plainN) = ck(Some(8))
+      assert(!plan(selfJoin(keptN)).contains("Exchange"),
+        s"self-join on the key re-shuffled a side:\n${plan(selfJoin(keptN))}")
+      assert(plan(selfJoin(plainN)).contains("Exchange"),
+        "the plain checkpoint forgets its layout — else this case is vacuous")
+      assert(sig(selfJoin(keptN)) == sig(selfJoin(plainN)))
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      tools.Checkpoints.drainDeferred(spark)
     }
   }
 }

@@ -22,6 +22,47 @@ class RegistrySpec extends SparkSpec {
       s"unknown/unbenched names: ${Bench.ArtifactBacked diff benched}")
   }
 
+  test("Registry.select: registry order, every unknown name listed") {
+    assert(Registry.select(Seq("q_graph_kcore", "q1_pricing_summary"))
+      .map(_.name) == Seq("q1_pricing_summary", "q_graph_kcore"))
+    val e = intercept[IllegalArgumentException](
+      Registry.select(Seq("q_typo", "q1_pricing_summary", "q_other_typo")))
+    assert(e.getMessage.contains("q_typo") &&
+      e.getMessage.contains("q_other_typo"))
+  }
+
+  private def withTempDir(body: java.nio.file.Path => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("verify_subset")
+    try body(dir)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("Verify.dump subset writes only the named results, the full oracle map") {
+    withTempDir { dir =>
+      val names = Seq("q1_pricing_summary", "q_graph_kcore")
+      Verify.dump(spark, sf("sf0.001"), dir.toString, Some(names))
+      val dirs = dir.toFile.listFiles.filter(_.isDirectory).map(_.getName)
+      assert(dirs.toSet == names.toSet)
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(dir.resolve("oracle_sql.json").toFile)
+      SparkEntry.oracleSql.foreach { case (k, sql) =>
+        assert(json.has(k), s"oracle_sql.json lacks $k")
+        assert(json.get(k).asText == sql, s"$k oracle SQL garbled")
+      }
+    }
+  }
+
+  test("Verify.dump rejects an unknown name before writing anything") {
+    withTempDir { dir =>
+      val out = dir.resolve("out")
+      val e = intercept[IllegalArgumentException](
+        Verify.dump(spark, sf("sf0.001"), out.toString,
+          Some(Seq("q1_pricing_summary", "q_typo"))))
+      assert(e.getMessage.contains("q_typo"))
+      assert(!java.nio.file.Files.exists(out))
+    }
+  }
+
   Registry.all.foreach { q =>
     test(s"${q.name} executes at sf0.001") {
       val df = q.run(spark, sf("sf0.001"))
