@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, TimestampNTZType, TimestampType}
@@ -48,7 +49,10 @@ object Tables {
 
   /** Scale-adaptive EXPLICIT partition count for the layout-declared
     * loop checkpoints (guide §2.2/§2.4): max(session shuffle
-    * partitions, on-disk input bytes / bytesPerPartition). An explicit
+    * partitions, on-disk input bytes / bytesPerPartition). The bytes
+    * are the files directly under each table path, listed through the
+    * path's Hadoop FileSystem, so a `file:` or `hdfs:` URI sizes the
+    * same as a plain local path. An explicit
     * count is required because an AQE-coalescible `repartition(col)`
     * materializes `CoalescedHashPartitioning`, which downstream
     * aggregates can consume but co-partitioned JOINS cannot align to —
@@ -62,10 +66,11 @@ object Tables {
     * advisories). */
   def scaledPartitions(s: SparkSession, d: String, tables: Seq[String],
       bytesPerPartition: Long = 16L << 20): Int = {
+    val conf = s.sparkContext.hadoopConfiguration
     val bytes = tables.map { t =>
-      val f = new java.io.File(s"$d/$t.parquet")
-      if (f.isDirectory) f.listFiles().map(_.length()).sum
-      else if (f.isFile) f.length()
+      val p = new Path(s"$d/$t.parquet")
+      val fs = p.getFileSystem(conf)
+      if (fs.exists(p)) fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
       else 0L
     }.sum
     val base = s.conf.get("spark.sql.shuffle.partitions", "200").toInt

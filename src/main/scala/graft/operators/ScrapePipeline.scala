@@ -31,9 +31,8 @@ import org.apache.spark.sql.functions._
   * them: Spark's ContextCleaner frees their blocks once the returned
   * Datasets are unreachable, and a long-running loop keeps at most
   * the current and the previous cycle. Trulia rows join the same
-  * state machine instead of bypassing it (trulia_scraper.py:140's
-  * unconditional new_listing — reproduced only in
-  * `trulia_bypasses_state = true` mode for fidelity).
+  * state machine instead of bypassing it (trulia_scraper.py:140 sends
+  * every Trulia row as an unconditional new_listing).
   */
 object ScrapePipeline {
 
@@ -48,22 +47,19 @@ object ScrapePipeline {
       zipCodes: Seq[String],
       prevState: Dataset[Listing],
       nowEpoch: Long,
-      writer: Option[GraphWriter] = None,
-      truliaBypassesState: Boolean = false): CycleResult = {
+      writer: Option[GraphWriter] = None): CycleResult = {
     import spark.implicits._
 
     val ureRows = ure.scan(spark, zipCodes)
     val truliaRows = trulia.scan(spark, zipCodes)
       .map(_.copy(source = "TRULIA"))
 
-    val unioned =
-      if (truliaBypassesState) ureRows else ureRows.union(truliaRows)
     // A4: dedup by key before the state probe. TRULIA wins a
     // cross-source conflict (it is scraped after URE in the reference
     // loop, main.py:117-127, so its row is the last write); the
     // remaining columns make the pick deterministic across retries
     // when a source emits the same mls twice.
-    val batch = unioned
+    val batch = ureRows.union(truliaRows)
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy($"mls")
@@ -73,24 +69,12 @@ object ScrapePipeline {
       .localCheckpoint(true)
 
     val events = Cdc.batchEvents(prevState, batch, nowEpoch)
+      .localCheckpoint(true)
 
-    // Trulia fidelity mode: unconditional new_listing, state untouched
-    val allEvents =
-      (if (truliaBypassesState)
-        events.union(truliaRows.map(t => ListingEvent(
-          t.mls, "new_listing", None, t.price, None, None, None, t.source)))
-      else events).localCheckpoint(true)
+    // K1: evented rows only, node props carry the event —
+    // main.py:24-35 → database_ops.py:29-30 (MERGE = idempotent).
+    writer.foreach(GraphSink.writeGraph(batch, events, nowEpoch, _))
 
-    writer.foreach { w =>
-      // K1: evented rows only, node props carry the event —
-      // main.py:24-35 → database_ops.py:29-30 (MERGE = idempotent).
-      // In bypass mode trulia rows skip state but still hit the sink
-      // (trulia_scraper.py:140 sends them unconditionally).
-      val sinkRows =
-        if (truliaBypassesState) batch.union(truliaRows) else batch
-      GraphSink.writeGraph(sinkRows, allEvents, nowEpoch, w)
-    }
-
-    CycleResult(allEvents, batch)
+    CycleResult(events, batch)
   }
 }

@@ -882,10 +882,7 @@ object Cdc {
     }
     val sizes = lab.groupBy($"lab").agg(count(lit(1)).as("community_size"))
     lab.join(sizes, "lab")
-      .select(
-        when($"node" % 2 === 0, concat(lit("c"), expr("node div 2")))
-          .otherwise(concat(lit("s"), expr("(node - 1) div 2")))
-          .as("node"),
+      .select(decodeNode("node").as("node"),
         $"lab".as("community"), $"community_size")
   }
 

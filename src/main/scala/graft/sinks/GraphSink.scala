@@ -17,15 +17,9 @@ import org.apache.spark.sql.functions._
   */
 object GraphSink {
 
-  /** Node frame: listings keyed by mls, labeled by source (the
-    * reference's dynamic node label, database_ops.py:15). */
-  def listingNodes(listings: Dataset[Listing]): DataFrame =
-    listings.toDF()
-      .dropDuplicates("mls")
-      .withColumn("property_details_json", to_json(col("property_details")))
-      .drop("property_details")
-
-  /** Event-enriched node frame — the reference's actual write path:
+  /** Listing node frame: listings keyed by mls, labeled by source (the
+    * reference's dynamic node label, database_ops.py:15) and enriched
+    * with their events — the reference's actual write path:
     * process_listing (main.py:24-35) sends ONLY evented listings
     * (new_listing / price_change), and send_to_neo4j SETs the event's
     * `status` + `additionalText` on the node (database_ops.py:29-30)
@@ -95,19 +89,6 @@ object GraphSink {
         col("broker_name").as("dst_name"),
         col("broker_phone").as("dst_phone"))
       .dropDuplicates()
-
-  /** Write the whole graph: 3 node frames + 3 edge frames. */
-  def writeGraph(listings: Dataset[Listing], writer: GraphWriter): Unit = {
-    val cached = listings.cache()
-    try {
-      writer.writeNodes(listingNodes(cached), "Listing", Seq("mls"))
-      writer.writeNodes(agentNodes(cached), "Agent", Seq("name", "phone"))
-      writer.writeNodes(brokerNodes(cached), "Broker", Seq("name", "phone"))
-      writer.writeEdges(agentOfEdges(cached), "AGENT_OF")
-      writer.writeEdges(brokeredByEdges(cached), "BROKERED_BY")
-      writer.writeEdges(worksForEdges(cached), "WORKS_FOR")
-    } finally cached.unpersist()
-  }
 
   /** Reference-faithful cycle write (K1): only evented listings reach
     * the sink, and listing nodes carry the event props — the dataflow

@@ -20,11 +20,17 @@ class GraphSinkSpec extends SparkSpec {
     Listing.minimal("M3", 300, source = "TRULIA"), // no agent/broker
   ).toDS()
 
+  private val now = 1700000000L // 2023-11-14 22:13:20 UTC
+
+  /** One new_listing event per listed mls (M1, M2, M3). */
+  private def newListings = Seq("M1", "M2", "M3").map(m =>
+    ListingEvent(m, "new_listing", None, 0, None, None, None, "URE")).toDS()
+
   test("node frames dedupe by business key; empty names filtered") {
-    assert(GraphSink.listingNodes(listings).count() == 3) // M1 deduped
+    val ln = GraphSink.eventedListingNodes(listings, newListings, now)
+    assert(ln.count() == 3)                               // M1 deduped
     assert(GraphSink.agentNodes(listings).count() == 1)   // one Jane
     assert(GraphSink.brokerNodes(listings).count() == 1)  // one Acme
-    val ln = GraphSink.listingNodes(listings)
     assert(ln.columns.contains("property_details_json")) // E13 map→json
     assert(!ln.columns.contains("property_details"))
   }
@@ -39,9 +45,9 @@ class GraphSinkSpec extends SparkSpec {
   test("writeGraph: MERGE idempotence — double write, same store") {
     InMemoryGraphWriter.clear()
     val w = new InMemoryGraphWriter
-    GraphSink.writeGraph(listings, w)
+    GraphSink.writeGraph(listings, newListings, now, w)
     val afterFirst = InMemoryGraphWriter.store.size()
-    GraphSink.writeGraph(listings, w)
+    GraphSink.writeGraph(listings, newListings, now, w)
     assert(InMemoryGraphWriter.store.size() == afterFirst)
     assert(InMemoryGraphWriter.keysWithPrefix("Listing|").size == 3)
     assert(InMemoryGraphWriter.keysWithPrefix("Agent|").size == 1)
@@ -49,8 +55,6 @@ class GraphSinkSpec extends SparkSpec {
     assert(InMemoryGraphWriter.keysWithPrefix("AGENT_OF|").nonEmpty)
     assert(InMemoryGraphWriter.keysWithPrefix("WORKS_FOR|").size == 1)
   }
-
-  private val now = 1700000000L // 2023-11-14 22:13:20 UTC
 
   test("evented node frame carries event props (database_ops.py:29-37)") {
     val batch = Seq(
@@ -86,8 +90,8 @@ class GraphSinkSpec extends SparkSpec {
   test("writer option surface routes labels/node.keys vs relationship") {
     InMemoryGraphWriter.clear()
     val w = new InMemoryGraphWriter
-    w.write(GraphSink.listingNodes(listings),
-      Map("labels" -> ":Listing", "node.keys" -> "mls"))
+    val ln = GraphSink.eventedListingNodes(listings, newListings, now)
+    w.write(ln, Map("labels" -> ":Listing", "node.keys" -> "mls"))
     assert(InMemoryGraphWriter.keysWithPrefix("Listing|").size == 3)
     w.write(GraphSink.agentNodes(listings),
       Map("labels" -> ":Agent", "node.keys" -> "name,phone"))
@@ -95,8 +99,11 @@ class GraphSinkSpec extends SparkSpec {
     w.write(GraphSink.agentOfEdges(listings),
       Map("relationship" -> "AGENT_OF"))
     assert(InMemoryGraphWriter.keysWithPrefix("AGENT_OF|").size == 2)
-    intercept[IllegalArgumentException] {
-      w.write(GraphSink.listingNodes(listings), Map.empty)
+    intercept[IllegalArgumentException] { // neither labels nor relationship
+      w.write(ln, Map.empty)
+    }
+    intercept[IllegalArgumentException] { // labels without node.keys
+      w.write(ln, Map("labels" -> ":Listing"))
     }
   }
 

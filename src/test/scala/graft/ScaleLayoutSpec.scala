@@ -553,4 +553,15 @@ class ScaleLayoutSpec extends SparkSpec {
       case None => spark.conf.unset(k)
     })
   }
+
+  test("scaledPartitions sizes a file: URI like the plain path") {
+    val tables = Seq("orders", "lineitem")
+    val floor = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val plain = Tables.scaledPartitions(spark, sf("sf0.001"), tables,
+      bytesPerPartition = 1024)
+    assert(plain > floor, s"$plain partitions: input bytes never counted")
+    val uri = Tables.scaledPartitions(spark, "file:" + sf("sf0.001"), tables,
+      bytesPerPartition = 1024)
+    assert(uri == plain, s"file: URI sized to $uri, plain path to $plain")
+  }
 }
