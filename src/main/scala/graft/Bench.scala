@@ -89,14 +89,7 @@ object Bench {
     def loadAvg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
-    // off by default so the driver-recorded tail stays clean; turn on
-    // to attribute log noise (e.g. DAGScheduler task-binary WARNs) to
-    // the query that was executing when it fired
-    val trace = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRACE", "0") == "1"
-    val teardown = sys.env.getOrElse("SPARK_GRAFT_BENCH_TEARDOWN", "0") == "1"
     def exec(q: GraftQuery): Double = {
-      if (trace) System.err.println(
-        s"[bench-trace] ${java.time.Instant.now()} ${q.name}")
       val t0 = System.nanoTime()
       try {
         q.withConfs(spark) {
@@ -110,15 +103,6 @@ object Bench {
         // generations inflated downstream queries up to 2× (r12).
         // Outside the timed window: release is non-blocking metadata.
         graft.tools.Checkpoints.drainDeferred(spark)
-        // SPARK_GRAFT_BENCH_TEARDOWN=1 (VERDICT r14 #4): full session
-        // teardown between queries — caches, persisted RDDs, SQL
-        // cache — so each in-bench number runs in a solo-equivalent
-        // storage state and the in-bench-vs-solo premium can be
-        // attributed (blockmanager residue vs JVM/GC neighborhood).
-        // Changes what's measured (artifact reuse is gone): recorded
-        // round tables keep the default protocol; the emitted
-        // "protocol" field marks teardown lines unambiguously.
-        if (teardown) SweepCheck.clearSessionArtifacts(spark)
       }
     }
 
@@ -230,11 +214,9 @@ object Bench {
           f""","light_ratio_median":$lightMed%.3f""" +
           s""","box_verdict":"$verdict""""
       }
-    val protocol =
-      s"median_of_$passes${if (teardown) "_teardown" else ""}"
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$medians,""" +
-      s""""protocol":"$protocol","total_min":$totalMin,"queries_min":$mins,""" +
+      s""""protocol":"median_of_$passes","total_min":$totalMin,"queries_min":$mins,""" +
       s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd$attachedFields""" +
       s"""$canonFields,"sf":"$sfDir"}"""
     // file artifact first (VERDICT r9: a WARN-flooded tail left the

@@ -406,10 +406,10 @@ object Cdc {
     * and incremental queries so "refresh" can never mean "a slightly
     * different pagerank". */
   private[graft] def pagerankOver(s: org.apache.spark.sql.SparkSession,
-      e0: DataFrame, parts: Int = -1): DataFrame = {
+      e0: DataFrame, parts: Int): DataFrame = {
     import s.implicits._
-    // EXPLICIT count (the kcoreOver rationale): the edge table is
-    // probed by an a-keyed JOIN every round, and plain
+    // EXPLICIT count: the edge table is probed by an a-keyed JOIN
+    // every round, and plain
     // HashPartitioning(a, n) is the only declarable layout a join can
     // align to — the AQE-coalescible repartition materializes
     // CoalescedHashPartitioning, which no later hash layout can match,
@@ -418,8 +418,6 @@ object Cdc {
     // q_graph_pagerank_before.txt: Exchange+Sort over every
     // UnknownPartitioning edges scan). Input-scaled, never a local
     // constant (Tables.scaledPartitions).
-    val n = if (parts > 0) parts
-      else s.conf.get("spark.sql.shuffle.partitions", "200").toInt
     // partitioned AND sorted on the probe key pre-checkpoint
     // (localCheckpoint's LogicalRDD keeps outputPartitioning and
     // outputOrdering): the degree aggregate reads the edge list
@@ -447,7 +445,7 @@ object Cdc {
         // accepts raw OR already-distinct input — dropDuplicates is
         // idempotent, and the even/odd id encoding keeps the doubled
         // halves disjoint, so dedup-after-doubling == doubling-after-dedup
-        .repartition(n, $"a").dropDuplicates().sortWithinPartitions($"a")
+        .repartition(parts, $"a").dropDuplicates().sortWithinPartitions($"a")
         .deserCheckpoint())
     val deg = graft.tools.Checkpoints.defer(
       edges0.groupBy($"a").agg(count(lit(1)).as("deg"))
@@ -771,17 +769,15 @@ object Cdc {
     * list (doubled to undirected here) — shared verbatim by the batch
     * and incremental queries, the [[pagerankOver]] discipline. */
   private[graft] def lpaOver(s: org.apache.spark.sql.SparkSession,
-      e0: DataFrame, parts: Int = -1): DataFrame = {
+      e0: DataFrame, parts: Int): DataFrame = {
     import s.implicits._
-    // EXPLICIT count, the pagerankOver/kcoreOver rationale: a plain
+    // EXPLICIT count, the pagerankOver rationale: a plain
     // HashPartitioning(b, n) is the only declarable layout the
     // per-round gather JOIN can align to — the coalescible
     // repartition's CoalescedHashPartitioning forced EnsureRequirements
     // to re-shuffle AND re-sort the E-scale edge checkpoint into every
     // round's SMJ. Input-scaled (Tables.scaledPartitions), never a
     // local constant.
-    val n = if (parts > 0) parts
-      else s.conf.get("spark.sql.shuffle.partitions", "200").toInt
     // partitioned AND sorted ON THE PROBE KEY before the checkpoint:
     // LogicalRDD preserves outputPartitioning and outputOrdering, so
     // every round's neighbor-gather SMJ reads the corpus-scale edge
@@ -796,7 +792,7 @@ object Cdc {
     // for the loop's whole life
     val edges = graft.tools.Checkpoints.defer(e0
       .union(e0.select($"b".as("a"), $"a".as("b"), $"w"))
-      .repartition(n, $"b").sortWithinPartitions($"b")
+      .repartition(parts, $"b").sortWithinPartitions($"b")
       .serCheckpoint())
     // selfW is JOINED per round (fromSelf), so it needs the same
     // declarable plain layout: the a-keyed aggregate's own exchange
@@ -805,7 +801,7 @@ object Cdc {
     // at build, saving the per-round re-shuffle of both join sides.
     val selfW = graft.tools.Checkpoints.defer(
       edges.groupBy($"a").agg(max($"w").as("sw"), count(lit(1)).as("dg"))
-        .repartition(n, $"a").sortWithinPartitions($"a")
+        .repartition(parts, $"a").sortWithinPartitions($"a")
         .serCheckpoint())
     // Degree-cap gate (round 16, VERDICT r15 #2): the single raw
     // node-keyed gather concentrates a hot node's ENTIRE vote stream
@@ -822,7 +818,7 @@ object Cdc {
     // way (PagerankSpec's degree-cap gate case checks the parity).
     val degStats = selfW.agg(sum($"dg"), max($"dg")).first
     val hotGather = !degStats.isNullAt(1) &&
-      degStats.getLong(1) > 4L * math.max(1L, degStats.getLong(0) / n)
+      degStats.getLong(1) > 4L * math.max(1L, degStats.getLong(0) / parts)
     var lab = selfW.select($"a".as("node"), $"a".as("lab"))
     var prevLab: Option[DataFrame] = None
     for (_ <- 1 to 3) {
@@ -841,12 +837,12 @@ object Cdc {
           // partition ever holds more than its hash share; one final
           // V-scale re-key restores the loop layout.
           votes
-            .repartition(n, $"node", $"lab")
+            .repartition(parts, $"node", $"lab")
             .groupBy($"node", $"lab").agg(sum($"w").as("wt"))
             .groupBy($"node")
             .agg(ArgMax2.of($"wt", -$"lab").as("m"))
             .select($"node", (-$"m.tie").as("lab"))
-            .repartition(n, $"node")
+            .repartition(parts, $"node")
         else votes
           // ONE node-keyed shuffle serves BOTH aggregate levels
           // (hashpartitioning(node) clusters (node, lab) too), where the
@@ -860,7 +856,7 @@ object Cdc {
           // output then declares plain HashPartitioning(node, n), so the
           // NEXT round's two joins (edges gather + self-vote) read this
           // round's checkpoint with no exchange on either side.
-          .repartition(n, $"node")
+          .repartition(parts, $"node")
           .groupBy($"node", $"lab").agg(sum($"w").as("wt"))
           .groupBy($"node")
           .agg(ArgMax2.of($"wt", -$"lab").as("m"))
@@ -983,13 +979,16 @@ object Cdc {
     Some(communitiesOracle),
     confs = LpaAdvisory)
 
-  /** Bounded-round k-core peel shared by the registry query and
-    * KcoreSpec's constructed-cascade fixture. Input is a
+  /** The one k-core peel, shared by both registry queries (3 peels
+    * toward the 10-core, and the 60-core run to its fixpoint) and
+    * KcoreSpec's constructed-cascade fixtures. Input is a
     * directed-distinct edge list (a, b); each round peels every node
     * whose residual degree fell below k (recording the round and the
     * degree it held when peeled) and drops its edges — so a removal
     * can cascade into the next round. Survivors report round 0 with
-    * their residual degree.
+    * their residual degree. Hitting the `maxRounds` cap does not
+    * throw: the unpeeled nodes report round 0 the same way, and
+    * max(peel_round) is the number of rounds used.
     *
     * Degrees are maintained FRONTIER-DELTA, not recomputed: the full
     * degree aggregate runs exactly once, and each round subtracts the
@@ -1007,7 +1006,7 @@ object Cdc {
     * condition reads only `deg`, and a round that peels nothing
     * changes neither `deg` nor `edges`, so every later round peels
     * nothing too — identical output, and the bounded-round contract
-    * ("peel at most `rounds` times") is unchanged. This is where the
+    * ("peel at most `maxRounds` times") is unchanged. This is where the
     * sf10 time actually went: at k=10 the cascade settles after one
     * small peel (8,100 of 1.6M nodes, rounds 2–3 empty), yet each
     * no-op round still paid two edge-scale anti-join scans AND a full
@@ -1017,38 +1016,31 @@ object Cdc {
     * aggregate was exchange-free all along; see the `lost` join note
     * for the shuffle-direction lesson.) */
   private[graft] def kcoreOver(s: org.apache.spark.sql.SparkSession,
-      e0: DataFrame, k: Int, rounds: Int, parts: Int = -1): DataFrame = {
+      e0: DataFrame, k: Int, maxRounds: Int, parts: Int): DataFrame = {
     import s.implicits._
-    // EXPLICIT count (unlike the sibling loops): the immutable edge
+    // EXPLICIT count (the pagerankOver rationale): the immutable edge
     // list is probed by an a-keyed join every round, and a plain
-    // HashPartitioning(a, n) is the only declarable layout a JOIN can
-    // align to (an AQE-coalescible repartition materializes
-    // CoalescedHashPartitioning, which only aggregates can consume).
-    // This loop never rewrites edges and its per-round sides are
-    // frontier-sized, so it gives up nothing to AQE's runtime
-    // broadcast conversion — measured round 15 at sf0.1: −16% with
-    // the explicit count, where the rewriting fixpoint loop (which
-    // NEEDS those conversions) measured +48% and keeps the
-    // coalescible form.
-    val n = if (parts > 0) parts
-      else s.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    // HashPartitioning(a, parts) is the only declarable layout a JOIN
+    // can align to. The 60-core run to the fixpoint is no exception:
+    // on a 4-core box at sf0.01 it built in 25 Spark jobs here vs 38
+    // on a loop that rewrote the edge list each round, at an equal
+    // step time (2.81 vs 2.90 s, median of 6 benchmark pairs).
+    //
     // The edge list is IMMUTABLE here: checkpointed once (partitioned
     // and sorted by `a`) and never rewritten. Maintaining the shrunken
     // subgraph per round — two edge-scale anti-join scans plus a full
     // edge re-checkpoint — was the dominant round cost at sf10, and
-    // the bounded-round peel never reads survivors' edges again (the
-    // survivors' residual degree lives in `deg`). Each edge is instead
+    // the peel never reads survivors' edges again (the survivors'
+    // residual degree lives in `deg`). Each edge is instead
     // subtracted from `deg` exactly once: in the round its first
     // endpoint is peeled. Rows the probe produces for NON-survivors
     // (the other endpoint peeled earlier or in the same round) drop
     // out of the degree update by construction, because the update
     // joins FROM the surviving slice of `deg` — no cumulative
-    // anti-join bookkeeping needed. (The fixpoint variant below keeps
-    // the shrinking-edges design: at k=60 round 1 peels ~87% of the
-    // graph, so its rounds 2+ want the collapsed list.)
+    // anti-join bookkeeping needed.
     val edges = e0.union(e0.select($"b".as("a"), $"a".as("b")))
       // dedup rides the layout exchange — see pagerankOver
-      .repartition(n, $"a").dropDuplicates().sortWithinPartitions($"a")
+      .repartition(parts, $"a").dropDuplicates().sortWithinPartitions($"a")
       .serCheckpoint()
     // the ONLY full-graph degree aggregate (exchange-free over the
     // pre-partitioned list); rounds maintain it by delta. The final
@@ -1063,7 +1055,7 @@ object Cdc {
       .toDF("node", "peel_round", "deg")
     var r = 1
     var settled = false
-    while (!settled && r <= rounds) {
+    while (!settled && r <= maxRounds) {
       // checkpoint the (small) peeled slice so `out` reads round-sized
       // blocks and the delta join probes a materialized table
       val peeled = graft.tools.Checkpoints.defer(
@@ -1071,7 +1063,7 @@ object Cdc {
           .select($"a".as("node"), lit(r).as("peel_round"), $"dg".as("deg"))
           .serCheckpoint())
       if (peeled.isEmpty) {
-        // fixpoint: `deg` is untouched, so rounds r+1..rounds would
+        // fixpoint: `deg` is untouched, so rounds r+1..maxRounds would
         // all peel nothing — stop paying for them (measured: at sf10
         // k=10 settles after one 8,100-node peel; rounds 2–3 were
         // pure no-op cost)
@@ -1126,145 +1118,64 @@ object Cdc {
     * rounds, each recorded, so a node's row says either the round it
     * fell (1–3, with the degree it held) or 0 = still in the
     * residual core with its remaining degree. Each extra round is one
-    * more (aggregate + two semi-joins); the round count is a dial,
+    * more (delta count + degree update); the round count is a dial,
     * not a structural limit.
     *
     * Scale shape: ONE full-graph degree hash-aggregate total (over
     * the pre-partitioned edge list, exchange-free); each round then
     * costs only frontier-sized work — a delta count of edges into the
-    * peeled set plus two left-anti joins against it (AQE broadcasts
-    * the round-sized side once the cascade settles), every
+    * peeled set and a survivors-only degree update, every
     * intermediate checkpointed exactly like the pagerank/LPA rounds;
     * nothing is collected, and the oracle unrolls the identical three
     * per-round-recompute rounds so the hash gate proves the delta
     * maintenance equals recomputation cascade step for step. */
   val qGraphKcore = GraftQuery(
     "q_graph_kcore",
-    (s, d) => kcoreOver(s, tradeEdgesRaw(s, d, lit(true)), k = 10, rounds = 3,
+    (s, d) => kcoreOver(s, tradeEdgesRaw(s, d, lit(true)), k = 10,
+      maxRounds = 3,
       parts = Tables.scaledPartitions(s, d, Seq("orders", "lineitem"))),
-    Some {
-      // Every round CTE is MATERIALIZED: DuckDB inlines CTEs by
-      // default, and each u_r is referenced by both d_r and u_{r+1} —
-      // the chained rounds would replay exponentially (the
-      // communitiesOracle lesson; at sf1 the inlined form spilled
-      // past 80 GB of temp before failing).
-      val peel = (r: Int) => s"""
-        p$r AS MATERIALIZED (SELECT a, dg FROM d$r WHERE dg < 10),
-        a$r AS MATERIALIZED (SELECT a FROM d$r WHERE dg >= 10),
-        u${r + 1} AS MATERIALIZED (
-          SELECT u.a, u.b FROM u$r u
-          JOIN a$r x ON u.a = x.a JOIN a$r y ON u.b = y.a),
-        d${r + 1} AS MATERIALIZED (
-          SELECT a$r.a, CAST(COALESCE(cnt, 0) AS BIGINT) AS dg
-          FROM a$r LEFT JOIN (
-            SELECT a, COUNT(*) AS cnt FROM u${r + 1} GROUP BY 1) c
-          USING (a))"""
-      s"""
-      WITH e0 AS MATERIALIZED (
-        SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS a,
-                        's' || CAST(l_suppkey AS VARCHAR) AS b
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-      u1 AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
-      n1 AS MATERIALIZED (SELECT DISTINCT a FROM u1),
-      d1 AS MATERIALIZED (
-        SELECT n1.a, CAST(COALESCE(cnt, 0) AS BIGINT) AS dg
-        FROM n1 LEFT JOIN (
-          SELECT a, COUNT(*) AS cnt FROM u1 GROUP BY 1) c USING (a)),
-      ${peel(1)}, ${peel(2)}, ${peel(3)}
-      SELECT a AS node, CAST(1 AS INT) AS peel_round, dg AS deg FROM p1
-      UNION ALL
-      SELECT a, CAST(2 AS INT), dg FROM p2
-      UNION ALL
-      SELECT a, CAST(3 AS INT), dg FROM p3
-      UNION ALL
-      SELECT a, CAST(0 AS INT), dg FROM d4"""
-    },
+    Some(kcoreOracle(k = 10, rounds = 3)),
     bench = true)
 
-  /** Run-to-fixpoint k-core peel — same round body as [[kcoreOver]],
-    * but the loop stops when a round peels NOTHING (true degeneracy
-    * answer: "the k-core", not "n peels toward it") with a hard
-    * `maxRounds` guard so a pathological cascade cannot run away.
-    * The per-round emptiness probe is one `isEmpty` on the already-
-    * localCheckpoint'd degree table — the same 1-row-scalar driver
-    * action budget as a BPE merge round, NOT a data collect. The
-    * convergence report rides in the output itself: rounds used =
-    * max(peel_round); if the guard fires, the result equals the
-    * bounded `maxRounds`-peel and survivors still report round 0
-    * with their residual degree. */
-  private[graft] def kcoreFixpointOver(s: org.apache.spark.sql.SparkSession,
-      e0: DataFrame, k: Int, maxRounds: Int): DataFrame = {
-    import s.implicits._
-    // same probe-key pre-partitioning + pre-sort and the same
-    // frontier-delta degree maintenance as kcoreOver (one full-graph
-    // aggregate total; each round subtracts edge losses into the
-    // round-sized peeled set — see kcoreOver for the exactness
-    // proof). UNLIKE kcoreOver, the edge list IS rewritten per round:
-    // at k=60 the first peel removes ~87% of the graph, so rounds 2+
-    // read a collapsed list — worth the one-time round-1 anti-join +
-    // re-checkpoint that kcoreOver's settled-cascade regime never
-    // recoups.
-    // per-run scratch, deferred like kcoreOver's: the final edges/deg
-    // and every peeled slice survive to the output's lineage, so the
-    // runner's post-materialization drain frees them
-    var edges = graft.tools.Checkpoints.defer(
-      e0.union(e0.select($"b".as("a"), $"a".as("b")))
-        // dedup rides the layout exchange — see pagerankOver
-        .repartition($"a").dropDuplicates().sortWithinPartitions($"a")
-        .serCheckpoint())
-    var deg = graft.tools.Checkpoints.defer(
-      edges.groupBy($"a").agg(count(lit(1)).as("dg"))
-        .serCheckpoint())
-    // long-encoded ids through the whole peel; decoded once at output
-    var out: DataFrame = Seq.empty[(Long, Int, Long)]
-      .toDF("node", "peel_round", "deg")
-    var r = 1
-    var converged = false
-    while (!converged && r <= maxRounds) {
-      // materialized round-sized slice: the emptiness probe reads
-      // blocks, `out` keeps only peeled rows
-      val peeled = graft.tools.Checkpoints.defer(
-        deg.filter($"dg" < k)
-          .select($"a".as("node"), lit(r).as("peel_round"), $"dg".as("deg"))
-          .serCheckpoint())
-      if (peeled.isEmpty) {
-        converged = true
-        graft.tools.Checkpoints.release(peeled)
-      } else {
-        out = out.unionByName(peeled)
-        // round-sized anti joins, AQE-broadcast once the cascade
-        // settles — see kcoreOver for the equivalence argument
-        val edgesNext = graft.tools.Checkpoints.defer(edges
-          .join(peeled.select($"node".as("b")), Seq("b"), "left_anti")
-          .join(peeled.select($"node".as("a")), Seq("a"), "left_anti")
-          .serCheckpoint())
-        // degrees RECOMPUTED from the collapsed list (the pre-r12
-        // form), not frontier-delta like kcoreOver: this loop already
-        // pays the edge rewrite, the collapsed checkpoint is a-keyed
-        // so the aggregate is exchange-free, and the r12 delta graft
-        // (a b-keyed lost probe + a deg-join per round) measured
-        // 5.95s vs 5.20s solo at sf0.1 AGAINST this form — the delta
-        // only wins in kcoreOver's immutable-edge regime, where it
-        // replaces the rewrite instead of riding on top of it. The
-        // survivor left-join keeps zero-degree survivors visible
-        // (they must peel next round, the oracle's d_{r+1} shape).
-        val degNext = graft.tools.Checkpoints.defer(
-          deg.filter($"dg" >= k).select($"a")
-            .join(edgesNext.groupBy($"a").agg(count(lit(1)).as("cnt")),
-              Seq("a"), "left")
-            .select($"a", coalesce($"cnt", lit(0L)).as("dg"))
-            .serCheckpoint())
-        graft.tools.Checkpoints.release(deg)
-        graft.tools.Checkpoints.release(edges)
-        deg = degNext
-        edges = edgesNext
-        r += 1
-      }
-    }
-    // deg IS the survivors' residual degree table — no final aggregate
-    out.unionByName(
-        deg.select($"a".as("node"), lit(0).as("peel_round"), $"dg".as("deg")))
-      .select(decodeNode("node").as("node"), $"peel_round", $"deg")
+  /** DuckDB oracle for both k-core queries: `rounds` unrolled
+    * per-round-recompute peels at threshold `k`, peeled rows with
+    * their round and degree, survivors as round 0. */
+  private def kcoreOracle(k: Int, rounds: Int): String = {
+    // Every round CTE is MATERIALIZED: DuckDB inlines CTEs by
+    // default, and each u_r is referenced by both d_r and u_{r+1} —
+    // the chained rounds would replay exponentially (the
+    // communitiesOracle lesson; at sf1 the inlined form spilled
+    // past 80 GB of temp before failing).
+    val peel = (r: Int) => s"""
+      p$r AS MATERIALIZED (SELECT a, dg FROM d$r WHERE dg < $k),
+      a$r AS MATERIALIZED (SELECT a FROM d$r WHERE dg >= $k),
+      u${r + 1} AS MATERIALIZED (
+        SELECT u.a, u.b FROM u$r u
+        JOIN a$r x ON u.a = x.a JOIN a$r y ON u.b = y.a),
+      d${r + 1} AS MATERIALIZED (
+        SELECT a$r.a, CAST(COALESCE(cnt, 0) AS BIGINT) AS dg
+        FROM a$r LEFT JOIN (
+          SELECT a, COUNT(*) AS cnt FROM u${r + 1} GROUP BY 1) c
+        USING (a))"""
+    val peelSelects = (1 to rounds).map(r =>
+      s"SELECT a, CAST($r AS INT), dg FROM p$r")
+    s"""
+    WITH e0 AS MATERIALIZED (
+      SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS a,
+                      's' || CAST(l_suppkey AS VARCHAR) AS b
+      FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+    u1 AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+    n1 AS MATERIALIZED (SELECT DISTINCT a FROM u1),
+    d1 AS MATERIALIZED (
+      SELECT n1.a, CAST(COALESCE(cnt, 0) AS BIGINT) AS dg
+      FROM n1 LEFT JOIN (
+        SELECT a, COUNT(*) AS cnt FROM u1 GROUP BY 1) c USING (a)),
+    ${(1 to rounds).map(peel).mkString(", ")}
+    SELECT node, peel_round, deg FROM (
+      ${peelSelects.mkString("\n      UNION ALL\n      ")}
+      UNION ALL
+      SELECT a, CAST(0 AS INT), dg FROM d${rounds + 1}
+    ) t(node, peel_round, deg)"""
   }
 
   /** Full (fixpoint) k-core decomposition on the trade graph — the
@@ -1272,9 +1183,11 @@ object Cdc {
     * "3 peels toward the 10-core". k = 60 because that is where this
     * graph actually cascades (measured: 3 peel rounds at sf0.01, 6 at
     * sf0.1 — k = 10 converges after a single peel, which would make
-    * the fixpoint loop indistinguishable from the bounded one);
+    * the fixpoint run indistinguishable from the bounded one);
     * maxRounds = 24 is the runaway guard, 4× the deepest observed
-    * cascade.
+    * cascade. It runs the same [[kcoreOver]] peel as [[qGraphKcore]]:
+    * the loop stops on the first empty peel, so "run to the fixpoint"
+    * is only a larger `maxRounds`.
     *
     * Oracle: the bounded-peel formulation can NOT express "repeat
     * until no peels" in static SQL, so the oracle unrolls 16
@@ -1286,42 +1199,11 @@ object Cdc {
     * than silently passing — the bound is self-auditing. */
   val qGraphKcoreFull = GraftQuery(
     "q_graph_kcore_full",
-    (s, d) => kcoreFixpointOver(s, tradeEdgesRaw(s, d, lit(true)),
-      k = 60, maxRounds = 24),
-    Some {
-      val peel = (r: Int) => s"""
-        p$r AS MATERIALIZED (SELECT a, dg FROM d$r WHERE dg < 60),
-        a$r AS MATERIALIZED (SELECT a FROM d$r WHERE dg >= 60),
-        u${r + 1} AS MATERIALIZED (
-          SELECT u.a, u.b FROM u$r u
-          JOIN a$r x ON u.a = x.a JOIN a$r y ON u.b = y.a),
-        d${r + 1} AS MATERIALIZED (
-          SELECT a$r.a, CAST(COALESCE(cnt, 0) AS BIGINT) AS dg
-          FROM a$r LEFT JOIN (
-            SELECT a, COUNT(*) AS cnt FROM u${r + 1} GROUP BY 1) c
-          USING (a))"""
-      val rounds = 16
-      val peelSelects = (1 to rounds).map(r =>
-        s"SELECT a, CAST($r AS INT), dg FROM p$r")
-      s"""
-      WITH e0 AS MATERIALIZED (
-        SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS a,
-                        's' || CAST(l_suppkey AS VARCHAR) AS b
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-      u1 AS MATERIALIZED (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
-      n1 AS MATERIALIZED (SELECT DISTINCT a FROM u1),
-      d1 AS MATERIALIZED (
-        SELECT n1.a, CAST(COALESCE(cnt, 0) AS BIGINT) AS dg
-        FROM n1 LEFT JOIN (
-          SELECT a, COUNT(*) AS cnt FROM u1 GROUP BY 1) c USING (a)),
-      ${(1 to rounds).map(peel).mkString(", ")}
-      SELECT node, peel_round, deg FROM (
-        ${peelSelects.mkString("\n        UNION ALL\n        ")}
-        UNION ALL
-        SELECT a, CAST(0 AS INT), dg FROM d${rounds + 1}
-      ) t(node, peel_round, deg)"""
-    },
-    // bench-flagged round 10 (VERDICT r9 #7): the fixpoint variant's
+    (s, d) => kcoreOver(s, tradeEdgesRaw(s, d, lit(true)), k = 60,
+      maxRounds = 24,
+      parts = Tables.scaledPartitions(s, d, Seq("orders", "lineitem"))),
+    Some(kcoreOracle(k = 60, rounds = 16)),
+    // bench-flagged round 10 (VERDICT r9 #7): the fixpoint run's
     // convergence-dependent cost (5s-class in-sweep) was top-5
     // territory with no recorded baseline — the 2x gate now covers it
     bench = true)

@@ -312,6 +312,8 @@ object Dedup {
       labels = next.select(col("node"), col("label"))
       rounds += 1
     }
+    // the labels are their own checkpoint: nothing reads the edges now
+    graft.tools.Checkpoints.release(edges)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents: not converged after $maxRounds rounds " +

@@ -77,6 +77,20 @@ class CheckpointsDrainSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents releases its edge checkpoint, keeps only the labels") {
+    // a 4-node chain: min-label propagation needs 3 changing rounds
+    // plus the round that detects convergence
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("doc_a", "doc_b")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val labels = queries.Dedup.connectedComponents(pairs)
+    val grown = spark.sparkContext.getPersistentRDDs.size - before
+    try {
+      assert(grown == 1, s"expected only the label checkpoint to stay, got +$grown")
+      assert(labels.as[(Long, Long)].collect().toSet ==
+        Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    } finally tools.Checkpoints.release(labels)
+  }
+
   test("serCheckpoint keeps the key layout: exchange-free agg and self-join") {
     import tools.Checkpoints.SerCheckpoint
     val base = spark.range(200000)

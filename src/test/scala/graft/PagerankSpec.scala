@@ -51,7 +51,8 @@ class PagerankSpec extends SparkSpec {
       val delta = queries.Cdc.tradeEdges(spark, d,
         $"o_orderdate" >= lit(split).cast("date"))
       val inc = queries.Cdc.pagerankOver(spark,
-          base.unionByName(delta).distinct())
+          base.unionByName(delta).distinct(),
+          parts = Tables.scaledPartitions(spark, d, Seq("orders", "lineitem")))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(inc == batch, s"split $split drifted from the batch ranks")
     }
@@ -135,7 +136,8 @@ class PagerankSpec extends SparkSpec {
         $"o_orderdate" >= lit(split).cast("date"))
       val merged = base.unionByName(delta)
         .groupBy($"a", $"b").agg(sum($"w").as("w"))
-      val inc = queries.Cdc.lpaOver(spark, merged)
+      val inc = queries.Cdc.lpaOver(spark, merged,
+          parts = Tables.scaledPartitions(spark, d, Seq("orders", "lineitem")))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       assert(inc == batch, s"split $split drifted from the batch communities")
     }
