@@ -770,14 +770,15 @@ object Similarity {
     val ejAll = ejs.zipWithIndex.map { case (ej, j) =>
       ej.select(lit(j).as("j"), col("vec_id"), col("q"), col("qn"))
     }.reduce(_ unionByName _)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fKm = Future(recenterRound(e,
-      bestCellExpr(col("q"), col("qn"), cent, guarded = false), cent, 64))
-    val fPq = Future(pqRecenterBatch(ejAll, books))
-    cent = Await.result(fKm, Duration.Inf)
-    books = Await.result(fPq, Duration.Inf)
+    // a thread created by this call inherits the caller's Spark local
+    // properties (job group, pool); a pooled thread keeps stale ones
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val km = pool.submit(() => recenterRound(e,
+        bestCellExpr(col("q"), col("qn"), cent, guarded = false), cent, 64))
+      books = pqRecenterBatch(ejAll, books)
+      cent = km.get()
+    } finally pool.shutdown()
     cent = recenterRound(e,
       bestCellExpr(col("q"), col("qn"), cent, guarded = false), cent, 64)
     (cent, books)

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.queries.Dedup
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Artifact materializer — the production form of the session caches.
@@ -15,9 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * next drop. This job
   * writes them as bucketed parquet tables — bucketed by `doc_id` via
   * [[BucketLayout]], so the id-keyed verify/keep-list joins read
-  * co-located buckets — plus a manifest recording the source dataset
-  * and bucket counts, and teaches the consumers (via [[attach]]) to
-  * read the persisted form instead of re-deriving.
+  * co-located buckets — plus a manifest recording the source dataset,
+  * its fingerprint and each artifact's bucket count and version, and
+  * teaches the consumers (via [[attach]]) to read the persisted form
+  * instead of re-deriving. Every file goes through the path's Hadoop
+  * FileSystem, so `srcDir` and `outDir` may be any Hadoop path.
   *
   * Lifecycle: `materialize(spark, srcDir, outDir)` derives and writes;
   * `attach(spark, outDir)` re-registers the external bucketed tables
@@ -84,24 +87,19 @@ object Artifacts {
 
   private def tableName(name: String) = s"graft_art_$name"
 
-  private def manifestPath(outDir: String) =
-    java.nio.file.Paths.get(outDir, "_graft_manifest.json")
-
-  def manifestExists(outDir: String): Boolean =
-    java.nio.file.Files.exists(manifestPath(outDir))
+  private def manifestPath(outDir: String) = s"$outDir/_graft_manifest.json"
 
   /** Derive all artifacts for `srcDir` and write them bucketed
     * under `outDir`. Returns (name, rows, buckets) per artifact.
     *
     * Reader-atomic re-materialization (round 9): each artifact's
     * files land under a [[Versioned]] version directory
-    * (`outDir/<name>/v<N>`), and `attach` resolves the live version
-    * pointer — so re-materializing a corpus drop into the SAME dir
-    * while another session is attached can never show that reader a
-    * partial file set: it keeps reading its resolved version (which
-    * survives one publish cycle) and re-attaches to the new one on
-    * its own schedule. The manifest is promoted by atomic
-    * temp-file move for the same reason. */
+    * (`outDir/<name>/v<N>`), and `attach` binds the versions the
+    * manifest records — so re-materializing a corpus drop into the
+    * SAME dir while another session is attached can never show that
+    * reader a partial file set: it keeps reading its resolved version
+    * (which survives one publish cycle) and re-attaches to the new one
+    * on its own schedule. */
   def materialize(spark: SparkSession, srcDir: String, outDir: String,
       targetBucketBytes: Long = 32L << 20): Seq[(String, Long, Int)] = {
     val written = derivers.map { case (name, key, derive) =>
@@ -116,102 +114,84 @@ object Artifacts {
       val rows = df.count()
       val bytes = rows * math.max(1, df.schema.defaultSize)
       val n = BucketLayout.bucketsFor(bytes, targetBucketBytes)
-      spark.sql(s"DROP TABLE IF EXISTS ${tableName(name)}")
       val version = Versioned.publish(spark, s"$outDir/$name") { target =>
-        BucketLayout.writeBucketed(df, tableName(name), key, n,
-          Some(target))
+        BucketLayout.writeBucketedAt(df, key, n, target)
       } { target =>
         val got = spark.read.parquet(target).count()
         if (got != rows) throw new IllegalStateException(
           s"artifact $name wrote $got rows, expected $rows — aborting " +
             "before the pointer flip; the prior version stays live")
       }
-      // the write registered a catalog table at the staging path the
-      // publish just renamed away; drop it — attach() is the only
-      // sanctioned registration and re-declares the live location
-      spark.sql(s"DROP TABLE IF EXISTS ${tableName(name)}")
       (name, rows, n, version)
     }
-    // The manifest is the SINGLE atomic snapshot (ADVICE r9): it
-    // records each artifact's exact version dir AND bucket count
-    // together, so attach() resolving everything from ONE manifest
-    // read can never bind a mixed old/new artifact set or declare a
-    // bucket spec from a different generation than the files it
-    // points at. The per-artifact pointer files remain for direct
-    // Versioned readers but attach no longer consults them.
-    val fp = sourceFingerprint(srcDir)
-    val manifest = written.map { case (n, _, b, v) =>
-      s""""$n":{"buckets":$b,"version":$v}"""
-    }.mkString(
-      s"""{"source":"$srcDir","source_fingerprint":"$fp","artifacts":{""",
-      ",", "}}")
-    java.nio.file.Files.createDirectories(manifestPath(outDir).getParent)
-    val tmp = manifestPath(outDir).resolveSibling(
-      s".manifest_tmp_${java.util.UUID.randomUUID}")
-    java.nio.file.Files.write(tmp, manifest.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, manifestPath(outDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    writeManifest(spark, srcDir, outDir,
+      written.map { case (n, _, b, v) => (n, b, v) })
     written.map { case (n, r, b, _) => (n, r, b) }
   }
 
+  /** Write `outDir`'s manifest for artifacts derived from `srcDir`:
+    * `(name, buckets, version)` per artifact. The manifest is the
+    * SINGLE atomic snapshot (ADVICE r9): it records each artifact's
+    * exact version dir AND bucket count together, so attach()
+    * resolving everything from ONE manifest read can never bind a
+    * mixed old/new artifact set or declare a bucket spec from a
+    * different generation than the files it points at. It is replaced
+    * through [[Versioned.writeFile]], so a reader never sees it torn. */
+  private[tools] def writeManifest(spark: SparkSession, srcDir: String,
+      outDir: String, entries: Seq[(String, Int, Int)]): Unit = {
+    val fp = sourceFingerprint(spark, srcDir)
+    Versioned.writeFile(spark, manifestPath(outDir), entries.map {
+      case (n, b, v) => s""""$n":{"buckets":$b,"version":$v}"""
+    }.mkString(
+      s"""{"source":"$srcDir","source_fingerprint":"$fp","artifacts":{""",
+      ",", "}}"))
+  }
+
   /** Content identity of a source dataset dir: file count + total
-    * bytes + max mtime over its parquet files. A corpus REGENERATED
-    * at the same path (same `source` string) changes this, which is
-    * what lets [[ensureFor]] catch a stale artifact set the
-    * source-path guard alone cannot see. */
-  def sourceFingerprint(srcDir: String): String = {
-    val root = java.nio.file.Paths.get(srcDir)
-    if (!java.nio.file.Files.isDirectory(root)) return "absent"
-    val s = java.nio.file.Files.walk(root)
-    try {
-      var count = 0L; var bytes = 0L; var maxM = 0L
-      s.forEach { p =>
-        val n = p.getFileName.toString
-        if (java.nio.file.Files.isRegularFile(p) &&
-            (n.endsWith(".parquet") || n == "_SUCCESS")) {
-          count += 1
-          bytes += java.nio.file.Files.size(p)
-          maxM = math.max(maxM,
-            java.nio.file.Files.getLastModifiedTime(p).toMillis)
-        }
+    * bytes + max mtime over its parquet files, listed through the
+    * path's Hadoop FileSystem. A corpus REGENERATED at the same path
+    * (same `source` string) changes this, which is what lets
+    * [[ensureFor]] catch a stale artifact set the source-path guard
+    * alone cannot see. */
+  def sourceFingerprint(spark: SparkSession, srcDir: String): String = {
+    val root = new Path(srcDir)
+    val fs = Versioned.fsOf(spark, root)
+    if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory)
+      return "absent"
+    var count = 0L; var bytes = 0L; var maxM = 0L
+    val it = fs.listFiles(root, true)
+    while (it.hasNext) {
+      val st = it.next()
+      val n = st.getPath.getName
+      if (n.endsWith(".parquet") || n == "_SUCCESS") {
+        count += 1
+        bytes += st.getLen
+        maxM = math.max(maxM, st.getModificationTime)
       }
-      s"$count-$bytes-$maxM"
-    } finally s.close()
+    }
+    s"$count-$bytes-$maxM"
   }
 
   private[graft] final case class Manifest(source: String, fingerprint: String,
       buckets: Map[String, Int], versions: Map[String, Int])
 
-  private[graft] def readManifest(outDir: String): Manifest = {
-    val txt = new String(
-      java.nio.file.Files.readAllBytes(manifestPath(outDir)), "UTF-8")
-    val source = """"source":"([^"]+)"""".r.findFirstMatchIn(txt)
-      .map(_.group(1))
-      .getOrElse(sys.error(s"no source in $outDir manifest"))
-    val fp = """"source_fingerprint":"([^"]+)"""".r.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse("")
-    val entry = """"(\w+)":\{"buckets":(\d+),"version":(\d+)\}""".r
-    val entries = entry.findAllMatchIn(txt)
-      .map(m => (m.group(1), m.group(2).toInt, m.group(3).toInt)).toSeq
-    if (entries.nonEmpty)
-      Manifest(source, fp,
-        entries.map(e => e._1 -> e._2).toMap,
+  /** The manifest under `outDir`, if one exists. Only the versioned
+    * form is read; a manifest without versioned entries comes back
+    * with empty maps, which [[ensureFor]] treats as stale. */
+  private[graft] def readManifest(spark: SparkSession,
+      outDir: String): Option[Manifest] =
+    Versioned.readFile(spark, manifestPath(outDir)).map { txt =>
+      val source = """"source":"([^"]+)"""".r.findFirstMatchIn(txt)
+        .map(_.group(1))
+        .getOrElse(sys.error(s"no source in $outDir manifest"))
+      val fp = """"source_fingerprint":"([^"]+)"""".r.findFirstMatchIn(txt)
+        .map(_.group(1)).getOrElse("")
+      val entries = """"(\w+)":\{"buckets":(\d+),"version":(\d+)\}""".r
+        .findAllMatchIn(txt)
+        .map(m => (m.group(1), m.group(2).toInt, m.group(3).toInt)).toSeq
+      Manifest(source, fp, entries.map(e => e._1 -> e._2).toMap,
         entries.map(e => e._1 -> e._3).toMap)
-    else {
-      // legacy flat manifest ({"buckets":{name:n,...}}) — no recorded
-      // versions; resolve falls back to the per-artifact pointers
-      val buckets = """"(\w+)":(\d+)""".r.findAllMatchIn(txt)
-        .collect { case m if m.group(1) != "source" =>
-          m.group(1) -> m.group(2).toInt }
-        .toMap
-      Manifest(source, fp, buckets, Map.empty)
     }
-  }
-
-  /** The manifest's recorded source dataset, if a manifest exists. */
-  def manifestSource(outDir: String): Option[String] =
-    if (manifestExists(outDir)) Some(readManifest(outDir).source) else None
 
   /** Register the persisted tables (external, with their recorded
     * bucket spec — catalog state a fresh session must re-declare) and
@@ -222,12 +202,12 @@ object Artifacts {
     * or wholly-new consistent set. Clears every [[SessionCache]]: a
     * cached entry depends on the attach state its key doesn't carry. */
   def attach(spark: SparkSession, outDir: String): Unit = {
-    val m = readManifest(outDir)
+    val m = readManifest(spark, outDir)
+      .getOrElse(sys.error(s"no artifact manifest under $outDir"))
     names.foreach { n =>
       val t = tableName(n)
-      val loc = m.versions.get(n)
-        .map(v => Versioned.versionDir(s"$outDir/$n", v))
-        .getOrElse(Versioned.resolve(spark, s"$outDir/$n"))
+      val loc = Versioned.versionDir(s"$outDir/$n", m.versions.getOrElse(n,
+        sys.error(s"$outDir manifest records no version of $n")))
       val key = bucketKey(n)
       val schema = spark.read.parquet(loc).schema.toDDL
       spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -244,23 +224,25 @@ object Artifacts {
 
   /** Materialize-if-needed + attach: re-materializes when no manifest
     * exists, when the manifest's source is a different dataset path,
-    * or when the source files changed since materialization (a corpus
-    * REGENERATED at the same path — the stale-artifact case a
-    * path-equality guard cannot see). The Bench/Sweep entry point. */
+    * when it records no version of some artifact, or when the source
+    * files changed since materialization (a corpus REGENERATED at the
+    * same path — the stale-artifact case a path-equality guard cannot
+    * see). The Bench/Sweep entry point. */
   def ensureFor(spark: SparkSession, srcDir: String, outDir: String): Unit = {
-    val fresh = manifestExists(outDir) && {
-      val m = readManifest(outDir)
+    val manifest = readManifest(spark, outDir)
+    val fresh = manifest.exists { m =>
       m.source == srcDir &&
-        (m.fingerprint.isEmpty || m.fingerprint == sourceFingerprint(srcDir)) &&
-        // the manifest must cover every CURRENT artifact name — a dir
-        // materialized by an older binary (before an artifact was
-        // added to the set) would otherwise attach and then fail on
-        // the missing table's path (caught round 15: a pre-existing
-        // bench dir lacked the new fingerprints artifact)
-        names.forall(m.buckets.contains)
+        m.fingerprint == sourceFingerprint(spark, srcDir) &&
+        // the manifest must record a version of every CURRENT artifact
+        // name — a dir materialized by an older binary (before an
+        // artifact was added to the set, or before versions were
+        // recorded) would otherwise attach and then fail on the
+        // missing table's path (caught round 15: a pre-existing bench
+        // dir lacked the new fingerprints artifact)
+        names.forall(m.versions.contains)
     }
     if (!fresh) {
-      if (manifestExists(outDir))
+      if (manifest.isDefined)
         System.err.println(s"[artifacts] manifest at $outDir is stale " +
           s"for $srcDir — re-materializing")
       materialize(spark, srcDir, outDir)

@@ -49,19 +49,27 @@ object BucketLayout {
     }
   }
 
-  /** Write `df` as a bucketed (and in-bucket sorted) catalog table.
-    * `path` makes it an EXTERNAL table — the bucketed files land at a
-    * caller-owned location that outlives the session catalog (the
-    * Artifacts materializer's shape: a later session re-registers the
-    * location with the recorded bucket spec and reads co-located). */
+  /** Write `df` as a bucketed (and in-bucket sorted) catalog table. */
   def writeBucketed(df: DataFrame, table: String, key: String,
-      nBuckets: Int, path: Option[String] = None): Unit = {
-    val w = df.write.mode("overwrite")
-      .format("parquet")
-      .bucketBy(nBuckets, key)
-      .sortBy(key)
-    path.fold(w)(p => w.option("path", p)).saveAsTable(table)
+      nBuckets: Int): Unit =
+    writer(df, key, nBuckets).saveAsTable(table)
+
+  /** Write `df` bucketed by `key` into the caller-owned directory
+    * `path` (the Artifacts and CorpusDrop shape: a later session
+    * re-registers the location with the recorded bucket spec and reads
+    * co-located). The bucketed writer only runs through a catalog
+    * table, so the write registers a throwaway external table under a
+    * unique name and drops it right after; the files stay. */
+  def writeBucketedAt(df: DataFrame, key: String, nBuckets: Int,
+      path: String): Unit = {
+    val t = s"graft_bucketed_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    try writer(df, key, nBuckets).option("path", path).saveAsTable(t)
+    finally df.sparkSession.sql(s"DROP TABLE IF EXISTS $t")
   }
+
+  private def writer(df: DataFrame, key: String, nBuckets: Int) =
+    df.write.mode("overwrite").format("parquet")
+      .bucketBy(nBuckets, key).sortBy(key)
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: BucketLayout <srcDir> <table> <key> [buckets]")

@@ -31,6 +31,12 @@ import org.apache.spark.sql.SparkSession
   * At cluster scale the same routine runs per partition directory
   * (dt=.../hour=...) under a metastore lock or a table format's
   * transaction; the single-dir core is what this exercises.
+  *
+  * The flat swap stays beside [[runVersioned]] because two readers
+  * scan flat `<table>.parquet` dirs and never resolve a version
+  * pointer — `Tables.load` and the DuckDB oracle (`scripts/check.py`
+  * globs the files) — so compacting such a dataset through
+  * [[Versioned]] would make it unreadable to both.
   */
 object Compact {
   def main(args: Array[String]): Unit = {

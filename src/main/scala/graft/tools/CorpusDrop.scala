@@ -1,9 +1,9 @@
 package graft.tools
 
 import graft.queries.{Dedup, TextAnalysis}
+import org.apache.hadoop.fs.{FileUtil, HardLink, LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 
 /** The end-to-end incremental corpus-drop job — the engine-wide
   * analogue of the reference's steady-state loop (main.py:109-138:
@@ -96,61 +96,40 @@ object CorpusDrop {
   def keepersDir(stateDir: String, n: Int): String = s"$stateDir/keepers_v$n"
   def yieldDir(stateDir: String, n: Int): String = s"$stateDir/yield_v$n"
 
-  private def pointer(stateDir: String) = Paths.get(stateDir, "_graft_gen")
+  private def pointer(stateDir: String) = s"$stateDir/_graft_gen"
 
-  def currentGen(stateDir: String): Option[Int] =
-    if (Files.exists(pointer(stateDir)))
-      Some(new String(Files.readAllBytes(pointer(stateDir)), "UTF-8").trim.toInt)
-    else None
+  def currentGen(spark: SparkSession, stateDir: String): Option[Int] =
+    Versioned.readFile(spark, pointer(stateDir)).map(_.trim.toInt)
 
-  /** Atomic pointer flip — write temp + ATOMIC_MOVE rename, the same
-    * promotion the Artifacts manifest uses. */
-  private def flipPointer(stateDir: String, n: Int): Unit = {
-    Files.createDirectories(Paths.get(stateDir))
-    val tmp = Paths.get(stateDir, s"._graft_gen_tmp_${java.util.UUID.randomUUID}")
-    Files.write(tmp, n.toString.getBytes("UTF-8"))
-    Files.move(tmp, pointer(stateDir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def fsOf(spark: SparkSession, dir: String) =
+    Versioned.fsOf(spark, new Path(dir))
 
-  /** Hardlink every regular file of flat dir `src` into `dst`
-    * (created), falling back to copy across filesystems; files
+  /** Hardlink every file of flat dir `src` into `dst` (created) when
+    * both sit on one local filesystem, copying otherwise; files
     * already present at `dst` (e.g. `_SUCCESS` when merging two
     * writes) are kept. Metadata-only on one filesystem — the reason
     * publish is O(batch) in data volume. */
-  private def linkInto(src: String, dst: String): Unit = {
-    Files.createDirectories(Paths.get(dst))
-    val s = Files.list(Paths.get(src))
-    try s.forEach { p =>
-      if (Files.isRegularFile(p)) {
-        val t = Paths.get(dst, p.getFileName.toString)
-        if (!Files.exists(t)) {
-          try Files.createLink(t, p)
-          catch { case _: UnsupportedOperationException | _: java.io.IOException =>
-            Files.copy(p, t, StandardCopyOption.COPY_ATTRIBUTES)
-          }
-        }
-      }
-    } finally s.close()
+  private def linkInto(spark: SparkSession, src: String, dst: String): Unit = {
+    val (sfs, dfs) = (fsOf(spark, src), fsOf(spark, dst))
+    dfs.mkdirs(new Path(dst))
+    sfs.listStatus(new Path(src)).filter(_.isFile).foreach { st =>
+      val t = new Path(dst, st.getPath.getName)
+      val linked = dfs.exists(t) || ((sfs, dfs) match {
+        case (l: LocalFileSystem, r: LocalFileSystem) => scala.util.Try(
+          HardLink.createHardLink(l.pathToFile(st.getPath), r.pathToFile(t))).isSuccess
+        case _ => false
+      })
+      if (!linked) FileUtil.copy(sfs, st.getPath, dfs, t, false, true,
+        spark.sparkContext.hadoopConfiguration)
+    }
   }
 
-  private def fileCount(dir: String): Int = {
-    val p = Paths.get(dir)
-    if (!Files.isDirectory(p)) return 0
-    val s = Files.list(p)
-    try s.filter(f => Files.isRegularFile(f) &&
-      f.getFileName.toString.endsWith(".parquet")).count().toInt
-    finally s.close()
-  }
+  private def fileCount(spark: SparkSession, dir: String): Int =
+    fsOf(spark, dir).listStatus(new Path(dir))
+      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
 
-  private def deleteRecursive(dir: String): Unit = {
-    val root = Paths.get(dir)
-    if (!Files.exists(root)) return
-    val s = Files.walk(root)
-    try s.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(Files.deleteIfExists(_))
-    finally s.close()
-  }
+  private def deleteRecursive(spark: SparkSession, dir: String): Unit =
+    fsOf(spark, dir).delete(new Path(dir), true)
 
   // ------------------------------------------------------------------
   // init: bootstrap generation 1 from an existing dataset dir
@@ -161,11 +140,11 @@ object CorpusDrop {
     * ever pay ([[Artifacts.materialize]]), and publish the initial
     * keeper/yield products from the attached artifacts. */
   def init(spark: SparkSession, srcDir: String, stateDir: String): Int = {
-    require(currentGen(stateDir).isEmpty,
-      s"$stateDir already initialized (gen ${currentGen(stateDir).get})")
+    require(currentGen(spark, stateDir).isEmpty, s"$stateDir already " +
+      s"initialized (gen ${currentGen(spark, stateDir).get})")
     val gen1 = genDir(stateDir, 1)
-    for (t <- tablesIn(srcDir))
-      linkInto(s"$srcDir/$t.parquet", s"$gen1/$t.parquet")
+    for (t <- tablesIn(spark, srcDir))
+      linkInto(spark, s"$srcDir/$t.parquet", s"$gen1/$t.parquet")
     Artifacts.materialize(spark, gen1, artifactsDir(stateDir, 1))
     Artifacts.attach(spark, artifactsDir(stateDir, 1))
     try {
@@ -176,19 +155,14 @@ object CorpusDrop {
           keeperState(spark, gen1).select(col("doc_id"), col("keeper"))))
         .write.mode("overwrite").parquet(yieldDir(stateDir, 1))
     } finally Artifacts.detach(spark)
-    flipPointer(stateDir, 1)
+    Versioned.writeFile(spark, pointer(stateDir), "1")
     1
   }
 
-  private def tablesIn(srcDir: String): Seq[String] = {
-    val s = Files.list(Paths.get(srcDir))
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
-        .toSeq.sorted
-    } finally s.close()
-  }
+  private def tablesIn(spark: SparkSession, srcDir: String): Seq[String] =
+    fsOf(spark, srcDir).listStatus(new Path(srcDir))
+      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).toSeq.sorted
 
   /** The keeper state (doc_id, exact_canonical, keeper) — the
     * persisted superset of dd_keep_list (which is a pure projection,
@@ -220,28 +194,26 @@ object CorpusDrop {
   def drop(spark: SparkSession, stateDir: String, batchDir: String,
       dropId: String): DropReport = {
     val stage = s"$stateDir/drops/$dropId"
-    Files.createDirectories(Paths.get(stage))
 
     // pin the base generation for resumes: a crash after the pointer
     // flip must not re-run this drop against its own output
-    val metaPath = Paths.get(stage, "meta.json")
-    val baseGen =
-      if (Files.exists(metaPath))
-        """"base":(\d+)""".r.findFirstMatchIn(
-          new String(Files.readAllBytes(metaPath), "UTF-8")).get.group(1).toInt
-      else {
-        val n = currentGen(stateDir).getOrElse(
+    val metaPath = s"$stage/meta.json"
+    val baseGen = Versioned.readFile(spark, metaPath) match {
+      case Some(meta) =>
+        """"base":(\d+)""".r.findFirstMatchIn(meta).get.group(1).toInt
+      case None =>
+        val n = currentGen(spark, stateDir).getOrElse(
           sys.error(s"$stateDir not initialized — call init first"))
-        Files.write(metaPath, s"""{"base":$n}""".getBytes("UTF-8"))
+        Versioned.writeFile(spark, metaPath, s"""{"base":$n}""")
         n
-      }
+    }
     val gen = genDir(stateDir, baseGen)
     val nextGen = baseGen + 1
 
     val times = scala.collection.mutable.LinkedHashMap[String, Double]()
     def step(name: String)(body: String => Unit): String = {
       val out = s"$stage/$name"
-      if (!Files.exists(Paths.get(s"$out/_SUCCESS"))) {
+      if (!fsOf(spark, out).exists(new Path(out, "_SUCCESS"))) {
         val t0 = System.nanoTime()
         body(out)
         times(name) = (System.nanoTime() - t0) / 1e9
@@ -252,7 +224,8 @@ object CorpusDrop {
 
     Artifacts.attach(spark, artifactsDir(stateDir, baseGen))
     try {
-      val oldManifest = Artifacts.readManifest(artifactsDir(stateDir, baseGen))
+      val oldManifest = Artifacts.readManifest(spark,
+        artifactsDir(stateDir, baseGen)).get
 
       // -- 1. batch tables: per-row derivations, O(batch) ------------
       val batchDocsP = step("batch_docs") { out =>
@@ -273,26 +246,20 @@ object CorpusDrop {
       }
       val batchDocs = read(batchDocsP)
 
-      def writeBucketedStaged(df: DataFrame, name: String, key: String,
-          out: String): Unit = {
-        val t = s"graft_drop_${name}_${math.abs(out.hashCode)}"
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        BucketLayout.writeBucketed(df, t, key, oldManifest.buckets(name),
-          Some(out))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-      }
+      // per-doc artifacts keep the base generation's bucket count, so
+      // a hardlinked delta stays co-located with the corpus files
+      def writeLikeBase(df: DataFrame, name: String, out: String): Unit =
+        BucketLayout.writeBucketedAt(df, "doc_id", oldManifest.buckets(name), out)
       val batchSigsP = step("batch_signatures") { out =>
-        writeBucketedStaged(Dedup.signatureTable(batchDocs),
-          "signatures", "doc_id", out)
+        writeLikeBase(Dedup.signatureTable(batchDocs), "signatures", out)
       }
       val batchShinglesP = step("batch_shingles") { out =>
-        writeBucketedStaged(batchDocs.select(col("doc_id"),
+        writeLikeBase(batchDocs.select(col("doc_id"),
             org.apache.spark.sql.graft.ShingleHashes.of(col("text")).as("hsh")),
-          "shingles", "doc_id", out)
+          "shingles", out)
       }
       val batchFpsP = step("batch_fingerprints") { out =>
-        writeBucketedStaged(Dedup.fingerprintTable(batchDocs),
-          "fingerprints", "doc_id", out)
+        writeLikeBase(Dedup.fingerprintTable(batchDocs), "fingerprints", out)
       }
       val batchSigs = read(batchSigsP)
       val batchFps = read(batchFpsP)
@@ -459,11 +426,11 @@ object CorpusDrop {
 
       // -- 7. clusters as a bucketed artifact (for the next manifest)
       val clustersArtP = step("clusters_bucketed") { out =>
-        writeBucketedStaged(newClusters, "clusters", "doc_id", out)
+        writeLikeBase(newClusters, "clusters", out)
       }
 
       // -- 8. publish generation baseGen+1 ---------------------------
-      if (!currentGen(stateDir).contains(nextGen)) {
+      if (!currentGen(spark, stateDir).contains(nextGen)) {
         val t0 = System.nanoTime()
         publish(spark, stateDir, baseGen, stage, oldManifest,
           Map("signatures" -> batchSigsP, "shingles" -> batchShinglesP,
@@ -507,85 +474,63 @@ object CorpusDrop {
     // a partial previous attempt (no pointer flip yet) rebuilds from
     // scratch — hardlinks make that cheap
     Seq(genNext, artsNext, keepersDir(stateDir, nextGen),
-      yieldDir(stateDir, nextGen)).foreach(deleteRecursive)
+      yieldDir(stateDir, nextGen)).foreach(deleteRecursive(spark, _))
 
     // corpus tables: hardlink everything, then add the batch's
     // document files (or compact the table once it has accreted
     // CompactEvery files)
-    for (t <- tablesIn(gen) if t != "documents")
-      linkInto(s"$gen/$t.parquet", s"$genNext/$t.parquet")
+    for (t <- tablesIn(spark, gen) if t != "documents")
+      linkInto(spark, s"$gen/$t.parquet", s"$genNext/$t.parquet")
     val docsDir = s"$gen/documents.parquet"
-    if (fileCount(docsDir) >= CompactEvery) {
+    if (fileCount(spark, docsDir) >= CompactEvery) {
       spark.read.parquet(docsDir)
         .unionByName(spark.read.parquet(s"$stage/batch_docs"))
         .repartition(math.max(1,
-          BucketLayout.bucketsFor(dirBytes(docsDir), 128L << 20)))
+          BucketLayout.bucketsFor(fsOf(spark, docsDir)
+            .getContentSummary(new Path(docsDir)).getLength, 128L << 20)))
         .write.mode("overwrite").parquet(s"$genNext/documents.parquet")
     } else {
-      linkInto(docsDir, s"$genNext/documents.parquet")
-      linkInto(s"$stage/batch_docs", s"$genNext/documents.parquet")
+      linkInto(spark, docsDir, s"$genNext/documents.parquet")
+      linkInto(spark, s"$stage/batch_docs", s"$genNext/documents.parquet")
     }
 
-    // artifacts: immutable trained tables hardlink as-is; append-only
+    // artifacts: each publishes one Versioned version of the next
+    // set. Immutable trained tables hardlink as-is; append-only
     // per-doc tables hardlink + delta (same bucket count, so the
     // bucketed read stays co-located: extra files per bucket, never a
-    // rehash) with the same compaction valve; clusters rewrite
+    // rehash) with the same compaction valve; clusters rewrite. The
+    // base's live dirs come from its manifest, as for attach.
     val arts = Artifacts.names.map { n =>
-      val liveOld = Versioned.resolve(spark, s"$stateDir/artifacts_v$baseGen/$n")
-      val vDir = s"$artsNext/$n/v1"
-      if (appendArtifacts.contains(n)) {
-        if (fileCount(liveOld) >= CompactEvery) {
-          val t = s"graft_drop_compact_$n"
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          BucketLayout.writeBucketed(
-            spark.read.parquet(liveOld)
-              .unionByName(spark.read.parquet(appendArtifacts(n))),
-            t, "doc_id", oldManifest.buckets(n), Some(vDir))
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-        } else {
-          linkInto(liveOld, vDir)
-          linkInto(appendArtifacts(n), vDir)
-        }
-      } else if (n == "clusters") {
-        linkInto(clustersArt, vDir)
-      } else {
-        linkInto(liveOld, vDir)
-      }
-      Files.write(Paths.get(s"$artsNext/$n/_graft_current"),
-        "1".getBytes("UTF-8"))
-      n -> oldManifest.buckets(n)
+      val liveOld = Versioned.versionDir(
+        s"${artifactsDir(stateDir, baseGen)}/$n", oldManifest.versions(n))
+      val v = Versioned.publish(spark, s"$artsNext/$n") { vDir =>
+        if (appendArtifacts.contains(n)) {
+          if (fileCount(spark, liveOld) >= CompactEvery)
+            BucketLayout.writeBucketedAt(spark.read.parquet(liveOld)
+                .unionByName(spark.read.parquet(appendArtifacts(n))),
+              "doc_id", oldManifest.buckets(n), vDir)
+          else {
+            linkInto(spark, liveOld, vDir)
+            linkInto(spark, appendArtifacts(n), vDir)
+          }
+        } else if (n == "clusters") linkInto(spark, clustersArt, vDir)
+        else linkInto(spark, liveOld, vDir)
+      }()
+      (n, oldManifest.buckets(n), v)
     }
-    val fp = Artifacts.sourceFingerprint(genNext)
-    val manifest = arts.map { case (n, b) =>
-      s""""$n":{"buckets":$b,"version":1}"""
-    }.mkString(
-      s"""{"source":"$genNext","source_fingerprint":"$fp","artifacts":{""",
-      ",", "}}")
-    val mTmp = Paths.get(artsNext, s".manifest_tmp_${java.util.UUID.randomUUID}")
-    Files.write(mTmp, manifest.getBytes("UTF-8"))
-    Files.move(mTmp, Paths.get(artsNext, "_graft_manifest.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Artifacts.writeManifest(spark, genNext, artsNext, arts)
 
-    linkInto(keepersP, keepersDir(stateDir, nextGen))
-    linkInto(yieldP, yieldDir(stateDir, nextGen))
+    linkInto(spark, keepersP, keepersDir(stateDir, nextGen))
+    linkInto(spark, yieldP, yieldDir(stateDir, nextGen))
 
-    flipPointer(stateDir, nextGen)
+    Versioned.writeFile(spark, pointer(stateDir), nextGen.toString)
     // retention: the superseded generation survives one cycle (the
     // Versioned policy); anything older is dead
     for (g <- 1 until baseGen) {
       Seq(genDir(stateDir, g), artifactsDir(stateDir, g),
         keepersDir(stateDir, g), yieldDir(stateDir, g))
-        .foreach(deleteRecursive)
+        .foreach(deleteRecursive(spark, _))
     }
-  }
-
-  private def dirBytes(dir: String): Long = {
-    val s = Files.list(Paths.get(dir))
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(Files.size(_)).sum
-    } finally s.close()
   }
 
   /** CLI: init then drop.

@@ -83,6 +83,9 @@ object ShuffleAudit {
     val c = new Collector
     spark.sparkContext.addSparkListener(c)
     try {
+      // each query's loop scratch is released once it has run (the
+      // runner's Checkpoints.defer contract), so a later query is never
+      // measured under an earlier one's dead blocks
       def runOne(q: GraftQuery): Boolean =
         try q.withConfs(spark) {
           q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -90,7 +93,7 @@ object ShuffleAudit {
         } catch { case NonFatal(e) =>
           System.err.println(s"[shuffle-audit] ${q.name}: ${e.getMessage}")
           false
-        }
+        } finally Checkpoints.drainDeferred(spark)
       if (warm) qs.foreach { q =>
         runOne(q)
         if (teardown) SweepCheck.clearSessionArtifacts(spark)

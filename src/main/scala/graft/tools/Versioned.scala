@@ -1,19 +1,19 @@
 package graft.tools
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Reader-atomic table promotion — the version-pointer protocol the
-  * maintenance jobs ([[Compact]], [[Layout]]) publish through.
+/** Reader-atomic promotion — the one commit path for persisted state:
+  * the maintenance jobs ([[Compact]], [[Layout]]), [[Artifacts]] and
+  * [[CorpusDrop]] publish through it, on the path's Hadoop FileSystem.
   *
   * [[Compact.run]]'s move-aside/promote swap has a documented window
   * where the table path does not exist, and a concurrent session
   * listing the directory mid-swap can see a partial file set. The
   * versioned layout closes that window the way every table format
-  * (and the Artifacts manifest precedent in this repo) does: data is
-  * IMMUTABLE once written under `dir/v<N>/`, and the only mutable
-  * state is a one-line pointer file `dir/_graft_current` naming the
-  * live version. A rewrite lands completely in `v<N+1>`, is verified,
+  * does: data is IMMUTABLE once written under `dir/v<N>/`, and the
+  * only mutable state is a one-line pointer file `dir/_graft_current`
+  * naming the live version. A rewrite lands completely in `v<N+1>`, is verified,
   * and then the pointer flips via write-temp + single-file RENAME —
   * atomic on POSIX and HDFS (`FileContext.rename(OVERWRITE)` is the
   * Hadoop spelling of an atomic replace). A reader resolves the
@@ -32,7 +32,10 @@ object Versioned {
 
   private val PointerName = "_graft_current"
 
-  private def fsOf(spark: SparkSession, p: Path) =
+  /** The Hadoop FileSystem that `p` lives on — every state-dir
+    * operation goes through it, so a `file:` or `hdfs:` URI works like
+    * a plain path. */
+  private[tools] def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def pointerPath(dir: String) = new Path(dir, PointerName)
@@ -41,18 +44,34 @@ object Versioned {
     new Path(dir, s"v$v").toString
 
   /** The live version number, if `dir` uses the versioned layout. */
-  def current(spark: SparkSession, dir: String): Option[Int] = {
-    val ptr = pointerPath(dir)
-    val fs = fsOf(spark, ptr)
-    if (!fs.exists(ptr)) None
-    else {
-      val in = fs.open(ptr)
-      try {
-        val txt = new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-        Some(txt.toInt)
-      } finally in.close()
-    }
+  def current(spark: SparkSession, dir: String): Option[Int] =
+    readFile(spark, pointerPath(dir).toString).map(_.trim.toInt)
+
+  /** The text of the small state file at `path`, if it exists. */
+  def readFile(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = fsOf(spark, p)
+    Option.when(fs.exists(p))(scala.util.Using.resource(fs.open(p))(in =>
+      new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")))
+  }
+
+  /** Replace the small state file at `path` with `text` atomically:
+    * write a sibling temp file, then rename it over `path`. A reader
+    * sees the old text or the new, never a truncated file. Every
+    * pointer, manifest and ledger file of the state layer is written
+    * through here. */
+  def writeFile(spark: SparkSession, path: String, text: String): Unit = {
+    val p = new Path(path)
+    val tmp = new Path(p.getParent,
+      s".${p.getName}_tmp_${java.util.UUID.randomUUID}")
+    val out = fsOf(spark, p).create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    // FileContext.rename with OVERWRITE is the atomic single-file
+    // replace (FileSystem.rename refuses an existing destination on
+    // some implementations, and delete+rename would re-open a window)
+    FileContext.getFileContext(p.toUri,
+      spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, p, Options.Rename.OVERWRITE)
   }
 
   /** The directory a reader should scan: the live version dir if a
@@ -65,20 +84,11 @@ object Versioned {
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(resolve(spark, dir))
 
-  /** Atomically flip the pointer to `v` (write temp + rename-replace),
-    * then GC versions older than the one just superseded. */
+  /** Atomically flip the pointer to `v` ([[writeFile]]), then GC
+    * versions older than the one just superseded. */
   private def commit(spark: SparkSession, dir: String, v: Int): Unit = {
-    val ptr = pointerPath(dir)
-    val fs = fsOf(spark, ptr)
-    val tmp = new Path(dir, s".${PointerName}_tmp_${java.util.UUID.randomUUID}")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    // FileContext.rename with OVERWRITE is the atomic single-file
-    // replace (FileSystem.rename refuses an existing destination on
-    // some implementations, and delete+rename would re-open a window)
-    FileContext.getFileContext(ptr.toUri,
-      spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, ptr, Options.Rename.OVERWRITE)
+    writeFile(spark, pointerPath(dir).toString, v.toString)
+    val fs = fsOf(spark, new Path(dir))
     // keep v-1 for in-flight readers; drop anything older — including
     // the pre-versioned FLAT data files, which count as "version 0"
     // and so are dropped once v2 lands. Staging debris for versions

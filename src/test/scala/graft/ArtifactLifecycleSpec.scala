@@ -54,7 +54,7 @@ class ArtifactLifecycleSpec extends SparkSpec {
     assert(written.map(_._1) == Seq("signatures", "clusters", "shingles",
       "fingerprints", "kmeans_cells", "pq_books", "pq_codes", "bpe_merges"))
     assert(written.forall(_._2 > 0), s"empty artifact in $written")
-    assert(Artifacts.manifestExists(outDir))
+    assert(Artifacts.readManifest(spark, outDir).isDefined)
 
     // attach right after the derive pass, no teardown: attach itself
     // drops the cached derived frames, so consumers resolve from the
@@ -250,15 +250,72 @@ class ArtifactLifecycleSpec extends SparkSpec {
     // a REGENERATED corpus at the same path changes the fingerprint;
     // simulate by corrupting the recorded one — ensureFor must refuse
     // the stale set and re-materialize (the Bench guard, ADVICE r9)
-    val mp = java.nio.file.Paths.get(outDir, "_graft_manifest.json")
-    val txt = new String(java.nio.file.Files.readAllBytes(mp), "UTF-8")
-    java.nio.file.Files.write(mp, txt.replaceAll(
+    val mp = s"$outDir/_graft_manifest.json"
+    Versioned.writeFile(spark, mp, Versioned.readFile(spark, mp).get.replaceAll(
       """"source_fingerprint":"[^"]*"""",
-      """"source_fingerprint":"0-0-0"""").getBytes("UTF-8"))
+      """"source_fingerprint":"0-0-0""""))
     SweepCheck.clearSessionArtifacts(spark)
     Artifacts.ensureFor(spark, d, outDir)
     assert(Versioned.current(spark, s"$outDir/signatures").contains(2),
       "a fingerprint mismatch must force re-materialization")
+    Artifacts.detach(spark)
+
+    // a legacy flat manifest records bucket counts but no versions;
+    // even when it lists every current name, ensureFor must refuse it
+    // and re-materialize rather than attach unrecorded versions
+    Versioned.writeFile(spark, mp, Artifacts.names.map(n => s""""$n":1""")
+      .mkString(s"""{"source":"$d","buckets":{""", ",", "}}"))
+    SweepCheck.clearSessionArtifacts(spark)
+    Artifacts.ensureFor(spark, d, outDir)
+    assert(Versioned.current(spark, s"$outDir/signatures").contains(3),
+      "a manifest without versioned entries must force re-materialization")
+    assert(Artifacts.readManifest(spark, outDir).get.versions ==
+      Artifacts.names.map(_ -> 3).toMap)
+    Artifacts.detach(spark)
+    SweepCheck.clearSessionArtifacts(spark)
+  }
+
+  test("ensureFor on file: URIs: manifest under the real dir, same fingerprint, regeneration re-materializes") {
+    import graft.tools.Artifacts
+    import java.nio.file.{Files, Paths}
+    // a private copy of the sf0.001 corpus inputs the artifacts derive
+    // from, so one of its files can be rewritten
+    val root = Files.createTempDirectory("graft_art_uri")
+    val (src, out) = (root.resolve("src"), root.resolve("out"))
+    Files.createDirectories(src)
+    for (t <- Seq("documents", "embeddings"))
+      Files.write(src.resolve(s"$t.parquet"),
+        Files.readAllBytes(Paths.get(sf("sf0.001"), s"$t.parquet")))
+    val (srcUri, outUri) = (s"file:$src", s"file:$out")
+    val strayUriDir = Paths.get("file:").toAbsolutePath
+
+    val fp = Artifacts.sourceFingerprint(spark, src.toString)
+    assert(fp.startsWith("2-"), s"two parquet files expected: $fp")
+    assert(Artifacts.sourceFingerprint(spark, srcUri) == fp,
+      "a file: URI must fingerprint like the plain path")
+
+    SweepCheck.clearSessionArtifacts(spark)
+    Artifacts.ensureFor(spark, srcUri, outUri)
+    assert(Files.isRegularFile(out.resolve("_graft_manifest.json")),
+      "the manifest must land under the real outDir")
+    assert(!Files.exists(strayUriDir),
+      s"a file: URI must never resolve under the working dir: $strayUriDir")
+    assert(Artifacts.readManifest(spark, outUri).get.versions ==
+      Artifacts.names.map(_ -> 1).toMap)
+    assert(spark.conf.get(Artifacts.ConfSource) == srcUri)
+    Artifacts.detach(spark)
+
+    // regenerate one source file in place (same bytes, new mtime)
+    val docs = src.resolve("documents.parquet")
+    Files.write(docs, Files.readAllBytes(docs))
+    assert(Artifacts.sourceFingerprint(spark, srcUri) != fp)
+    SweepCheck.clearSessionArtifacts(spark)
+    Artifacts.ensureFor(spark, srcUri, outUri)
+    assert(Artifacts.readManifest(spark, outUri).get.versions ==
+      Artifacts.names.map(_ -> 2).toMap,
+      "a rewritten source file must force re-materialization")
+    assert(Files.isDirectory(out.resolve("signatures").resolve("v2")))
+    assert(!Files.exists(strayUriDir))
     Artifacts.detach(spark)
     SweepCheck.clearSessionArtifacts(spark)
   }

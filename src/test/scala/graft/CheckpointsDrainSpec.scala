@@ -77,6 +77,17 @@ class CheckpointsDrainSpec extends SparkSpec {
     }
   }
 
+  test("ShuffleAudit.measure releases each query's scratch") {
+    tools.Checkpoints.drainDeferred(spark) // isolate from prior suites
+    val m = tools.ShuffleAudit.measure(spark, sf("sf0.001"),
+      Seq(Registry.byName("q_graph_kcore")), warm = false, teardown = false)
+    assert(m.map(_._1) == Seq("q_graph_kcore") && m.head._2.shuffleWrite >= 0,
+      s"the query must have run: $m")
+    val left = tools.Checkpoints.drainDeferred(spark)
+    assert(left == 0,
+      s"measure left $left deferred scratch frames for the next query")
+  }
+
   test("connectedComponents releases its edge checkpoint, keeps only the labels") {
     // a 4-node chain: min-label propagation needs 3 changing rounds
     // plus the round that detects convergence

@@ -72,14 +72,14 @@ class CorpusDropSpec extends SparkSpec {
     val (wantKeep, wantClusters, wantYield, wantIncr) = references
     val state = Files.createTempDirectory("graft_dropstate").toString
     CorpusDrop.init(spark, datasetWith($"doc_id" < 400), state)
-    assert(CorpusDrop.currentGen(state).contains(1))
+    assert(CorpusDrop.currentGen(spark, state).contains(1))
 
     val before = queries.Dedup.artifactDerivations.get()
     val report = CorpusDrop.drop(spark, state,
       batchWith($"doc_id" >= 400), "drop1")
     assert(queries.Dedup.artifactDerivations.get() == before,
       "a drop must probe persisted artifacts, never re-derive the corpus")
-    assert(report.newGen == 2 && CorpusDrop.currentGen(state).contains(2))
+    assert(report.newGen == 2 && CorpusDrop.currentGen(spark, state).contains(2))
     assert(report.nBatch == 100)
     assert(report.nExact + report.nNear + report.nNovel == report.nBatch)
 
@@ -116,7 +116,7 @@ class CorpusDropSpec extends SparkSpec {
       batchWith($"doc_id" >= 400), "drop1")
     assert(again.stepSeconds.isEmpty,
       s"re-run of a completed drop must skip all steps: ${again.stepSeconds}")
-    assert(CorpusDrop.currentGen(state).contains(2))
+    assert(CorpusDrop.currentGen(spark, state).contains(2))
   }
 
   test("a drop killed mid-pipeline resumes from the step ledger") {
@@ -164,14 +164,18 @@ class CorpusDropSpec extends SparkSpec {
 
   test("consecutive drops chain generations; retention keeps one predecessor") {
     val (wantKeep, _, wantYield, _) = references
-    val state = Files.createTempDirectory("graft_dropC").toString
+    // the state dir is a file: URI: every state-dir operation must go
+    // through the path's FileSystem, never resolve under the cwd
+    val stateDir = Files.createTempDirectory("graft_dropC")
+    val state = s"file:$stateDir"
+    def real(uri: String) = Paths.get(new java.net.URI(uri))
     CorpusDrop.init(spark, datasetWith($"doc_id" < 300), state)
     CorpusDrop.drop(spark, state,
       batchWith($"doc_id" >= 300 && $"doc_id" < 450), "drop1")
-    assert(CorpusDrop.currentGen(state).contains(2))
+    assert(CorpusDrop.currentGen(spark, state).contains(2))
     val r2 = CorpusDrop.drop(spark, state,
       batchWith($"doc_id" >= 450), "drop2")
-    assert(r2.baseGen == 2 && CorpusDrop.currentGen(state).contains(3))
+    assert(r2.baseGen == 2 && CorpusDrop.currentGen(spark, state).contains(3))
 
     val keepers = spark.read.parquet(CorpusDrop.keepersDir(state, 3))
     assert(rows(CorpusDrop.keepListFrom(keepers)) == wantKeep,
@@ -180,9 +184,15 @@ class CorpusDropSpec extends SparkSpec {
 
     // retention: gen 1 GC'd, gen 2 (the immediately superseded
     // generation) survives one cycle for in-flight readers
-    assert(!Files.exists(Paths.get(CorpusDrop.genDir(state, 1))),
+    assert(!Files.exists(real(CorpusDrop.genDir(state, 1))),
       "generation 1 must be garbage-collected after gen 3 lands")
-    assert(Files.exists(Paths.get(CorpusDrop.genDir(state, 2))),
+    assert(Files.exists(real(CorpusDrop.genDir(state, 2))),
       "the superseded generation must survive one publish cycle")
+    assert(Files.isDirectory(real(CorpusDrop.genDir(state, 3))))
+    assert(new String(Files.readAllBytes(stateDir.resolve("_graft_gen")),
+      "UTF-8").trim == "3", "the generation pointer lives in the real dir")
+    assert(Files.isRegularFile(stateDir.resolve("drops/drop2/meta.json")))
+    assert(!Files.exists(Paths.get("file:").toAbsolutePath),
+      "a file: URI must never resolve under the working dir")
   }
 }

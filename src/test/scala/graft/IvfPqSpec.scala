@@ -41,4 +41,49 @@ class IvfPqSpec extends SparkSpec {
     val drift = joined.filter($"pruned_score" =!= $"full_score").count()
     assert(drift === 0, "ADC scores are cell-independent by construction")
   }
+
+  test("trainIvfPq's jobs carry the caller's job group, call after call") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    // job groups in job-start order; listener events arrive in posting
+    // order, so a marker job's group delimits the jobs before it
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(name) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains(name), s"listener never saw marker $name")
+    }
+    val e = Similarity.quantCorpus(Tables.embeddings(spark, d))
+    val ejs = Similarity.pqSubvectorsOf(e)
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("ivfpq_a", "first training")
+      val a = Similarity.trainIvfPq(e, ejs)
+      marker("marker_1")
+      sc.setJobGroup("ivfpq_b", "second training")
+      val b = Similarity.trainIvfPq(e, ejs)
+      marker("marker_2")
+      val seen = groups.asScala.toSeq
+      val during = seen.slice(seen.indexOf("marker_1") + 1,
+        seen.indexOf("marker_2"))
+      assert(during.nonEmpty, s"no jobs recorded for the second call: $seen")
+      assert(during.forall(_ == "ivfpq_b"),
+        s"every job of the second call must carry its group: $during")
+      assert(a == b, "the two trainings must give identical models")
+    } finally {
+      sc.removeSparkListener(l)
+      sc.clearJobGroup()
+      tools.Checkpoints.drainDeferred(spark)
+    }
+  }
 }
