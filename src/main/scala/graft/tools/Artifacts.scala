@@ -155,7 +155,7 @@ object Artifacts {
     * alone cannot see. */
   def sourceFingerprint(spark: SparkSession, srcDir: String): String = {
     val root = new Path(srcDir)
-    val fs = Versioned.fsOf(spark, root)
+    val fs = Versioned.fsOf(spark, srcDir)
     if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory)
       return "absent"
     var count = 0L; var bytes = 0L; var maxM = 0L

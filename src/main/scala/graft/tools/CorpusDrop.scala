@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.queries.{Dedup, TextAnalysis}
-import org.apache.hadoop.fs.{FileUtil, HardLink, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FileUtil, HardLink, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -101,21 +101,23 @@ object CorpusDrop {
   def currentGen(spark: SparkSession, stateDir: String): Option[Int] =
     Versioned.readFile(spark, pointer(stateDir)).map(_.trim.toInt)
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    Versioned.fsOf(spark, new Path(dir))
-
   /** Hardlink every file of flat dir `src` into `dst` (created) when
     * both sit on one local filesystem, copying otherwise; files
     * already present at `dst` (e.g. `_SUCCESS` when merging two
     * writes) are kept. Metadata-only on one filesystem — the reason
-    * publish is O(batch) in data volume. */
+    * publish is O(batch) in data volume. Local dirs are listed raw, so
+    * each file's `.crc` sidecar travels with it. */
   private def linkInto(spark: SparkSession, src: String, dst: String): Unit = {
-    val (sfs, dfs) = (fsOf(spark, src), fsOf(spark, dst))
+    val (sfs, dfs) = (Versioned.fsOf(spark, src), Versioned.fsOf(spark, dst)) match {
+      case (l: LocalFileSystem, r: LocalFileSystem) =>
+        (l.getRawFileSystem, r.getRawFileSystem)
+      case other => other
+    }
     dfs.mkdirs(new Path(dst))
     sfs.listStatus(new Path(src)).filter(_.isFile).foreach { st =>
       val t = new Path(dst, st.getPath.getName)
       val linked = dfs.exists(t) || ((sfs, dfs) match {
-        case (l: LocalFileSystem, r: LocalFileSystem) => scala.util.Try(
+        case (l: RawLocalFileSystem, r: RawLocalFileSystem) => scala.util.Try(
           HardLink.createHardLink(l.pathToFile(st.getPath), r.pathToFile(t))).isSuccess
         case _ => false
       })
@@ -125,11 +127,11 @@ object CorpusDrop {
   }
 
   private def fileCount(spark: SparkSession, dir: String): Int =
-    fsOf(spark, dir).listStatus(new Path(dir))
+    Versioned.fsOf(spark, dir).listStatus(new Path(dir))
       .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
 
   private def deleteRecursive(spark: SparkSession, dir: String): Unit =
-    fsOf(spark, dir).delete(new Path(dir), true)
+    Versioned.fsOf(spark, dir).delete(new Path(dir), true)
 
   // ------------------------------------------------------------------
   // init: bootstrap generation 1 from an existing dataset dir
@@ -160,7 +162,7 @@ object CorpusDrop {
   }
 
   private def tablesIn(spark: SparkSession, srcDir: String): Seq[String] =
-    fsOf(spark, srcDir).listStatus(new Path(srcDir))
+    Versioned.fsOf(spark, srcDir).listStatus(new Path(srcDir))
       .map(_.getPath.getName).filter(_.endsWith(".parquet"))
       .map(_.stripSuffix(".parquet")).toSeq.sorted
 
@@ -213,7 +215,7 @@ object CorpusDrop {
     val times = scala.collection.mutable.LinkedHashMap[String, Double]()
     def step(name: String)(body: String => Unit): String = {
       val out = s"$stage/$name"
-      if (!fsOf(spark, out).exists(new Path(out, "_SUCCESS"))) {
+      if (!Versioned.fsOf(spark, out).exists(new Path(out, "_SUCCESS"))) {
         val t0 = System.nanoTime()
         body(out)
         times(name) = (System.nanoTime() - t0) / 1e9
@@ -486,7 +488,7 @@ object CorpusDrop {
       spark.read.parquet(docsDir)
         .unionByName(spark.read.parquet(s"$stage/batch_docs"))
         .repartition(math.max(1,
-          BucketLayout.bucketsFor(fsOf(spark, docsDir)
+          BucketLayout.bucketsFor(Versioned.fsOf(spark, docsDir)
             .getContentSummary(new Path(docsDir)).getLength, 128L << 20)))
         .write.mode("overwrite").parquet(s"$genNext/documents.parquet")
     } else {
@@ -526,11 +528,9 @@ object CorpusDrop {
     Versioned.writeFile(spark, pointer(stateDir), nextGen.toString)
     // retention: the superseded generation survives one cycle (the
     // Versioned policy); anything older is dead
-    for (g <- 1 until baseGen) {
-      Seq(genDir(stateDir, g), artifactsDir(stateDir, g),
-        keepersDir(stateDir, g), yieldDir(stateDir, g))
-        .foreach(deleteRecursive(spark, _))
-    }
+    for (g <- 1 until baseGen; d <- Seq(genDir(stateDir, g),
+        artifactsDir(stateDir, g), keepersDir(stateDir, g), yieldDir(stateDir, g)))
+      deleteRecursive(spark, d)
   }
 
   /** CLI: init then drop.

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import java.nio.file.{Files, StandardCopyOption}
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Reader-atomic promotion — the one commit path for persisted state:
@@ -14,9 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * does: data is IMMUTABLE once written under `dir/v<N>/`, and the
   * only mutable state is a one-line pointer file `dir/_graft_current`
   * naming the live version. A rewrite lands completely in `v<N+1>`, is verified,
-  * and then the pointer flips via write-temp + single-file RENAME —
-  * atomic on POSIX and HDFS (`FileContext.rename(OVERWRITE)` is the
-  * Hadoop spelling of an atomic replace). A reader resolves the
+  * and then the pointer flips via write-temp + single-file RENAME
+  * ([[writeFile]]: one `rename(2)` on a local disk, an HDFS
+  * `FileContext.rename(OVERWRITE)` elsewhere). A reader resolves the
   * pointer ONCE and scans that version directory: it sees wholly the
   * old version or wholly the new one, never a mix and never a missing
   * path.
@@ -32,11 +33,11 @@ object Versioned {
 
   private val PointerName = "_graft_current"
 
-  /** The Hadoop FileSystem that `p` lives on — every state-dir
+  /** The Hadoop FileSystem that `path` lives on — every state-dir
     * operation goes through it, so a `file:` or `hdfs:` URI works like
     * a plain path. */
-  private[tools] def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[tools] def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def pointerPath(dir: String) = new Path(dir, PointerName)
 
@@ -47,31 +48,45 @@ object Versioned {
   def current(spark: SparkSession, dir: String): Option[Int] =
     readFile(spark, pointerPath(dir).toString).map(_.trim.toInt)
 
-  /** The text of the small state file at `path`, if it exists. */
+  /** `fs` without its `.crc` layer, if it is the local filesystem. */
+  private def raw(fs: FileSystem): FileSystem = fs match {
+    case l: LocalFileSystem => l.getRawFileSystem
+    case other => other
+  }
+
+  /** The text of the small state file at `path`, if it exists (read
+    * raw: [[writeFile]] writes local files with no `.crc`). */
   def readFile(spark: SparkSession, path: String): Option[String] = {
-    val p = new Path(path)
-    val fs = fsOf(spark, p)
+    val (p, fs) = (new Path(path), raw(fsOf(spark, path)))
     Option.when(fs.exists(p))(scala.util.Using.resource(fs.open(p))(in =>
       new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")))
   }
 
   /** Replace the small state file at `path` with `text` atomically:
     * write a sibling temp file, then rename it over `path`. A reader
-    * sees the old text or the new, never a truncated file. Every
-    * pointer, manifest and ledger file of the state layer is written
-    * through here. */
+    * sees the old text or the new, never a truncated or missing file.
+    * Every pointer, manifest and ledger file of the state layer is
+    * written through here. */
   def writeFile(spark: SparkSession, path: String, text: String): Unit = {
     val p = new Path(path)
     val tmp = new Path(p.getParent,
       s".${p.getName}_tmp_${java.util.UUID.randomUUID}")
-    val out = fsOf(spark, p).create(tmp, true)
+    val fs = fsOf(spark, path)
+    val out = raw(fs).create(tmp, true)
     try out.write(text.getBytes("UTF-8")) finally out.close()
-    // FileContext.rename with OVERWRITE is the atomic single-file
-    // replace (FileSystem.rename refuses an existing destination on
-    // some implementations, and delete+rename would re-open a window)
-    FileContext.getFileContext(p.toUri,
-      spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
+    fs match {
+      // LocalFs's rename(OVERWRITE) deletes the target first and moves
+      // the file and its .crc in two steps; locally the raw temp (an
+      // old sidecar dropped first) is promoted by one rename(2)
+      case l: LocalFileSystem =>
+        raw(l).delete(l.getChecksumFile(p), false)
+        Files.move(l.pathToFile(tmp).toPath, l.pathToFile(p).toPath,
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      // elsewhere (HDFS) rename with OVERWRITE is the atomic replace
+      case _ => FileContext.getFileContext(p.toUri,
+        spark.sparkContext.hadoopConfiguration)
+        .rename(tmp, p, Options.Rename.OVERWRITE)
+    }
   }
 
   /** The directory a reader should scan: the live version dir if a
@@ -88,19 +103,13 @@ object Versioned {
     * versions older than the one just superseded. */
   private def commit(spark: SparkSession, dir: String, v: Int): Unit = {
     writeFile(spark, pointerPath(dir).toString, v.toString)
-    val fs = fsOf(spark, new Path(dir))
-    // keep v-1 for in-flight readers; drop anything older — including
-    // the pre-versioned FLAT data files, which count as "version 0"
-    // and so are dropped once v2 lands. Staging debris for versions
-    // STRICTLY BELOW v is also dead: a writer staging
-    // `.staging/v<k>_tmp_*`, k < v, can never win its claim rename
-    // (v<k> was superseded), so its leftovers are safe to GC here.
-    // k == v staging dirs are NOT touched (ADVICE r10): one may be a
-    // concurrent publisher still writing — it will lose its claim and
-    // delete its own staging on the clean 'already landed' abort, and
-    // deleting it mid-write here would turn that into an arbitrary IO
-    // error. A CRASHED k == v attempt is GC'd by the next commit,
-    // when k < v holds.
+    val fs = fsOf(spark, dir)
+    // keep v-1 for in-flight readers; drop anything older, including
+    // the flat pre-versioned files ("version 0", dropped once v2
+    // lands). Staging `.staging/v<k>_tmp_*` with k < v can never win
+    // its claim, so it is dead; k == v is left alone (ADVICE r10): it
+    // may be a concurrent publisher still writing, which cleans up on
+    // its own abort. A crashed k == v attempt goes at the next commit.
     fs.listStatus(new Path(dir)).foreach { st =>
       val n = st.getPath.getName
       val isOldVersion = n.startsWith("v") && n.drop(1).nonEmpty &&
@@ -133,27 +142,19 @@ object Versioned {
     *
     * Writer coordination (ADVICE r9): the writer stages into a
     * UUID-named temp dir, and claiming the version number is ONE
-    * atomic directory rename (`tmp → v<N>`), which fails if another
-    * publisher already landed v<N> — so two concurrent publishers
-    * computing the same `next` can never interleave: exactly one
-    * wins, the loser throws with the live pointer untouched, and
-    * nobody ever deletes a directory another writer is filling (the
-    * old delete-then-write cleared debris ANY concurrent writer might
-    * still be producing). A crashed attempt's staging dir is GC'd by
-    * the first commit that SUPERSEDES its version number (k < live;
-    * same-version staging gets a grace window because it may be a
-    * live concurrent publisher — ADVICE r10). */
+    * directory rename (`tmp → v<N>`) that fails if v<N> already
+    * landed — of two concurrent publishers exactly one wins, the loser
+    * throws with the live pointer untouched, and nobody deletes a dir
+    * another writer is filling. A crashed attempt's staging dir is
+    * GC'd by the first commit that supersedes its version. */
   def publish(spark: SparkSession, dir: String)(
       writer: String => Unit)(verify: String => Unit = _ => ()): Int = {
     val next = current(spark, dir).getOrElse(0) + 1
     val target = new Path(versionDir(dir, next))
-    val fs = fsOf(spark, target)
+    val fs = fsOf(spark, dir)
     // staging lives under a DOT-prefixed parent so a flat (pre-v1)
-    // reader scanning `dir` never lists in-progress files, while the
-    // staging dir's own leaf name stays visible — verify() can
-    // spark.read it without tripping the hidden-path filter (the old
-    // `.v<N>_tmp_*` flat siblings made every verify read log
-    // "All paths were ignored")
+    // reader never lists in-progress files, while its own leaf name
+    // stays visible to verify()'s spark.read (hidden-path filter)
     fs.mkdirs(new Path(dir, StagingDirName))
     val staging = new Path(new Path(dir, StagingDirName),
       s"v${next}_tmp_${java.util.UUID.randomUUID}")

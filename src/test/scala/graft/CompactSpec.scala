@@ -202,4 +202,32 @@ class CompactSpec extends SparkSpec {
     assert(Versioned.read(spark, dir).agg(sum($"id")).head.getLong(0)
       === (0L until 10000L).sum)
   }
+
+  test("writeFile is reader-atomic: a concurrent reader never sees a missing or torn file") {
+    import graft.tools.Versioned
+    val dir = java.nio.file.Files.createTempDirectory("statefile")
+    val path = s"file:$dir/_state"
+    def text(i: Int) = s"$i:" + "x" * 4096
+    val Whole = """(\d+):x{4096}""".r
+    Versioned.writeFile(spark, path, text(0))
+    @volatile var writing = true
+    // bad read kind -> count; touched by the reader only until join()
+    val bad = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    var reads = 0
+    val reader = new Thread(() => while (writing) {
+      reads += 1
+      scala.util.Try(Versioned.readFile(spark, path)) match {
+        case scala.util.Success(Some(Whole(_))) =>
+        case other => bad(other.toString.take(120)) += 1
+      }
+    })
+    reader.start()
+    try (1 to 300).foreach(i => Versioned.writeFile(spark, path, text(i)))
+    finally { writing = false; reader.join() }
+    assert(bad.isEmpty, s"reader saw a missing, torn or unreadable file: $bad")
+    assert(reads > 0)
+    assert(Versioned.readFile(spark, path).contains(text(300)))
+    assert(dir.toFile.list().toSeq == Seq("_state"),
+      "no temp file or .crc sidecar is left behind")
+  }
 }

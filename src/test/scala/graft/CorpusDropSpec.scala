@@ -1,6 +1,6 @@
 package graft
 
-import graft.tools.{Artifacts, CorpusDrop}
+import graft.tools.{Artifacts, CorpusDrop, Versioned}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -96,6 +96,15 @@ class CorpusDropSpec extends SparkSpec {
     // artifacts (including hardlink+delta bucketed appends) with zero
     // derivations, and reproduce the combined-corpus results
     val gen2 = CorpusDrop.genDir(state, 2)
+    // hardlinked and delta files keep their .crc sidecars, so every
+    // generation stays checksum-verified
+    for (dir <- Seq(s"$gen2/documents.parquet",
+        Versioned.resolve(spark, s"${CorpusDrop.artifactsDir(state, 2)}/signatures"))) {
+      val names = new java.io.File(dir).list().toSet
+      val parquet = names.filter(_.endsWith(".parquet"))
+      assert(parquet.nonEmpty && parquet.forall(n => names(s".$n.crc")),
+        s"every parquet file in $dir needs its .crc: ${names.toSeq.sorted}")
+    }
     SweepCheck.clearSessionArtifacts(spark)
     Artifacts.attach(spark, CorpusDrop.artifactsDir(state, 2))
     try {
