@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.tools.Checkpoints
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,9 +25,9 @@ import org.apache.spark.sql.functions._
   *    dictionary.
   *
   * Rounds are a fixed budget (vocab size is a hyperparameter, not
-  * data-dependent), so the job is k deterministic stages. The symbol
-  * state is localCheckpoint'd per round like every other iterative
-  * artifact in this repo (Lloyd rounds, CC rounds, PageRank rounds).
+  * data-dependent), so the job is at most k deterministic stages
+  * (fewer once no pair is left), on [[Checkpoints.iterate]] like the
+  * graph loops.
   *
   * BpeSpec pins the classic hand-computable corpus and determinism;
   * there is no SQL oracle — replaying an iterative argmax-merge in
@@ -73,12 +74,15 @@ object BpeTrainer {
       .filter(length($"w") > 0)
       .groupBy($"w").agg(count(lit(1)).as("n"))
       .as[(String, Long)]
-    var syms: Dataset[(Seq[String], Long)] = words
+    // a plain (untapped) localCheckpoint: the plan audit would count
+    // the tapped aggregate's Exchange
+    val init = words
       .map { case (w, n) => (initialSymbols(w), n) }
-      .localCheckpoint(true)
+      .localCheckpoint(true).toDF()
 
     val merges = Seq.newBuilder[Merge]
-    for (rank <- 0 until k) {
+    val (last, _) = Checkpoints.iterate(init, k) { (state, round) =>
+      val syms = state.as[(Seq[String], Long)]
       val best = syms.flatMap { case (ss, n) =>
         ss.zip(ss.tail).map(p => (p._1, p._2, n))
       }
@@ -87,14 +91,14 @@ object BpeTrainer {
         .orderBy($"cnt".desc, $"l", $"r")
         .limit(1)
         .collect()
-      if (best.nonEmpty) {
-        val row = best.head
+      // None once every word is one symbol: no pair is left
+      best.headOption.map { row =>
         val (l, r, c) = (row.getString(0), row.getString(1), row.getLong(2))
-        merges += Merge(rank, l, r, c)
-        syms = syms.map { case (ss, n) => (rewrite(ss, l, r), n) }
-          .localCheckpoint(true)
+        merges += Merge(round - 1, l, r, c)
+        syms.map { case (ss, n) => (rewrite(ss, l, r), n) }.toDF()
       }
     }
+    Seq(init, last).foreach(Checkpoints.release) // merges are on the driver
     merges.result()
   }
 

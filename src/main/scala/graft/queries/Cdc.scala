@@ -3,7 +3,7 @@ package graft.queries
 import graft.{GraftQuery, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.tools.SessionCache
+import graft.tools.{Checkpoints, SessionCache}
 import graft.tools.Checkpoints.SerCheckpoint
 import org.apache.spark.sql.graft.ArgMax2
 
@@ -434,12 +434,7 @@ object Cdc {
     // and never spilled at sf10 under either storage level — so the
     // serialized insurance only charged ser/deser to every round
     // (+27% at sf10, BASELINE.md r11 trade note)
-    // per-run scratch: the output's lazy lineage reads these, so they
-    // cannot be released inside the builder — registered for release
-    // after the runner materializes. Left resident they stacked one
-    // DESERIALIZED E-scale generation per bench pass (the r12 sf10
-    // regression: triangles +107% running right after this query)
-    val edges0 = graft.tools.Checkpoints.defer(
+    val edges0 = Checkpoints.defer(
       e0.union(e0.select($"b".as("a"), $"a".as("b")))
         // dedup rides the layout exchange (hash(a) clusters (a, b));
         // accepts raw OR already-distinct input — dropDuplicates is
@@ -447,7 +442,7 @@ object Cdc {
         // halves disjoint, so dedup-after-doubling == doubling-after-dedup
         .repartition(parts, $"a").dropDuplicates().sortWithinPartitions($"a")
         .deserCheckpoint())
-    val deg = graft.tools.Checkpoints.defer(
+    val deg = Checkpoints.defer(
       edges0.groupBy($"a").agg(count(lit(1)).as("deg"))
         .sortWithinPartitions($"a")
         .deserCheckpoint())
@@ -458,11 +453,11 @@ object Cdc {
     // constants — instead of paying a V-scale pr ⋈ deg join + sort
     // per round (guide §2.4: two operations keyed the same way share
     // one exchange; here the join moves out of the loop entirely).
-    val edges = graft.tools.Checkpoints.defer(
+    val edges = Checkpoints.defer(
       edges0.join(deg.select($"a", $"deg"), Seq("a"))
         .select($"a", $"b", $"deg")
         .deserCheckpoint()) // a-keyed join output: layout (a, n) + a-sorted kept
-    graft.tools.Checkpoints.release(edges0)
+    Checkpoints.release(edges0)
     var pr = deg.select($"a".as("node"), lit(1000000L).as("pr"))
     for (_ <- 1 to 3) {
       pr = edges.join(pr, edges("a") === pr("node"))
@@ -625,7 +620,7 @@ object Cdc {
     // both onto orderkey — one orderkey-keyed checkpoint (dedup rides
     // the layout exchange, pagerankOver discipline) makes the
     // co-occurrence self-join scan-once and exchange-free.
-    val os = graft.tools.Checkpoints.defer(
+    val os = Checkpoints.defer(
       Tables.lineitem(s, d).select($"l_orderkey", $"l_suppkey")
         .repartition(n, $"l_orderkey").dropDuplicates()
         .sortWithinPartitions($"l_orderkey")
@@ -657,7 +652,7 @@ object Cdc {
       // one bounded n·k-scale re-key makes the wedge join exchange-
       // and sort-free on both sides.
       val n = Tables.scaledPartitions(s, d, Seq("lineitem"))
-      val edges = graft.tools.Checkpoints.defer(
+      val edges = Checkpoints.defer(
         supplierTopKEdges(s, d, 5)
           .repartition(n, $"x").sortWithinPartitions($"x", $"y")
           .serCheckpoint()) // three probe sides of one per-run artifact
@@ -787,10 +782,7 @@ object Cdc {
     // sort spills gracefully (a forced shuffle_hash build aborts
     // outright when a coalesced partition outgrows task memory —
     // measured at sf10 on this very join)
-    // per-run scratch (the pagerankOver discipline): registered for
-    // post-materialization release — edges is E-scale and retained
-    // for the loop's whole life
-    val edges = graft.tools.Checkpoints.defer(e0
+    val edges = Checkpoints.defer(e0
       .union(e0.select($"b".as("a"), $"a".as("b"), $"w"))
       .repartition(parts, $"b").sortWithinPartitions($"b")
       .serCheckpoint())
@@ -799,7 +791,7 @@ object Cdc {
     // keeps map-side partial agg (E→V before the wire), then ONE
     // V-scale explicit re-key pins HashPartitioning(a, n) — paid once
     // at build, saving the per-round re-shuffle of both join sides.
-    val selfW = graft.tools.Checkpoints.defer(
+    val selfW = Checkpoints.defer(
       edges.groupBy($"a").agg(max($"w").as("sw"), count(lit(1)).as("dg"))
         .repartition(parts, $"a").sortWithinPartitions($"a")
         .serCheckpoint())
@@ -819,16 +811,17 @@ object Cdc {
     val degStats = selfW.agg(sum($"dg"), max($"dg")).first
     val hotGather = !degStats.isNullAt(1) &&
       degStats.getLong(1) > 4L * math.max(1L, degStats.getLong(0) / parts)
-    var lab = selfW.select($"a".as("node"), $"a".as("lab"))
-    var prevLab: Option[DataFrame] = None
-    for (_ <- 1 to 3) {
+    // 3 materialized rounds (the next reads its labels twice: neighbor
+    // gather + self-vote); the last feeds the output, so it is deferred
+    val lab0 = selfW.select($"a".as("node"), $"a".as("lab"))
+    val (lab, _) = Checkpoints.iterate(lab0, 3) { (lab, _) =>
       val fromNeighbors = edges
         .join(lab.select($"node".as("bn"), $"lab"), $"b" === $"bn")
         .select($"a".as("node"), $"lab", $"w")
       val fromSelf = lab.join(selfW, $"node" === selfW("a"))
         .select($"node", $"lab", $"sw".as("w"))
       val votes = fromNeighbors.union(fromSelf)
-      val argmaxed =
+      Some(
         if (hotGather)
           // skew-proof gather: the raw exchange keys on (node, lab) —
           // a hot node's votes spread across its labels' hash range —
@@ -860,22 +853,9 @@ object Cdc {
           .groupBy($"node", $"lab").agg(sum($"w").as("wt"))
           .groupBy($"node")
           .agg(ArgMax2.of($"wt", -$"lab").as("m"))
-          .select($"node", (-$"m.tie").as("lab"))
-      lab = argmaxed
-        // materialize per round: the next round reads lab twice
-        // (neighbor gather + self-vote) and the lazy lineage would
-        // re-execute every prior round once per consumer. Registered
-        // as scratch too — the FINAL round feeds the output, so only
-        // the runner's post-materialization drain can free it
-        // (superseded rounds are still released eagerly below;
-        // double-release is a no-op)
-        .serCheckpoint()
-      lab = graft.tools.Checkpoints.defer(lab)
-      // the new round is materialized — the superseded round's label
-      // blocks are dead; keep retention O(1) rounds, not O(rounds)
-      prevLab.foreach(graft.tools.Checkpoints.release)
-      prevLab = Some(lab)
+          .select($"node", (-$"m.tie").as("lab")))
     }
+    Checkpoints.defer(lab)
     val sizes = lab.groupBy($"lab").agg(count(lit(1)).as("community_size"))
     lab.join(sizes, "lab")
       .select(decodeNode("node").as("node"),
@@ -1002,19 +982,12 @@ object Cdc {
     * doubles as the alive set (one row per surviving node), so the
     * unrolled per-round-recompute oracle hashes identically.
     *
-    * An EMPTY peel is a fixpoint and terminates the loop: the peel
-    * condition reads only `deg`, and a round that peels nothing
-    * changes neither `deg` nor `edges`, so every later round peels
-    * nothing too — identical output, and the bounded-round contract
-    * ("peel at most `maxRounds` times") is unchanged. This is where the
-    * sf10 time actually went: at k=10 the cascade settles after one
-    * small peel (8,100 of 1.6M nodes, rounds 2–3 empty), yet each
-    * no-op round still paid two edge-scale anti-join scans AND a full
-    * edge re-checkpoint — measured 201s → the early exit removes
-    * 2/3 of the round work. (The round-2 degree-aggregate hypothesis
-    * the r11 verdict floated measured WORSE when tried — the per-round
-    * aggregate was exchange-free all along; see the `lost` join note
-    * for the shuffle-direction lesson.) */
+    * An EMPTY peel is a fixpoint and ends the loop: the peel condition
+    * reads only `deg`, which a round that peels nothing leaves as it
+    * is, so every later round would peel nothing too — identical
+    * output under the same bounded-round contract. At sf10 k=10 the
+    * cascade settles after one small peel (8,100 of 1.6M nodes), and
+    * the early exit removed 2/3 of the round work (201 s before). */
   private[graft] def kcoreOver(s: org.apache.spark.sql.SparkSession,
       e0: DataFrame, k: Int, maxRounds: Int, parts: Int): DataFrame = {
     import s.implicits._
@@ -1043,34 +1016,23 @@ object Cdc {
       .repartition(parts, $"a").dropDuplicates().sortWithinPartitions($"a")
       .serCheckpoint()
     // the ONLY full-graph degree aggregate (exchange-free over the
-    // pre-partitioned list); rounds maintain it by delta. The final
-    // deg and the peeled slices feed the OUTPUT, so they are deferred
-    // to the runner's post-materialization drain (superseded rounds
-    // still release eagerly in-loop)
-    var deg = graft.tools.Checkpoints.defer(
-      edges.groupBy($"a").agg(count(lit(1)).as("dg"))
-        .serCheckpoint())
+    // pre-partitioned list); rounds maintain it by delta. The degree
+    // tables and the peeled slices feed the OUTPUT: deferred
+    val deg0 = Checkpoints.defer(
+      edges.groupBy($"a").agg(count(lit(1)).as("dg")).serCheckpoint())
     // long-encoded ids through the whole peel; decoded once at output
-    var out: DataFrame = Seq.empty[(Long, Int, Long)]
-      .toDF("node", "peel_round", "deg")
-    var r = 1
-    var settled = false
-    while (!settled && r <= maxRounds) {
-      // checkpoint the (small) peeled slice so `out` reads round-sized
-      // blocks and the delta join probes a materialized table
-      val peeled = graft.tools.Checkpoints.defer(
-        deg.filter($"dg" < k)
-          .select($"a".as("node"), lit(r).as("peel_round"), $"dg".as("deg"))
-          .serCheckpoint())
-      if (peeled.isEmpty) {
-        // fixpoint: `deg` is untouched, so rounds r+1..maxRounds would
-        // all peel nothing — stop paying for them (measured: at sf10
-        // k=10 settles after one 8,100-node peel; rounds 2–3 were
-        // pure no-op cost)
-        settled = true
-        graft.tools.Checkpoints.release(peeled)
+    val peels = Seq.newBuilder[DataFrame]
+    val (deg, _) = Checkpoints.iterate(deg0, maxRounds) { (deg, r) =>
+      // checkpoint the (small) peeled slice so the output reads
+      // round-sized blocks and the delta join probes a materialized table
+      val peeled = Checkpoints.defer(deg.filter($"dg" < k)
+        .select($"a".as("node"), lit(r).as("peel_round"), $"dg".as("deg"))
+        .serCheckpoint())
+      if (peeled.isEmpty) { // the fixpoint (see the scaladoc)
+        Checkpoints.release(peeled)
+        None
       } else {
-        out = out.unionByName(peeled)
+        peels += peeled
         // frontier delta: how many edges each node loses to this
         // peel. Probe from the PEELED side of the symmetric list: the
         // join keys on `a` (the edge partitioning key — aligned,
@@ -1088,20 +1050,15 @@ object Cdc {
         // survivors-only update: `lost` rows keyed by peeled nodes
         // (either round) miss the dg >= k slice and vanish — exactly
         // the edges that must not count
-        val degNext = graft.tools.Checkpoints.defer(
-          deg.filter($"dg" >= k)
-            .join(lost, Seq("a"), "left")
-            .select($"a", ($"dg" - coalesce($"lost", lit(0L))).as("dg"))
-            .serCheckpoint())
-        // superseded degree table is dead; edges and the peeled
-        // slices stay live (edges feeds every round's probe, peeled
-        // blocks feed the final union)
-        graft.tools.Checkpoints.release(deg)
-        deg = degNext
-        r += 1
+        Some(deg.filter($"dg" >= k).join(lost, Seq("a"), "left")
+          .select($"a", ($"dg" - coalesce($"lost", lit(0L))).as("dg")))
       }
     }
-    graft.tools.Checkpoints.release(edges)
+    Checkpoints.defer(deg)
+    Checkpoints.release(edges)
+    val out = peels.result().foldLeft(
+      Seq.empty[(Long, Int, Long)].toDF("node", "peel_round", "deg"))(
+      _.unionByName(_))
     // deg IS the survivors' residual degree table — no final aggregate
     out.unionByName(
         deg.select($"a".as("node"), lit(0).as("peel_round"), $"dg".as("deg")))

@@ -3,7 +3,7 @@ package graft.queries
 import graft.{GraftQuery, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.tools.{Artifacts, SessionCache}
+import graft.tools.{Artifacts, Checkpoints, SessionCache}
 import graft.tools.Checkpoints.SerCheckpoint
 import org.apache.spark.sql.graft.ArgMax2
 
@@ -186,7 +186,8 @@ object Dedup {
     artifact(clusterCache, "clusters", s, d)(
       connectedComponents(
         pairsFromSignatures(sessionSignatures(s, d))
-          .select(col("doc_a"), col("doc_b")))
+          .select(col("doc_a"), col("doc_b")),
+        Tables.scaledPartitions(s, d, Seq("documents")))
         .select(col("node").as("doc_id"), col("label").as("cluster_id")))
 
   /** Session-scoped per-doc shingle-hash set table — the third
@@ -264,13 +265,16 @@ object Dedup {
     * detected by counting rows whose label changed this round — one
     * scalar per round on the driver, never the label table, and
     * immune to the (theoretical) sum-collision a label-sum check
-    * admits. Each round's result is localCheckpoint'd: the lineage
-    * would otherwise double per iteration.
+    * admits. Rounds run on [[Checkpoints.iterate]]. `parts` is the
+    * layout's input-scaled count ([[Tables.scaledPartitions]] over the
+    * table the pairs come from).
     *
     * An empty pair frame returns an empty label frame (no NPE on the
     * null sum); a component with diameter > maxRounds throws rather
-    * than silently returning unconverged labels. */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
+    * than silently returning unconverged labels. The returned labels
+    * are their own checkpoint, owned by the caller. */
+  def connectedComponents(pairs: DataFrame, parts: Int,
+      maxRounds: Int = 20): DataFrame = {
     // probe-key pre-partitioning + pre-sort (the lpaOver discipline):
     // the pair graph crosses the wire once and is sorted once, not
     // once per round — each round's SMJ only shuffles+sorts the
@@ -279,47 +283,47 @@ object Dedup {
     // only declarable layout the per-round join can align to — the
     // coalescible form re-shuffled AND re-sorted the edge checkpoint
     // into every round's SMJ.
-    val n = pairs.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "200").toInt
     val edges = pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(n, col("dst")).sortWithinPartitions(col("dst"))
+      .repartition(parts, col("dst")).sortWithinPartitions(col("dst"))
       .serCheckpoint()
     // dedup rides the node-keyed layout exchange (pagerankOver
     // discipline), and the declared (node, n) layout makes every
     // round's label-side join exchange-free
-    var labels = edges.select(col("src").as("node"))
-      .repartition(n, col("node")).dropDuplicates()
+    val init = edges.select(col("src").as("node"))
+      .repartition(parts, col("node")).dropDuplicates()
       .sortWithinPartitions(col("node"))
       .withColumn("label", col("node"))
       .serCheckpoint()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val nbrMin = edges.join(labels, edges("dst") === labels("node"))
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-      val next = labels.join(nbrMin, labels("node") === nbrMin("src"), "left")
-        .select(labels("node"), labels("label").as("prev_label"),
-          least(col("label"), coalesce(col("nbr_min"), col("label")))
-            .as("label"))
-        .serCheckpoint()
-      converged =
-        next.filter(col("label") =!= col("prev_label")).count() == 0
-      // `next` is materialized — the superseded round's label blocks
-      // are dead; keep retention O(1) rounds (Checkpoints scaladoc)
-      graft.tools.Checkpoints.release(labels)
-      labels = next.select(col("node"), col("label"))
-      rounds += 1
+    // a round's state keeps the labels it replaced: the next round
+    // first counts the changed rows (one scalar) and stops at zero
+    def changed(state: DataFrame): Long =
+      state.filter(col("label") =!= col("prev_label")).count()
+    val (last, rounds) = Checkpoints.iterate(init, maxRounds) { (st, r) =>
+      if (r > 1 && changed(st) == 0) None
+      else {
+        val labels = st.select(col("node"), col("label"))
+        val nbrMin = edges.join(labels, edges("dst") === labels("node"))
+          .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
+        Some(labels.join(nbrMin, labels("node") === nbrMin("src"), "left")
+          .select(labels("node"), labels("label").as("prev_label"),
+            least(col("label"), coalesce(col("nbr_min"), col("label")))
+              .as("label")))
+      }
     }
-    // the labels are their own checkpoint: nothing reads the edges now
-    graft.tools.Checkpoints.release(edges)
-    if (!converged)
+    // a stop before the cap counted zero; at the cap, count the last
+    val converged = rounds < maxRounds || changed(last) == 0
+    // the labels are their own checkpoint: edges and init are dead
+    Seq(edges, init).foreach(Checkpoints.release)
+    if (!converged) {
+      Checkpoints.release(last)
       throw new IllegalStateException(
         s"connectedComponents: not converged after $maxRounds rounds " +
           "(component diameter exceeds maxRounds); raise maxRounds — " +
           "refusing to return truncated cluster labels")
-    labels
+    }
+    last.select(col("node"), col("label"))
   }
 
   /** Duplicate clusters: connected components over the LSH candidate
@@ -693,7 +697,7 @@ object Dedup {
       // within a group, so the winner and its n_tok are unchanged.
       // The isnotnull(fp) filter mirrors the old inner join's key
       // semantics (null-text docs drop out entirely, as before).
-      val chunks = graft.tools.Checkpoints.defer(
+      val chunks = Checkpoints.defer(
         Tables.documents(s, d)
           .select($"doc_id", split(trim($"text"), "\\s+").as("toks"))
           .select($"doc_id", $"toks", size($"toks").as("n_toks"))
@@ -1376,7 +1380,7 @@ object Dedup {
     // the deduped catalog is read by the gram path, both sidecar sides
     // and nothing else — materialize it once (the persisted-artifact
     // shape, same as HammingBands' sketch table)
-    val names = names0.localCheckpoint(true)
+    val names = Checkpoints.defer(names0.localCheckpoint(true))
     fuzzyCandidates(s, names, tau)
       .filter(abs(length(col("name_a")) - length(col("name_b"))) <= tau)
       .select(col("name_a"), col("name_b"),
@@ -1411,11 +1415,12 @@ object Dedup {
   val qFuzzyCanonical = GraftQuery(
     "dd_fuzzy_canonical",
     (s, d) => {
-      val names = Tables.part(s, d)
-        .select(col("p_name").as("name")).distinct().localCheckpoint(true)
+      val names = Checkpoints.defer(Tables.part(s, d)
+        .select(col("p_name").as("name")).distinct().localCheckpoint(true))
       val pairs = fuzzyJoin(s, names, tau = 1)
         .select(col("name_a").as("doc_a"), col("name_b").as("doc_b"))
-      val labels = connectedComponents(pairs)
+      val labels = Checkpoints.defer(connectedComponents(pairs,
+        Tables.scaledPartitions(s, d, Seq("part"))))
         .withColumnRenamed("node", "name")
       names.join(labels, Seq("name"), "left")
         .select(col("name"),

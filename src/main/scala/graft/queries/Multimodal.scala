@@ -168,7 +168,8 @@ object Multimodal {
         nBands = 4, bandBits = 15, cap = 256, theta = 3)
         .filter($"is_dup")
         .select($"doc_a", $"doc_b")
-      val labels = Dedup.connectedComponents(dupPairs)
+      val labels = graft.tools.Checkpoints.defer(Dedup.connectedComponents(
+        dupPairs, Tables.scaledPartitions(s, d, Seq("documents"))))
         .withColumnRenamed("node", "doc_id")
       Tables.documents(s, d).select($"doc_id")
         .join(labels, Seq("doc_id"), "left")
@@ -236,7 +237,7 @@ object Multimodal {
     * hash-equality with the full recompute, at O(E·diameter);
     * negative tests confirm each corruption class flips its check. */
   private[graft] def crossmodalKeepList(
-      docs: org.apache.spark.sql.DataFrame)
+      docs: org.apache.spark.sql.DataFrame, parts: Int)
       : org.apache.spark.sql.DataFrame = {
     // ONE documents scan computes BOTH sketches (round 16): the two
     // nearDupPairs calls each re-read the text column and re-ran their
@@ -260,8 +261,8 @@ object Multimodal {
       dups("sh_vis").serCheckpoint())
     val txt = graft.tools.Checkpoints.defer(
       dups("sh_txt").serCheckpoint())
-    val labels = Dedup.connectedComponents(
-      vis.unionByName(txt).distinct())
+    val labels = graft.tools.Checkpoints.defer(Dedup.connectedComponents(
+      vis.unionByName(txt).distinct(), parts))
       .withColumnRenamed("node", "doc_id")
     def touched(pairs: org.apache.spark.sql.DataFrame, flag: String) =
       pairs.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
@@ -279,7 +280,8 @@ object Multimodal {
 
   val qCrossmodalKeepList = GraftQuery(
     "mm_crossmodal_keep_list",
-    (s, d) => crossmodalKeepList(Tables.documents(s, d)),
+    (s, d) => crossmodalKeepList(Tables.documents(s, d),
+      Tables.scaledPartitions(s, d, Seq("documents"))),
     Some(s"""
       WITH RECURSIVE ${phashShCtes("v_")},
       ${graft.operators.HammingBands.oracleBandCtes(

@@ -1,23 +1,30 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.LayoutCheckpoint
+import org.apache.spark.storage.StorageLevel
 
 /** Targeted release of localCheckpoint storage inside iterative
   * loops.
   *
-  * Every Pregel-lite loop here (k-core peel, LPA, connected
-  * components) materializes per-round tables with
-  * `localCheckpoint(true)` so the next round's plan reads blocks
-  * instead of replaying the whole prior lineage. But a checkpoint's
-  * blocks live until the RDD is unpersisted — so a loop that never
-  * releases superseded rounds retains O(rounds × graph) storage, and
-  * every re-execution (each bench pass re-runs the builder) stacks a
-  * fresh generation on top. Measured at sf10: the graph bench
-  * queries dragged 16–90 GB of memory spill each, and a repeated
-  * 21-query sweep OOM'd a 24 GB heap — storage pressure, not the
-  * per-round shuffles, was the cost. Releasing each round's dead
-  * tables bounds retention at O(current graph + output), which is
-  * the shape that survives 100 TB.
+  * Every loop that materializes distributed state once per round
+  * (the k-core peel, LPA, connected components, BPE training) runs on
+  * [[Checkpoints.iterate]], the one per-round loop, so the next
+  * round's plan reads blocks instead of replaying the prior lineage.
+  * A checkpoint's blocks live until the RDD is unpersisted, so a loop
+  * that never releases superseded rounds retains O(rounds × graph)
+  * storage, and every re-execution (each bench pass re-runs the
+  * builder) stacks a fresh generation on top. Measured at sf10: the
+  * graph bench queries dragged 16–90 GB of memory spill each, and a
+  * repeated 21-query sweep OOM'd a 24 GB heap. `iterate` releases
+  * each round once its successor is materialized, bounding retention
+  * at O(current graph + output). The caller owns `init` (the loop
+  * never releases it: it may be a projection of a table later rounds
+  * still read) and the last state (it typically feeds the output, so
+  * it is [[defer]]red to the runner's drain or returned). PageRank
+  * stays a fold: its rounds form one lazy plan, nothing per round.
   *
   * Contract: call `release` ONLY on the exact DataFrame returned by
   * `localCheckpoint` (its plan is the one checkpoint's LogicalRDD),
@@ -40,7 +47,7 @@ object Checkpoints {
     * Serialized blocks trade one deserialization per consumer stage
     * for that headroom. Session-cached ARTIFACTS probed many times
     * stay deserialized — their read count amortizes the footprint. */
-  implicit class SerCheckpoint[T](private val ds: org.apache.spark.sql.Dataset[T]) {
+  implicit class SerCheckpoint[T](private val ds: Dataset[T]) {
     // Both variants route through LayoutCheckpoint (round 15): under
     // AQE, Dataset.localCheckpoint forgets the materialized hash
     // partitioning + per-partition sort (LogicalRDD reads
@@ -50,12 +57,8 @@ object Checkpoints {
     // checkpoint. The cast is sound at every call site (all frames are
     // untyped DataFrames); a typed Dataset would need its encoder
     // re-attached.
-    def serCheckpoint(): org.apache.spark.sql.Dataset[T] = {
-      tapPlan(ds)
-      org.apache.spark.sql.graft.LayoutCheckpoint.checkpoint(ds,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        .asInstanceOf[org.apache.spark.sql.Dataset[T]]
-    }
+    def serCheckpoint(): Dataset[T] =
+      checkpointAt(StorageLevel.MEMORY_AND_DISK_SER)
 
     /** Deserialized variant for loops that re-read their checkpoints
       * every round but whose TOTAL retained footprint stays well under
@@ -68,11 +71,12 @@ object Checkpoints {
       * level only cost it ser/deser (+27% at sf10, BASELINE.md r11
       * trade note). The storage level is per-loop: deserialized where
       * the loop's retained state provably fits, serialized elsewhere. */
-    def deserCheckpoint(): org.apache.spark.sql.Dataset[T] = {
+    def deserCheckpoint(): Dataset[T] =
+      checkpointAt(StorageLevel.MEMORY_AND_DISK)
+
+    private def checkpointAt(level: StorageLevel): Dataset[T] = {
       tapPlan(ds)
-      org.apache.spark.sql.graft.LayoutCheckpoint.checkpoint(ds,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        .asInstanceOf[org.apache.spark.sql.Dataset[T]]
+      LayoutCheckpoint.checkpoint(ds, level).asInstanceOf[Dataset[T]]
     }
   }
 
@@ -90,7 +94,7 @@ object Checkpoints {
     * their consumers. */
   @volatile private[graft] var planTap: Option[String => Unit] = None
 
-  private def tapPlan(ds: org.apache.spark.sql.Dataset[_]): Unit =
+  private def tapPlan(ds: Dataset[_]): Unit =
     planTap.foreach(f => f(ds.queryExecution.executedPlan.toString))
 
   /** Pin a BOUNDED table as a driver-local relation: collect and
@@ -156,24 +160,20 @@ object Checkpoints {
     * the SparkContext, so an undrained session's entry becomes
     * collectable the moment the session itself is unreachable. */
   private val deferred =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.ArrayList[org.apache.spark.rdd.RDD[_]]]
+    new java.util.WeakHashMap[SparkSession, java.util.ArrayList[RDD[_]]]
 
   /** Register a scratch checkpoint for release at the next
     * [[drainDeferred]]; returns the frame unchanged so call sites
     * wrap construction. The checkpointed RDDs are extracted HERE (the
     * frame's plan is already the checkpoint's LogicalRDD at every
     * call site), so the registry holds no Dataset reference. Double-
-    * release (e.g. a loop already released a superseded round
-    * eagerly) is a no-op at the RDD layer. */
-  def defer[T](ds: org.apache.spark.sql.Dataset[T]): ds.type = {
-    val rdds = ds.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
+    * release is a no-op at the RDD layer. */
+  def defer[T](ds: Dataset[T]): ds.type = {
+    val rdds = checkpointedRdds(ds)
     deferred.synchronized {
       var l = deferred.get(ds.sparkSession)
       if (l == null) {
-        l = new java.util.ArrayList[org.apache.spark.rdd.RDD[_]]
+        l = new java.util.ArrayList[RDD[_]]
         deferred.put(ds.sparkSession, l)
       }
       rdds.foreach(l.add(_))
@@ -184,7 +184,7 @@ object Checkpoints {
   /** Release every scratch checkpoint registered for `s` since the
     * last drain. Call ONLY after the current query's result has been
     * fully materialized. Returns the number of RDDs drained. */
-  def drainDeferred(s: org.apache.spark.sql.SparkSession): Int = {
+  def drainDeferred(s: SparkSession): Int = {
     val l = deferred.synchronized(deferred.remove(s))
     if (l == null) 0
     else {
@@ -194,11 +194,35 @@ object Checkpoints {
     }
   }
 
+  /** The one per-round loop (see the object scaladoc): `step(state,
+    * round)` builds round `round`'s state (1-based) or returns None to
+    * stop. Each state is materialized with
+    * [[SerCheckpoint.serCheckpoint]], then the one it supersedes is
+    * released, `init` excepted. Stops at None or after `maxRounds`
+    * states; returns the last state and the number materialized. */
+  def iterate(init: DataFrame, maxRounds: Int)(
+      step: (DataFrame, Int) => Option[DataFrame]): (DataFrame, Int) = {
+    @annotation.tailrec
+    def loop(state: DataFrame, rounds: Int): (DataFrame, Int) =
+      if (rounds >= maxRounds) (state, rounds)
+      else step(state, rounds + 1) match {
+        case None => (state, rounds)
+        case Some(next) =>
+          val materialized = next.serCheckpoint()
+          if (rounds > 0) release(state)
+          loop(materialized, rounds + 1)
+      }
+    loop(init, 0)
+  }
+
+  private def checkpointedRdds(ds: Dataset[_]) =
+    ds.queryExecution.analyzed.collect {
+      case lr: LogicalRDD => lr.rdd
+    }
+
   /** Unpersist the checkpointed RDDs in `df`'s plan (non-blocking). */
   def release(df: DataFrame): Unit = {
-    val rdds = df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
+    val rdds = checkpointedRdds(df)
     if (rdds.nonEmpty)
       silencingRddLogger(rdds.foreach(_.unpersist(blocking = false)))
   }

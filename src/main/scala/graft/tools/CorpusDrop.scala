@@ -327,12 +327,14 @@ object CorpusDrop {
         val star = affDocs
           .select(col("doc_id").as("doc_a"), col("cluster_id").as("doc_b"))
         val labels = Dedup.connectedComponents(
-            star.union(newPairs.select(col("doc_a"), col("doc_b"))))
-          .select(col("node").as("doc_id"), col("label").as("cluster_id"))
+            star.union(newPairs.select(col("doc_a"), col("doc_b"))),
+            graft.Tables.scaledPartitions(spark, gen, Seq("documents")))
         oldClusters.join(broadcast(affIds), Seq("cluster_id"), "left_anti")
           .select(col("doc_id"), col("cluster_id"))
-          .union(labels)
+          .union(labels.select(col("node").as("doc_id"),
+            col("label").as("cluster_id")))
           .write.mode("overwrite").parquet(out)
+        graft.tools.Checkpoints.release(labels) // written: dead now
       }
       val newClusters = read(clustersP)
 

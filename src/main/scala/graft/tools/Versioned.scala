@@ -120,12 +120,17 @@ object Versioned {
         fs.delete(st.getPath, true)
     }
     val stagingRoot = new Path(dir, StagingDirName)
-    if (fs.exists(stagingRoot))
+    if (fs.exists(stagingRoot)) {
       fs.listStatus(stagingRoot).foreach { st =>
         val isDeadStaging = StagingRe.findFirstMatchIn(st.getPath.getName)
           .exists(_.group(1).toInt < v)
         if (isDeadStaging) fs.delete(st.getPath, true)
       }
+      // drop the root once empty: a NON-recursive delete fails on a
+      // non-empty dir, so a concurrent publisher's staging survives
+      try fs.delete(stagingRoot, false)
+      catch { case _: java.io.IOException => }
+    }
   }
 
   private val StagingDirName = ".staging"

@@ -75,7 +75,7 @@ class AnnRecallSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
       (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L))
       .toDF("doc_a", "doc_b")
-    val got = Dedup.connectedComponents(pairs)
+    val got = Dedup.connectedComponents(pairs, parts = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))

@@ -42,6 +42,64 @@ class BpeSpec extends SparkSpec {
     assert(symMass == charMass, s"symbol mass $symMass != char mass $charMass")
   }
 
+  /** Spark jobs `body` starts on this thread: jobs carry the job
+    * group set here, and a marker job after `body` bounds the count
+    * (listener events arrive in posting order). */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"bpe-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val p = Option(js.properties)
+        if (p.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (p.exists(_.getProperty("spark.job.description") == "marker"))
+            done.countDown()
+          else jobs.incrementAndGet()
+        }
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job")
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("training releases its symbol state") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    BpeTrainer.train(spark, corpus, 4)
+    val left = persisted -- before
+    assert(left.isEmpty, s"train left ${left.size} RDDs persisted")
+  }
+
+  test("training stops once no pair is left") {
+    // the corpus's 4 word types admit 13 merges in all (every word
+    // ends as one symbol); a budget far above that learns exactly
+    // those and runs no more jobs than a budget of one past them
+    val (all, jobsFar) = jobsOf(BpeTrainer.train(spark, corpus, 60))
+    assert(all.length == 13)
+    assert(all.map(_.rank) == (0 until 13))
+    assert(all.take(4) == BpeTrainer.train(spark, corpus, 4))
+    val (exact, jobsNext) = jobsOf(BpeTrainer.train(spark, corpus, 14))
+    assert(exact == all)
+    info(s"jobs: k=60 $jobsFar, k=14 $jobsNext")
+    assert(jobsFar == jobsNext,
+      s"k=60 ran $jobsFar jobs vs $jobsNext at k=14: no-op rounds ran")
+  }
+
   test("training is deterministic across runs") {
     val a = BpeTrainer.train(spark, corpus, 4)
     val b = BpeTrainer.train(spark, corpus, 4)

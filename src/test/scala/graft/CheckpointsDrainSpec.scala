@@ -93,13 +93,62 @@ class CheckpointsDrainSpec extends SparkSpec {
     // plus the round that detects convergence
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("doc_a", "doc_b")
     val before = spark.sparkContext.getPersistentRDDs.size
-    val labels = queries.Dedup.connectedComponents(pairs)
+    val labels = queries.Dedup.connectedComponents(pairs, parts = 4)
     val grown = spark.sparkContext.getPersistentRDDs.size - before
     try {
       assert(grown == 1, s"expected only the label checkpoint to stay, got +$grown")
       assert(labels.as[(Long, Long)].collect().toSet ==
         Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
     } finally tools.Checkpoints.release(labels)
+  }
+
+  test("connected-components builders leave no checkpoint after the drain") {
+    // the three builders that call connectedComponents defer its
+    // labels (and dd_fuzzy_canonical its name checkpoints). The first
+    // run settles whatever session state they share; a second run
+    // must then leave nothing behind once the runner drains
+    val d = sf("sf0.001")
+    def runAll(): Unit =
+      for (name <- Seq("dd_fuzzy_canonical", "mm_phash_keep_list",
+          "mm_crossmodal_keep_list")) {
+        Registry.byName(name).run(spark, d)
+          .write.format("noop").mode("overwrite").save()
+        tools.Checkpoints.drainDeferred(spark)
+      }
+    tools.Checkpoints.drainDeferred(spark) // isolate from prior suites
+    runAll()
+    val settled = persistedIds
+    runAll()
+    val left = persistedIds -- settled
+    assert(left.isEmpty, s"a re-run left ${left.size} RDDs persisted: $left")
+  }
+
+  test("iterate releases every round but the last; init stays the caller's") {
+    import tools.Checkpoints.SerCheckpoint
+    val init = spark.range(100).toDF("v").serCheckpoint()
+    def sumOf(df: DataFrame) = df.agg(sum($"v")).as[Long].collect()(0)
+    val before = persistedIds
+    val (last, rounds) = tools.Checkpoints.iterate(init, maxRounds = 5) {
+      (st, r) => Some(st.select(($"v" + r).as("v")))
+    }
+    // one live state left: the last one
+    val grown = persistedIds -- before
+    var steps = 0
+    val (stopped, early) = tools.Checkpoints.iterate(init, maxRounds = 5) {
+      (st, r) =>
+        steps += 1
+        if (r > 2) None else Some(st.select(($"v" + 1).as("v")))
+    }
+    try {
+      assert(rounds == 5)
+      // 1 + 2 + 3 + 4 + 5 added to each of the 100 rows
+      assert(sumOf(last) == 4950L + 100L * 15)
+      assert(early == 2 && steps == 3,
+        s"a None at round 3 stops after 2 rounds ($early, $steps steps)")
+      assert(sumOf(stopped) == 4950L + 100L * 2)
+      assert(grown.size == 1, s"expected only the last state, got $grown")
+      assert(sumOf(init) == 4950L, "init must stay readable")
+    } finally Seq(init, last, stopped).foreach(tools.Checkpoints.release)
   }
 
   test("serCheckpoint keeps the key layout: exchange-free agg and self-join") {

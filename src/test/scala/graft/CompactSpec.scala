@@ -90,6 +90,10 @@ class CompactSpec extends SparkSpec {
     // a fresh reader resolves the compacted v1, identical content
     assert(Versioned.current(spark, dir) === Some(1))
     assert(checksum(Versioned.resolve(spark, dir)) === want)
+    // the claim rename emptied the staging root; the commit drops it
+    val stagingRoot = new java.io.File(dir, ".staging")
+    assert(!stagingRoot.exists(),
+      s"a successful publish left ${Option(stagingRoot.list()).map(_.toSeq)}")
 
     // second publish: v2 lands, v1 survives one cycle, flat v0 is GC'd
     val v1Snapshot = Versioned.resolve(spark, dir)
@@ -108,6 +112,7 @@ class CompactSpec extends SparkSpec {
     assert(!new java.io.File(dir, "v1").exists(), "v1 must be GC'd at v3")
     assert(new java.io.File(dir, "v2").exists(), "v2 survives one cycle")
     assert(checksum(Versioned.resolve(spark, dir)) === want)
+    assert(!stagingRoot.exists(), "every successful publish drops .staging")
   }
 
   test("versioned publish: a failed verify leaves the live pointer untouched") {

@@ -30,7 +30,7 @@ class CrossmodalSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   test("cross-modal chain collapses to one cluster; flags name the signals") {
-    val out = queries.Multimodal.crossmodalKeepList(corpus)
+    val out = queries.Multimodal.crossmodalKeepList(corpus, parts = 4)
       .orderBy("doc_id").collect()
     assert(out.length == 4)
     val byId = out.map(r => r.getLong(0) ->

@@ -99,7 +99,7 @@ class FuzzyJoinSpec extends SparkSpec {
     val names = Seq("aaaa", "aaab", "aabb", "zzzz").toDF("name")
     val labels = queries.Dedup.connectedComponents(
       queries.Dedup.fuzzyJoin(spark, names, 1)
-        .select($"name_a".as("doc_a"), $"name_b".as("doc_b")))
+        .select($"name_a".as("doc_a"), $"name_b".as("doc_b")), parts = 4)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(labels == Map("aaaa" -> "aaaa", "aaab" -> "aaaa",
       "aabb" -> "aaaa"), s"got $labels")
