@@ -89,20 +89,12 @@ object Bench {
     def loadAvg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
+    // timed: build + materialization; execute's drain runs after
     def exec(q: GraftQuery): Double = {
       val t0 = System.nanoTime()
-      try {
-        q.withConfs(spark) {
-          q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        }
+      q.execute(spark, sfDir) { df =>
+        df.write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      } finally {
-        // free this run's registered scratch checkpoints (loop edge
-        // lists, multi-consumer intermediates) so pass N+1 doesn't run
-        // under pass N's dead blocks — at sf10 the accumulated
-        // generations inflated downstream queries up to 2× (r12).
-        // Outside the timed window: release is non-blocking metadata.
-        graft.tools.Checkpoints.drainDeferred(spark)
       }
     }
 

@@ -13,8 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * @param confs   per-query session-conf advisories (e.g. an AQE
   *                initial partition count for a query whose exchanges
   *                are cap-bounded and never need the fine-grained
-  *                start) — applied around MATERIALIZATION via
-  *                [[withConfs]], never globally
+  *                start) — applied around build and
+  *                materialization by [[execute]], never globally
   */
 final case class GraftQuery(
     name: String,
@@ -23,10 +23,23 @@ final case class GraftQuery(
     bench: Boolean = false,
     confs: Map[String, String] = Map.empty) {
 
-  /** Run `body` (which must include the query's MATERIALIZATION — AQE
-    * reads session conf at execution, not at plan build) with this
-    * query's conf advisories applied, restoring the previous values
-    * after. No-op for the conf-less majority. */
+  /** The run contract every runner goes through: build
+    * `run(spark, sfDir)` and apply `body` to it (`body` materializes
+    * the frame: AQE reads session conf at execution, not at plan
+    * build), both under this query's conf advisories ([[withConfs]]);
+    * then release the scratch checkpoints the build registered with
+    * [[tools.Checkpoints.defer]], also when the build or `body`
+    * throws. A shared session runs many queries one after another,
+    * and a query's dead scratch would otherwise stay resident under
+    * every query after it (at sf10 that inflated later queries up to
+    * 2×, r12). The release is non-blocking metadata, outside any
+    * window `body` times. */
+  def execute[A](spark: SparkSession, sfDir: String)(body: DataFrame => A): A =
+    try withConfs(spark)(body(run(spark, sfDir)))
+    finally tools.Checkpoints.drainDeferred(spark)
+
+  /** Run `body` with this query's conf advisories applied, restoring
+    * the previous values after. No-op for the conf-less majority. */
   def withConfs[A](s: SparkSession)(body: => A): A =
     if (confs.isEmpty) body
     else {

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import scala.util.control.NonFatal
 
 /** Dev tool: execute EVERY registered query (not just the bench set)
@@ -47,6 +48,18 @@ object SweepCheck {
         .foreach(_.unpersist(blocking = true)))
   }
 
+  /** Materialize `df` fully through the noop sink, as Bench does,
+    * and return its row count, observed on that same execution. A
+    * bare count() would let Catalyst prune expensive subtrees (a
+    * windowed projection counted 1M rows in 0.13s because the window
+    * never ran), and a count after the write runs the plan twice. */
+  def noopCount(df: DataFrame): Long = {
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("n"))
+      .write.format("noop").mode("overwrite").save()
+    rows.get("n").asInstanceOf[Long]
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
@@ -69,15 +82,10 @@ object SweepCheck {
     }
     val results = qs.map { q =>
       val t0 = System.nanoTime()
-      // full noop materialization like Bench — a bare count() lets
-      // Catalyst prune expensive subtrees (a windowed projection
-      // counted 1M rows in 0.13s because the window never ran)
-      val n = try q.withConfs(spark) {
-        val df = q.run(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        df.count()
-      } catch { case NonFatal(e) =>
-        println(f"${q.name}%-28s FAILED ${e.getMessage.take(100)}"); -1L }
+      val n =
+        try q.execute(spark, sfDir)(noopCount)
+        catch { case NonFatal(e) =>
+          println(f"${q.name}%-28s FAILED ${e.getMessage.take(100)}"); -1L }
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"${q.name}%-28s ${sec}%8.2fs ${n}%10d rows")
       clearSessionArtifacts(spark) // measure plans, not cache pressure

@@ -13,18 +13,6 @@ object Verify {
     require(args.length == 2 || args.length == 3,
       "usage: Verify <sfDir> <outDir> [name,name...]")
     val spark = Sessions.local()
-    dump(spark, args(0), args(1),
-      args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
-    spark.stop()
-  }
-
-  /** Write the selected queries (all when `names` is None) under
-    * `outDir`, then the FULL oracle map. Unknown names throw before
-    * anything is written. */
-  def dump(spark: SparkSession, sfDir: String, outDir: String,
-      names: Option[Seq[String]]): Unit = {
-    val qs = names.fold(Registry.all)(Registry.select)
-    new java.io.File(outDir).mkdirs()
     // coalesce(1) keeps the driver's per-query dir a single file; at
     // synthetic large SFs (sf1/sf10 scale records) the single-threaded
     // write of multi-hundred-MB outputs dominates the whole dump —
@@ -32,23 +20,29 @@ object Verify {
     // check_tiered.py read the dir either way)
     val coalesce1 =
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_COALESCE", "1") != "0"
+    dump(spark, args(0), args(1),
+      args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq),
+      coalesce1)
+    spark.stop()
+  }
+
+  /** Write the selected queries (all when `names` is None) under
+    * `outDir`, each as one file when `coalesce1`, then the FULL oracle
+    * map. Unknown names throw before anything is written. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      names: Option[Seq[String]], coalesce1: Boolean): Unit = {
+    val qs = names.fold(Registry.all)(Registry.select)
+    new java.io.File(outDir).mkdirs()
     // iterates the Registry (the table SparkEntry.queries is derived
-    // from, same names and plans) so each query's conf advisories wrap
-    // its materialization — withConfs must surround the WRITE, which
-    // the bare (SparkSession, String) => DataFrame signature can't
+    // from, same names and plans): the bare (SparkSession, String) =>
+    // DataFrame signature carries no conf advisories
     qs.foreach { q =>
-      try q.withConfs(spark) {
-        val df = q.run(spark, sfDir)
+      try q.execute(spark, sfDir) { df =>
         (if (coalesce1) df.coalesce(1) else df)
           .write.mode("overwrite").parquet(s"$outDir/${q.name}")
       } catch { case NonFatal(e) =>
         System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
-      } finally
-        // free this query's registered scratch checkpoints — 150
-        // queries share one session here, and retained loop state
-        // (E-scale graph edges, corpus-scale window cores) otherwise
-        // accumulates for the whole dump (the r12 sf10 bench lesson)
-        tools.Checkpoints.drainDeferred(spark)
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1375,23 +1375,27 @@ object Dedup {
     candLong.unionByName(candShort)
   }
 
-  private[graft] def fuzzyJoin(s: org.apache.spark.sql.SparkSession,
-      names0: DataFrame, tau: Int): DataFrame = {
-    // the deduped catalog is read by the gram path, both sidecar sides
-    // and nothing else — materialize it once (the persisted-artifact
-    // shape, same as HammingBands' sketch table)
-    val names = Checkpoints.defer(names0.localCheckpoint(true))
+  /** Tau-edit pairs over the deduped catalog `names`. The gram path
+    * and both sidecar sides each read `names`, so callers pass it
+    * materialized ([[partNames]]). */
+  private[graft] def fuzzyJoin(s: SparkSession, names: DataFrame,
+      tau: Int): DataFrame =
     fuzzyCandidates(s, names, tau)
       .filter(abs(length(col("name_a")) - length(col("name_b"))) <= tau)
       .select(col("name_a"), col("name_b"),
         levenshtein(col("name_a"), col("name_b"), tau).cast("long").as("lev"))
       .filter(col("lev") >= 0)
-  }
+
+  /** The deduped part-name catalog, materialized once (the
+    * persisted-artifact shape, same as HammingBands' sketch table)
+    * and deferred to the runner's drain. */
+  private def partNames(s: SparkSession, d: String): DataFrame =
+    Checkpoints.defer(Tables.part(s, d).select(col("p_name").as("name"))
+      .distinct().localCheckpoint(true))
 
   val qFuzzyJoin = GraftQuery(
     "dd_fuzzy_join",
-    (s, d) => fuzzyJoin(s,
-      Tables.part(s, d).select(col("p_name").as("name")).distinct(), tau = 1),
+    (s, d) => fuzzyJoin(s, partNames(s, d), tau = 1),
     Some("""
       WITH n AS (SELECT DISTINCT p_name AS name FROM part)
       SELECT a.name AS name_a, b.name AS name_b,
@@ -1415,8 +1419,7 @@ object Dedup {
   val qFuzzyCanonical = GraftQuery(
     "dd_fuzzy_canonical",
     (s, d) => {
-      val names = Checkpoints.defer(Tables.part(s, d)
-        .select(col("p_name").as("name")).distinct().localCheckpoint(true))
+      val names = partNames(s, d)
       val pairs = fuzzyJoin(s, names, tau = 1)
         .select(col("name_a").as("doc_a"), col("name_b").as("doc_b"))
       val labels = Checkpoints.defer(connectedComponents(pairs,

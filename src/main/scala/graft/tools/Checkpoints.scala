@@ -132,10 +132,9 @@ object Checkpoints {
     * OUTPUT still references, so they cannot be released inside the
     * query builder (the runner has not materialized the result yet and
     * a released localCheckpoint can never be recomputed). Queries
-    * register them with [[defer]]; every runner that materializes one
-    * query at a time (Bench, Verify — SweepCheck's
-    * full-store teardown subsumes it) calls [[drainDeferred]] AFTER
-    * the materialization.
+    * register them with [[defer]]; every runner materializes a query
+    * through [[graft.GraftQuery.execute]], which calls
+    * [[drainDeferred]] AFTER the materialization.
     *
     * Why this must exist: in a shared long-lived session the retained
     * scratch of completed queries stacks — each bench pass re-runs

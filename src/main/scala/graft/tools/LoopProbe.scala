@@ -25,14 +25,13 @@ object LoopProbe {
       println(f"[ckpt $i%2d] +${(now - last) / 1e9}%6.2fs exch=$ex smj=$smj bhj=$bhj sort=$so")
       last = now
     }
-    val q = Registry.byName(name)
     val t0 = System.nanoTime()
-    try q.withConfs(spark) {
-      q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-    } finally Checkpoints.drainDeferred(spark)
+    try Registry.byName(name).execute(spark, sfDir) { df =>
+      Checkpoints.planTap = None
+      df.write.format("noop").mode("overwrite").save()
+    } finally Checkpoints.planTap = None
     val now = System.nanoTime()
     println(f"[tail   ] +${(now - last) / 1e9}%6.2fs  TOTAL ${(now - t0) / 1e9}%6.2fs")
-    Checkpoints.planTap = None
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.Registry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftQuery, Registry}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
 /** Plan auditor: one row of physical-plan shape metrics per registry
@@ -160,64 +160,54 @@ object PlanAudit {
     }.flatten.distinct.map(t => s"pinned broadcast reaches scaled table '$t'")
   }
 
-  /** Audit one query's plan shape. Single-threaded by contract: the
-    * Checkpoints.planTap it installs is a process-global (a
-    * concurrent audit would interleave tapped plans across queries),
-    * and the per-session drain assumes this is the only query
-    * in flight — both match how the tool's main and every spec use
-    * it. */
-  def audit(spark: SparkSession, sfDir: String,
-      name: String): Either[String, Audit] =
-    try {
-      // tap every eager ser/deser checkpoint's OWN physical plan:
-      // iterative queries execute their round plans inside run(), so
-      // the final frame's executedPlan alone would audit an
-      // all-LogicalRDD tail and miss every loop round (ADVICE r12 —
-      // the immutable-edge k-core audited all-zero). The audited
-      // plan below is the tail PLUS all tapped round plans.
-      val tapped = new scala.collection.mutable.ArrayBuffer[String]
-      Checkpoints.planTap = Some(tapped += _)
-      // drain in a finally: run() may have materialized (and
-      // registered) loop checkpoints before throwing, and a
-      // success-path-only drain would leave them resident until the
-      // NEXT query's drain — or forever if this was the last one
-      // (ADVICE r13)
-      val (plan, globalWins) =
-        try {
-          val df =
-            try Registry.byName(name).run(spark, sfDir)
-            finally Checkpoints.planTap = None
-          val p = (df.queryExecution.executedPlan.toString +: tapped.toSeq)
-            .mkString("\n")
-          val gw = df.queryExecution.optimizedPlan.collect {
-            case w: org.apache.spark.sql.catalyst.plans.logical.Window
-                if w.partitionSpec.isEmpty => w
-          }.length
-          (p, gw)
-        } finally {
-          Checkpoints.planTap = None
-          // the eager checkpoints the builder ran are per-run scratch
-          Checkpoints.drainDeferred(spark)
-        }
-      Right(Audit(name,
-        scans = countOf(plan, "Scan parquet"),
-        exchanges = countOf(plan, "Exchange (?:hashpartitioning|rangepartitioning|SinglePartition)"),
-        bhj = countOf(plan, "BroadcastHashJoin"),
-        smj = countOf(plan, "SortMergeJoin"),
-        bnl = countOf(plan, "BroadcastNestedLoopJoin"),
-        cartesian = countOf(plan, "CartesianProduct"),
-        sorts = countOf(plan, "\\bSort \\["),
-        windows = countOf(plan, "\\bWindow \\["),
-        globalWindows = globalWins,
-        pushed = "PushedFilters: \\[[^\\]]*(?:GreaterThan|LessThan|EqualTo|In\\(|StringContains|Between)"
-          .r.findFirstIn(plan).isDefined))
-    } catch { case NonFatal(e) => Left(s"$name: ${e.getMessage}") }
+  /** Build `q` through [[graft.GraftQuery.execute]] with the
+    * Checkpoints plan tap on: `body` gets the built frame and the
+    * physical plans of the eager ser/deser checkpoints the build ran.
+    * Iterative queries execute their rounds inside run(), so the
+    * frame's executedPlan alone is an all-LogicalRDD tail that misses
+    * every loop round (ADVICE r12 — the immutable-edge k-core audited
+    * all-zero). Single-threaded by contract: the tap is a process
+    * global, so a concurrent build would interleave tapped plans
+    * across queries. */
+  def tapped[A](spark: SparkSession, sfDir: String, q: GraftQuery)(
+      body: (DataFrame, Seq[String]) => A): A = {
+    val rounds = new scala.collection.mutable.ArrayBuffer[String]
+    Checkpoints.planTap = Some(rounds += _)
+    try q.execute(spark, sfDir) { df =>
+      Checkpoints.planTap = None
+      body(df, rounds.toSeq)
+    } finally Checkpoints.planTap = None
+  }
+
+  /** One query's plan-shape row: `df`'s executed plan plus `rounds`,
+    * the plans its build executed (see [[tapped]]). */
+  def audit(name: String, df: DataFrame, rounds: Seq[String]): Audit = {
+    val plan = (df.queryExecution.executedPlan.toString +: rounds)
+      .mkString("\n")
+    Audit(name,
+      scans = countOf(plan, "Scan parquet"),
+      exchanges = countOf(plan, "Exchange (?:hashpartitioning|rangepartitioning|SinglePartition)"),
+      bhj = countOf(plan, "BroadcastHashJoin"),
+      smj = countOf(plan, "SortMergeJoin"),
+      bnl = countOf(plan, "BroadcastNestedLoopJoin"),
+      cartesian = countOf(plan, "CartesianProduct"),
+      sorts = countOf(plan, "\\bSort \\["),
+      windows = countOf(plan, "\\bWindow \\["),
+      globalWindows = df.queryExecution.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window
+            if w.partitionSpec.isEmpty => w
+      }.length,
+      pushed = "PushedFilters: \\[[^\\]]*(?:GreaterThan|LessThan|EqualTo|In\\(|StringContains|Between)"
+        .r.findFirstIn(plan).isDefined)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1)
     val spark = graft.Sessions.local()
-    val rows = Registry.all.map(q => audit(spark, sfDir, q.name))
+    val rows = Registry.all.map(q =>
+      try Right(tapped(spark, sfDir, q)(audit(q.name, _, _)))
+      catch { case NonFatal(e) => Left(s"${q.name}: ${e.getMessage}") })
     val (errs, oks) = rows.partitionMap(identity)
     val header =
       "| query | scans | exch | bhj | smj | bnl | cart | sorts | win | gwin | pushed |"

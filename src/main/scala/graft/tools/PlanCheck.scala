@@ -5,9 +5,9 @@ import scala.util.control.NonFatal
 
 /** Dev utility: print the formatted physical plan of registry queries
   * (every query when no names are given) against a dataset dir, on
-  * the session Bench runs — scan pruning (PushedFilters/ReadSchema),
-  * join strategies and WholeStageCodegen spans, audited without
-  * editing code.
+  * the session Bench runs and under each query's conf advisories —
+  * scan pruning (PushedFilters/ReadSchema), join strategies and
+  * WholeStageCodegen spans, audited without editing code.
   *
   * Usage: scripts/run.sh graft.tools.PlanCheck <sfDir> [name[,name...]]
   */
@@ -20,11 +20,8 @@ object PlanCheck {
     val spark = Sessions.local()
     qs.foreach { q =>
       println(s"==== ${q.name} @ $sfDir ====")
-      try q.run(spark, sfDir).explain("formatted")
+      try q.execute(spark, sfDir)(_.explain("formatted"))
       catch { case NonFatal(e) => println(s"FAILED: ${e.getMessage}") }
-      // localCheckpoint is EAGER — building the plan materialized any
-      // loop scratch even though nothing was saved; free it per query
-      finally Checkpoints.drainDeferred(spark)
     }
     spark.stop()
   }

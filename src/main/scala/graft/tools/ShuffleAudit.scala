@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import graft.{GraftQuery, Registry, SweepCheck}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Bus
 import scala.util.control.NonFatal
 
 /** Shuffle auditor — the "minimize shuffles" rule as a MEASURED
@@ -24,9 +25,9 @@ import scala.util.control.NonFatal
   * registry-wide at sf0.1 on every test run.
   *
   * Mechanics: one SparkListener accumulates task metrics; counters
-  * snapshot around each query with a listener-bus drain wait (the
-  * bus is async — a bounded settle loop waits for the counters to go
-  * quiet rather than sleeping a fixed guess).
+  * snapshot around each query after the async listener bus is
+  * drained ([[Bus.drain]]), so each delta holds exactly that query's
+  * tasks.
   */
 object ShuffleAudit {
 
@@ -39,7 +40,6 @@ object ShuffleAudit {
     val sr = new AtomicLong
     val ds = new AtomicLong
     val ms = new AtomicLong
-    val tasks = new AtomicLong
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
       val m = te.taskMetrics
       if (m != null) {
@@ -48,25 +48,10 @@ object ShuffleAudit {
         sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
         ds.addAndGet(m.diskBytesSpilled)
         ms.addAndGet(m.memoryBytesSpilled)
-        tasks.incrementAndGet()
       }
     }
-    def snapshot: (Metrics, Long) = (Metrics(input.get, sw.get, sr.get,
-      ds.get, ms.get), tasks.get)
-  }
-
-  /** Wait for the async listener bus to go quiet: the task counter
-    * must hold still for two consecutive polls. */
-  private def settle(c: Collector): Unit = {
-    var prev = -1L
-    var same = 0
-    var iters = 0
-    while (same < 2 && iters < 100) {
-      Thread.sleep(100)
-      val cur = c.tasks.get
-      if (cur == prev) same += 1 else { same = 0; prev = cur }
-      iters += 1
-    }
+    def snapshot: Metrics = Metrics(input.get, sw.get, sr.get, ds.get,
+      ms.get)
   }
 
   /** Measure task metrics per query against `sfDir`. `warm = true`
@@ -81,29 +66,27 @@ object ShuffleAudit {
       warm: Boolean = true, teardown: Boolean = false)
       : Seq[(String, Metrics)] = {
     val c = new Collector
-    spark.sparkContext.addSparkListener(c)
+    val sc = spark.sparkContext
+    sc.addSparkListener(c)
     try {
-      // each query's loop scratch is released once it has run (the
-      // runner's Checkpoints.defer contract), so a later query is never
-      // measured under an earlier one's dead blocks
       def runOne(q: GraftQuery): Boolean =
-        try q.withConfs(spark) {
-          q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try q.execute(spark, sfDir) { df =>
+          df.write.format("noop").mode("overwrite").save()
           true
         } catch { case NonFatal(e) =>
           System.err.println(s"[shuffle-audit] ${q.name}: ${e.getMessage}")
           false
-        } finally Checkpoints.drainDeferred(spark)
+        }
       if (warm) qs.foreach { q =>
         runOne(q)
         if (teardown) SweepCheck.clearSessionArtifacts(spark)
       }
       qs.map { q =>
-        settle(c)
-        val (before, _) = c.snapshot
+        Bus.drain(sc)
+        val before = c.snapshot
         val ok = runOne(q)
-        settle(c)
-        val (after, _) = c.snapshot
+        Bus.drain(sc)
+        val after = c.snapshot
         if (teardown) SweepCheck.clearSessionArtifacts(spark)
         val m =
           if (!ok) Metrics(-1, -1, -1, -1, -1)

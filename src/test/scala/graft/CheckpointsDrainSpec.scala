@@ -88,6 +88,34 @@ class CheckpointsDrainSpec extends SparkSpec {
       s"measure left $left deferred scratch frames for the next query")
   }
 
+  test("execute drains the scratch and restores the confs when body throws") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val q = Registry.byName("q_graph_communities")
+    assert(q.confs.get(key).contains("8m"), "the LPA advisory moved")
+    tools.Checkpoints.drainDeferred(spark) // isolate from prior suites
+    val before = persistedIds
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "3m")
+    try {
+      var inside: Option[String] = None
+      var during = Set.empty[Int]
+      val e = intercept[IllegalStateException](
+        q.execute(spark, sf("sf0.001")) { _ =>
+          inside = spark.conf.getOption(key)
+          during = persistedIds -- before
+          throw new IllegalStateException("body failed")
+        })
+      assert(e.getMessage == "body failed")
+      assert(inside.contains("8m"), s"body ran under $inside, not the advisory")
+      assert(spark.conf.get(key) == "3m", "the caller's conf was not restored")
+      assert(during.nonEmpty, "the build should have checkpointed its rounds")
+      val leftover = persistedIds.intersect(during)
+      assert(leftover.isEmpty, s"scratch RDDs still persisted: $leftover")
+      assert(tools.Checkpoints.drainDeferred(spark) == 0,
+        "execute left deferred scratch for the next query")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("connectedComponents releases its edge checkpoint, keeps only the labels") {
     // a 4-node chain: min-label propagation needs 3 changing rounds
     // plus the round that detects convergence

@@ -3,43 +3,28 @@ package graft
 import graft.tools.PlanAudit
 
 /** Registry-wide physical-plan invariants, enforced over EVERY query
-  * in one sweep (at planning cost only — nothing executes):
+  * in the one [[RegistrySweep]] run (shared with RegistrySpec):
   *  - zero CartesianProduct nodes anywhere: every cross-shaped join
   *    in the repo carries a bounded broadcast side (centroids,
   *    codebooks, 1-row scalars), which plans as
   *    BroadcastNestedLoopJoin, never an unpartitioned cartesian;
-  *  - every query plans (audit returns Right) — a regression that
+  *  - every query plans (its audit row exists) — a regression that
   *    breaks planning surfaces here before the driver's sweep.
   */
 class PlanAuditSpec extends SparkSpec {
 
-  /** Audits must see PRISTINE plans: the shared test session may
-    * carry SQL-cache entries, session artifacts, or planning confs
-    * from earlier suites — cached plan fragments substitute
-    * InMemoryRelation into matching subtrees and a leaked broadcast
-    * threshold flips join strategies (suite-order-dependent
-    * flakiness: round 10 caught sim_hard_negatives auditing 3 SMJs
-    * in full-suite order while every clean-session run plans 7
-    * broadcasts). Clear the caches and reset the planning confs this
-    * suite's assertions depend on to their session defaults. */
-  private def hermetic(): Unit = {
-    SweepCheck.clearSessionArtifacts(spark)
-    Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .foreach(spark.conf.unset)
-  }
+  private def records = RegistrySweep.records
+
+  private def auditOf(name: String) = records(name).audit.get
 
   test("no registry query plans a CartesianProduct; all queries plan") {
-    hermetic()
-    val results = Registry.all.map(q =>
-      q.name -> PlanAudit.audit(spark, sf("sf0.001"), q.name))
-    val failures = results.collect { case (n, Left(e)) => s"$n: $e" }
+    val results = Registry.all.map(q => q.name -> records(q.name))
+    val failures = results.collect {
+      case (n, r) if r.audit.isEmpty => s"$n: ${r.error.getOrElse("")}"
+    }
     assert(failures.isEmpty, s"queries failed to plan:\n${failures.mkString("\n")}")
     val cartesians = results.collect {
-      case (n, Right(a)) if a.cartesian > 0 => n
+      case (n, r) if r.audit.exists(_.cartesian > 0) => n
     }
     assert(cartesians.isEmpty,
       s"CartesianProduct found in: ${cartesians.mkString(", ")}")
@@ -59,9 +44,8 @@ class PlanAuditSpec extends SparkSpec {
     "t_nll_yield_curve")   // window over ln-score buckets (≤ ~60 rows)
 
   test("global (partition-less) windows only on bounded tables") {
-    hermetic()
     val offenders = Registry.all.flatMap { q =>
-      PlanAudit.audit(spark, sf("sf0.001"), q.name).toOption
+      records(q.name).audit
         .filter(a => a.globalWindows > 0 &&
           !BoundedGlobalWindows.contains(q.name))
         .map(a => s"${q.name}: ${a.globalWindows} global window(s)")
@@ -71,7 +55,7 @@ class PlanAuditSpec extends SparkSpec {
     // the allowlist itself must stay honest: both entries still plan
     // their one bounded global window (drop the entry if they stop)
     for (n <- BoundedGlobalWindows) {
-      val a = PlanAudit.audit(spark, sf("sf0.001"), n).toOption.get
+      val a = auditOf(n)
       assert(a.globalWindows >= 1, s"$n no longer plans a global window")
     }
   }
@@ -84,7 +68,6 @@ class PlanAuditSpec extends SparkSpec {
     // Aggregate/Limit/Sample before any scaled scan. AQE broadcasts
     // the unhinted small sides at bench scale anyway (ScaleLayoutSpec
     // proves the q5 plan is unchanged).
-    hermetic()
     // Queries whose broadcast side is a CONSTANT KEY-RANGE filter on
     // a scaled table (`vec_id < 20` — the ANN probe set): ≤20 rows at
     // any SF by the id's uniqueness, but the structural walk can't
@@ -93,10 +76,7 @@ class PlanAuditSpec extends SparkSpec {
     // pattern). Anything else that broadcasts a scaled subtree
     // without an Aggregate/Limit/Sample fails the gate.
     val boundedByKeyRange = Set("sim_cosine_topk", "sim_ivf_trained_topk")
-    val audits = Registry.all.map { q =>
-      val df = Registry.byName(q.name).run(spark, sf("sf0.001"))
-      q.name -> PlanAudit.pinnedScaledBroadcasts(df)
-    }
+    val audits = Registry.all.map(q => q.name -> records(q.name).pinned)
     val offenders = audits.collect {
       case (n, ms) if ms.nonEmpty && !boundedByKeyRange.contains(n) =>
         ms.map(m => s"$n: $m")
@@ -117,7 +97,7 @@ class PlanAuditSpec extends SparkSpec {
     // residual). The walk now traces grouping refs through aliases;
     // these adversarial frames pin exactly that laundering and must be
     // FLAGGED, while the genuinely bounded shapes stay clean.
-    hermetic()
+    RegistrySweep.hermetic(spark)
     import org.apache.spark.sql.functions._
     val d = sf("sf0.001")
     val docs = Tables.documents(spark, d)
@@ -182,18 +162,13 @@ class PlanAuditSpec extends SparkSpec {
     // tap must restore visibility: the k-core audit must now count the
     // edge-list scan, its repartition exchange, and the per-round
     // joins that the tail alone cannot contain.
-    hermetic()
-    val a = PlanAudit.audit(spark, sf("sf0.001"), "q_graph_kcore")
-      .toOption.get
+    val a = auditOf("q_graph_kcore")
     assert(a.scans >= 2, s"k-core audit lost its table scans: $a")
     assert(a.exchanges >= 1, s"k-core audit lost its exchanges: $a")
     assert(a.bhj + a.smj + a.bnl >= 1, s"k-core audit lost its joins: $a")
   }
 
   test("round-8 additions keep their designed plan shapes") {
-    hermetic()
-    def auditOf(name: String) =
-      PlanAudit.audit(spark, sf("sf0.001"), name).toOption.get
     // Pure map-side chunking: no exchange at all.
     val chunk = auditOf("t_chunk_split")
     assert(chunk.exchanges == 0 && chunk.smj == 0,

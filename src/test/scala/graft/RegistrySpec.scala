@@ -1,7 +1,8 @@
 package graft
 
-/** Smoke gate: every registered query plans and executes at sf0.001;
-  * entry returns rows; names/oracles stay consistent. */
+/** Smoke gate: every registered query plans and executes at sf0.001
+  * (one [[RegistrySweep]] run, shared with PlanAuditSpec); entry
+  * returns rows; names/oracles stay consistent. */
 class RegistrySpec extends SparkSpec {
 
   test("registry names are unique and oracle keys ⊆ query keys") {
@@ -40,7 +41,8 @@ class RegistrySpec extends SparkSpec {
   test("Verify.dump subset writes only the named results, the full oracle map") {
     withTempDir { dir =>
       val names = Seq("q1_pricing_summary", "q_graph_kcore")
-      Verify.dump(spark, sf("sf0.001"), dir.toString, Some(names))
+      Verify.dump(spark, sf("sf0.001"), dir.toString, Some(names),
+        coalesce1 = true)
       val dirs = dir.toFile.listFiles.filter(_.isDirectory).map(_.getName)
       assert(dirs.toSet == names.toSet)
       val json = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -57,7 +59,7 @@ class RegistrySpec extends SparkSpec {
       val out = dir.resolve("out")
       val e = intercept[IllegalArgumentException](
         Verify.dump(spark, sf("sf0.001"), out.toString,
-          Some(Seq("q1_pricing_summary", "q_typo"))))
+          Some(Seq("q1_pricing_summary", "q_typo")), coalesce1 = true))
       assert(e.getMessage.contains("q_typo"))
       assert(!java.nio.file.Files.exists(out))
     }
@@ -65,8 +67,9 @@ class RegistrySpec extends SparkSpec {
 
   Registry.all.foreach { q =>
     test(s"${q.name} executes at sf0.001") {
-      val df = q.run(spark, sf("sf0.001"))
-      assert(df.count() >= 0)
+      val r = RegistrySweep.records(q.name)
+      assert(r.error.isEmpty, s"${q.name} failed: ${r.error.getOrElse("")}")
+      assert(r.rows >= 0)
     }
   }
 }
