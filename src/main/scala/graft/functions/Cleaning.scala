@@ -107,8 +107,6 @@ object Cleaning {
     trim(regexp_replace(c, "  ", " "))
 
   /** §1.3 sentinel discipline: engine keeps real nulls; sinks that need
-    * reference-faithful output apply these defaults. */
+    * reference-faithful output apply this default. */
   def sentinelStr(c: Column): Column = coalesce(c, lit(""))
-  def sentinelLong(c: Column): Column = coalesce(c, lit(0L))
-  def sentinelDouble(c: Column): Column = coalesce(c, lit(0.0))
 }

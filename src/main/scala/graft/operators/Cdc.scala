@@ -10,12 +10,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * sweep (hunter.py:336-354) as Spark operators.
   *
   * Two forms:
-  *  - [[batchEvents]]: previous ⟗ current full-outer join — used for
-  *    batch reconciliation and oracle testing.
-  *  - [[streamingEvents]]: flatMapGroupsWithState keyed by mls —
-  *    state is the last-seen Listing; transitions emit typed events.
-  *    Off-market detection uses processing-time timeout (the
-  *    streaming analog of "state key absent from this cycle").
+  *  - [[batchEvents]]: previous ⟗ current full-outer join — the form
+  *    `ScrapePipeline.runCycle` runs.
+  *  - [[streamingEventsEventTime]]: flatMapGroupsWithState keyed by
+  *    mls — state is the last-seen Listing; transitions emit typed
+  *    events, and a key goes off_market when the watermark passes its
+  *    last sighting plus a staleness bound (the streaming analog of
+  *    "state key absent from this cycle"). Its output depends only on
+  *    its input, never on the wall clock.
   *
   * Scale: both shuffle once on mls (hash partition); state store is
   * per-key and incremental — no per-cycle full-state rewrite like the
@@ -58,58 +60,6 @@ object Cdc {
       }
   }
 
-  /** Streaming CDC. Emits new_listing/price_change on updates and
-    * off_market when a key times out (no sighting within
-    * `offMarketTimeoutMs` of processing time).
-    *
-    * `initialState` is the restart path (S11/T3): the reference
-    * bootstraps its dict from SavedListings.json before polling
-    * (main.py:98) so a price change across a restart is a
-    * price_change, not a new_listing. Pass `CsvSinks.readState(...)`
-    * here to reproduce that continuity — the snapshot seeds the state
-    * store on the FIRST batch, then the checkpoint owns it. */
-  def streamingEvents(stream: Dataset[Listing], offMarketTimeoutMs: Long,
-      nowEpoch: () => Long = () => System.currentTimeMillis() / 1000,
-      initialState: Option[Dataset[Listing]] = None)
-      : Dataset[ListingEvent] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    val fn = (mls: String, rows: Iterator[Listing], state: GroupState[Listing]) =>
-      if (state.hasTimedOut) {
-        val old = state.get
-        state.remove()
-        val days = ((nowEpoch() - old.foundDate) / 86400).toInt
-        Iterator.single(ListingEvent(old.mls, "off_market", None,
-          old.price, None, None, Some(days), old.source))
-      } else {
-        // last-write-wins within a batch, keyed ordering not
-        // guaranteed — reference semantics are last-seen (T5)
-        val events = rows.flatMap { n =>
-          val out = state.getOption match {
-            case None =>
-              Some(ListingEvent(n.mls, "new_listing", None, n.price,
-                None, None, None, n.source))
-            case Some(o) if n.price != o.price => Some(priceChange(n, o))
-            case _ => None
-          }
-          state.update(n)
-          out
-        }.toVector
-        state.setTimeoutDuration(offMarketTimeoutMs)
-        events.iterator
-      }
-    val grouped = stream.groupByKey(_.mls)
-    initialState match {
-      case Some(init) =>
-        grouped.flatMapGroupsWithState[Listing, ListingEvent](
-          OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout,
-          init.groupByKey(_.mls))(fn)
-      case None =>
-        grouped.flatMapGroupsWithState[Listing, ListingEvent](
-          OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(fn)
-    }
-  }
-
   /** A listing observation with its EVENT time — the input shape of
     * [[streamingEventsEventTime]]. `ts` is when the listing was seen
     * on the source (scrape time in the reference's world), not when
@@ -145,16 +95,15 @@ object Cdc {
     * `lastSeenMs` (v1, implicit: two fields, second granularity). */
   val StateVer: Int = 2
 
-  /** EVENT-TIME CDC — the replayable twin of [[streamingEvents]].
-    *
-    * The processing-time form times a key out `offMarketTimeoutMs` of
-    * WALL CLOCK after its last sighting, so replaying a historical
-    * log emits off_market at whatever speed the replay runs —
-    * nondeterministic evidence. This form keys everything to the
-    * data: a listing goes off_market when the WATERMARK passes
-    * lastSeen + `stalenessSec` (`GroupStateTimeout.EventTimeTimeout`
-    * + `setTimeoutTimestamp`, the StreamingGapFill timer pattern), and
-    * days-on-market is computed from event time
+  /** EVENT-TIME CDC — the streaming form. A processing-time timeout
+    * would expire a key some WALL-CLOCK time after its last sighting,
+    * so replaying a historical log would emit off_market at whatever
+    * speed the replay runs — nondeterministic evidence. This form
+    * keys everything to the data: a listing goes off_market when the
+    * WATERMARK passes lastSeen + `stalenessSec`
+    * (`GroupStateTimeout.EventTimeTimeout` + `setTimeoutTimestamp`,
+    * the StreamingGapFill timer pattern), and days-on-market is
+    * computed from event time
     * ((lastSeen + staleness − foundDate) / 86400), so the SAME input
     * log produces the SAME events — including expiry timing — no
     * matter when or how fast it is replayed (spec-pinned, including a
@@ -165,9 +114,8 @@ object Cdc {
     * the contract, replay determinism is. Rows later than the
     * watermark are dropped by the standard watermark contract.
     *
-    * Scale shape: identical to the processing-time form — one hash
-    * shuffle on mls, per-key state is one listing + one long; the
-    * timer adds nothing per row. */
+    * Scale shape: one hash shuffle on mls, per-key state is one
+    * listing + one long; the timer adds nothing per row. */
   def streamingEventsEventTime(sightings: Dataset[Sighting],
       stalenessSec: Long, watermarkDelay: String = "0 seconds")
       : Dataset[ListingEvent] = {

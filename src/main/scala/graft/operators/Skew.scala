@@ -3,11 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation utilities (builder brief: "skewed keys → salting or
-  * AQE skew-join"). AQE handles sort-merge skew splitting at runtime;
-  * salting is the explicit fallback for hash aggregations and
-  * broadcast-impossible joins where one hot key dwarfs the rest —
-  * e.g. a `lang='en'` hot partition in a 100 TB documents groupBy.
+/** Skew mitigation ("skewed keys → salting or AQE skew-join"). AQE
+  * handles sort-merge join skew splitting at runtime; salting is the
+  * explicit fallback for hash aggregations where one hot key dwarfs
+  * the rest — e.g. a `lang='en'` hot partition in a 100 TB documents
+  * groupBy (`t_skew_salted_agg`).
   */
 object Skew {
 
@@ -33,21 +33,5 @@ object Skew {
       .agg(partialAggs.head, partialAggs.tail: _*)
       .groupBy(keys: _*)
       .agg(mergeAggs.head, mergeAggs.tail: _*)
-  }
-
-  /** Salted join for a skewed LEFT side against a small-ish right
-    * side that can't be broadcast: replicate each right row `buckets`
-    * times (explode), salt the left uniformly, join on (key, salt).
-    * Work is unchanged; the hot key's rows land in `buckets`
-    * partitions instead of one straggler task.
-    */
-  def saltedJoin(skewedLeft: DataFrame, right: DataFrame,
-      key: String, buckets: Int): DataFrame = {
-    // retry-stable salt (see saltedAgg)
-    val saltedLeft = skewedLeft.withColumn("__salt",
-      pmod(hash(skewedLeft.columns.toIndexedSeq.map(col) :+ lit(42): _*), lit(buckets)))
-    val replicatedRight = right
-      .withColumn("__salt", explode(sequence(lit(0L), lit(buckets - 1L))))
-    saltedLeft.join(replicatedRight, Seq(key, "__salt")).drop("__salt")
   }
 }

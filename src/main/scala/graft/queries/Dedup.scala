@@ -204,13 +204,6 @@ object Dedup {
           org.apache.spark.sql.graft.ShingleHashes.of(col("text")).as("hsh"))
         .localCheckpoint(true))
 
-  /** Candidate near-dup pairs via LSH banding (4 bands × 2 rows):
-    * docs sharing any band bucket, estimated Jaccard = signature
-    * agreement. Shared by dd_lsh_candidate_pairs and the
-    * connected-components clustering (dd_dup_clusters). */
-  def lshCandidatePairs(docs: DataFrame): DataFrame =
-    pairsFromSignatures(signatureTable(docs))
-
   /** (doc_id, band, bucket, mh0..mh7) rows — 4 bands × 2 signature
     * rows per doc; the probe table both the self-join pair generator
     * and the incremental batch-vs-corpus probe read. */

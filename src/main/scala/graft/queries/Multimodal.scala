@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media as opaque binary + typed
   * metadata. The container has no image/audio codecs, so "decode" is a
-  * deterministic stub over the bytes (clearly marked); the Spark-side
-  * plumbing — binary column, metadata struct, per-batch processing in
-  * graft.operators.MediaPipeline — is real and tested by ScalaTest.
-  * This query pins the schema + byte-level feature semantics against
+  * deterministic stub over the bytes (clearly marked), written once in
+  * [[qMediaFeatures]]; [[qFrameSample]] reads the same frame counts.
+  * Both queries pin the schema + byte-level feature semantics against
   * the oracle.
   */
 object Multimodal {
@@ -46,9 +45,9 @@ object Multimodal {
     * emits ≤ 4 uniformly-strided frame indices regardless of its
     * frame count, so the post-sample row volume is bounded by
     * corpus · budget, not corpus · duration — the memory/shuffle
-    * contract that keeps a 100 TB video corpus processable (the
-    * decode that would follow each emitted row is the per-partition
-    * stub in operators/MediaPipeline). All integer arithmetic +
+    * contract that keeps a 100 TB video corpus processable (each
+    * emitted row is where a per-frame decode would follow). All
+    * integer arithmetic +
     * per-frame md5 keys; frame counts come from the same stub decode
     * as [[qMediaFeatures]] so the two queries can never disagree on
     * an asset's geometry. */

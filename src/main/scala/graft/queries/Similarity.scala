@@ -372,7 +372,7 @@ object Similarity {
   /** Driver-resident centroid model: (cell, quantized vector) pairs.
     * Bounded by the model hyperparameter k (8 coarse cells / 16 PQ
     * codes per subspace) — the same driver-budget class as the BPE
-    * merge table and the pinBounded centroid relations it replaces:
+    * merge table and the driver-local centroid relations it replaces:
     * k·dim longs, corpus-independent. */
   private type CentModel = Seq[(Int, Vector[Long])]
 
@@ -390,7 +390,7 @@ object Similarity {
     * ArgMax2`, which paid a k-fold row fan-out, a corpus-scale
     * partial aggregate and a V-scale shuffle PER ASSIGNMENT (7 of
     * them per ivfpq derive). The centroids are the driver-pinned
-    * model table the old path already collected ([[graft.tools.Checkpoints.pinBounded]]);
+    * model table the old path already collected to the driver;
     * embedding them as literals moves the same k dot products into
     * the scan projection — zero joins, zero shuffles, whole-stage
     * codegen.
@@ -463,7 +463,7 @@ object Similarity {
   private[graft] def kmeansTrainOn(e: org.apache.spark.sql.DataFrame,
       k: Int, iters: Int): CentModel = {
     // seed model: ≤ k rows collected — the same rows the old code
-    // pinned to a driver-local relation via pinBounded
+    // pinned to a driver-local relation
     var cent: CentModel = e.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cell"), col("q")).collect()
       .map(r => r.getInt(0) -> r.getSeq[Long](1).toVector)
@@ -698,7 +698,7 @@ object Similarity {
       ej.select(lit(j).as("j"), col("vec_id"), col("q"), col("qn"))
     }.reduce(_ unionByName _)
     // per-subspace seed books: one ≤ 4k-row collect (the model-table
-    // driver-budget class; the old path pinBounded the same rows)
+    // driver-budget class; the old path pinned the same rows)
     val seedRows = ejAll.filter(col("vec_id") < k)
       .select(col("j"), col("vec_id").cast("int").as("cell"), col("q"))
       .collect()

@@ -31,10 +31,6 @@ object CsvSinks {
       .orderBy("Property Address", "Agent") // deterministic K4 order
   }
 
-  def writeListings(listings: Dataset[Listing], path: String): Unit =
-    listingsFrame(listings).coalesce(1).write.mode("overwrite")
-      .option("header", "true").csv(path)
-
   /** K2: JSON state snapshot (main.py:144-171). In streaming this is
     * the checkpoint; in batch an explicit overwrite dump keyed by mls. */
   def writeState(state: Dataset[Listing], path: String): Unit =

@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * Two surfaces:
   *  - [[triageBatch]] — the per-micro-batch core (also the batch-mode
   *    reference the spec pins row-parity against);
-  *  - [[triageStream]] — wires it through foreachBatch, the standard
-  *    production shape for per-batch join+agg pipelines.
+  *  - [[MicroBatch.start]] with it — wires it through foreachBatch,
+  *    the standard production shape for per-batch join+agg pipelines.
   */
 object StreamingAnn {
 
@@ -99,17 +99,4 @@ object StreamingAnn {
         when(col("cosine") >= threshold, col("cand")).as("dup_of"),
         col("cosine"))
   }
-
-  /** Production wiring: run [[triageBatch]] per micro-batch via
-    * foreachBatch and hand each verdict frame (with its batch id) to
-    * `sink`. Returns the started query; caller stops it. */
-  def triageStream(stream: DataFrame, idx: CorpusIndex, threshold: Double,
-      checkpointDir: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(triageBatch(batch, idx, threshold), id)
-      }
-      .start()
 }

@@ -47,17 +47,4 @@ object StreamingBpe {
   def encodeBatch(spark: SparkSession, newDocs: DataFrame,
       idx: BpeIndex): DataFrame =
     BpeTrainer.encode(spark, newDocs, idx.merges)
-
-  /** Production wiring: run [[encodeBatch]] per micro-batch via
-    * foreachBatch and hand each count frame (with its batch id) to
-    * `sink`. Returns the started query; caller stops it. */
-  def encodeStream(spark: SparkSession, stream: DataFrame, idx: BpeIndex,
-      checkpointDir: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(encodeBatch(spark, batch, idx), id)
-      }
-      .start()
 }

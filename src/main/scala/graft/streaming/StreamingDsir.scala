@@ -51,16 +51,4 @@ object StreamingDsir {
         sum(col("c") * col("lr_fp")).as("logratio_sum_micro"))
       .select(col("doc_id"), col("n_tokens"), col("logratio_sum_micro"),
         (col("logratio_sum_micro") > 0L).as("is_target_like"))
-
-  /** Production wiring: run [[scoreBatch]] per micro-batch via
-    * foreachBatch and hand each verdict frame (with its batch id) to
-    * `sink`. Returns the started query; caller stops it. */
-  def scoreStream(stream: DataFrame, idx: DsirIndex, checkpointDir: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(scoreBatch(batch, idx), id)
-      }
-      .start()
 }

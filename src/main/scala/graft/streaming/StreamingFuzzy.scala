@@ -90,15 +90,4 @@ object StreamingFuzzy {
         when(coalesce(col("present"), lit(false)), lit(null))
           .otherwise(col("lev0")).as("lev"))
   }
-
-  /** foreachBatch wiring, same contract as [[StreamingAnn.triageStream]]. */
-  def triageStream(stream: DataFrame, idx: CatalogIndex,
-      checkpointDir: String)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(triageBatch(batch, idx), id)
-      }
-      .start()
 }

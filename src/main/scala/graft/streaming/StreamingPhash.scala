@@ -73,14 +73,4 @@ object StreamingPhash {
         when(col("hamming") <= idx.theta, col("cand")).as("dup_of"),
         when(col("hamming") <= idx.theta, col("hamming")).as("hamming"))
   }
-
-  /** foreachBatch wiring, same contract as [[StreamingAnn.triageStream]]. */
-  def triageStream(stream: DataFrame, idx: PhashIndex, checkpointDir: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(triageBatch(batch, idx), id)
-      }
-      .start()
 }

@@ -65,16 +65,4 @@ object StreamingPq {
         (col("code_0") + col("code_1") * 16 + col("code_2") * 256 +
           col("code_3") * 4096).as("packed"))
   }
-
-  /** Production wiring: run [[encodeBatch]] per micro-batch via
-    * foreachBatch and hand each code frame (with its batch id) to
-    * `sink`. Returns the started query; caller stops it. */
-  def encodeStream(stream: DataFrame, idx: PqIndex, checkpointDir: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(encodeBatch(batch, idx), id)
-      }
-      .start()
 }

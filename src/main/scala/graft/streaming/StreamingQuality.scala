@@ -69,16 +69,4 @@ object StreamingQuality {
       .join(scored, Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_bigrams", "n_oov", "nll_sum"))
   }
-
-  /** Production wiring: run [[scoreBatch]] per micro-batch via
-    * foreachBatch and hand each verdict frame (with its batch id) to
-    * `sink`. Returns the started query; caller stops it. */
-  def scoreStream(stream: DataFrame, idx: LmIndex, checkpointDir: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(scoreBatch(batch, idx), id)
-      }
-      .start()
 }

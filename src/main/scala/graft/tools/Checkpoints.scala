@@ -97,36 +97,6 @@ object Checkpoints {
   private def tapPlan(ds: Dataset[_]): Unit =
     planTap.foreach(f => f(ds.queryExecution.executedPlan.toString))
 
-  /** Pin a BOUNDED table as a driver-local relation: collect and
-    * re-create, so downstream plans embed it as data instead of
-    * referencing a checkpointed RDD.
-    *
-    * Why not localCheckpoint for these: a checkpointed Dataset's
-    * final-stage RDD keeps its task closure (codegen source,
-    * references) even after lineage truncation, and every downstream
-    * stage that scans the checkpoint serializes that residual into
-    * its own task binary — measured at a byte-stable ~1–2 MiB per
-    * stage in the k-means training loop (the DAGScheduler
-    * large-task-binary WARNs in the r10 bench tail; r11 bisection:
-    * warns start exactly when a loop input switches from a
-    * filter-shaped checkpoint to an aggregate-shaped one, and vanish
-    * when the input is a local relation). A LOCAL relation serializes
-    * as the rows themselves — for a k×dim model table that is a few
-    * KB, and it is what a production trainer does with the model
-    * anyway (centroids/codebooks live with the driver, the CORPUS
-    * stays distributed).
-    *
-    * Contract: `df` must be bounded by construction (k-means
-    * centroids, PQ codebooks — cardinality set by model
-    * hyperparameters, independent of corpus size). Corpus-scale
-    * iteration state keeps using [[SerCheckpoint.serCheckpoint]]. */
-  def pinBounded(df: DataFrame): DataFrame = {
-    val rows = df.collect()
-    df.sparkSession.createDataFrame(
-      new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-      df.schema)
-  }
-
   /** Session-scoped registry of per-run SCRATCH checkpoints — loop
     * state and multi-consumer intermediates whose blocks the query's
     * OUTPUT still references, so they cannot be released inside the

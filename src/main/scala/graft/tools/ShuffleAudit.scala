@@ -136,13 +136,15 @@ object ShuffleAudit {
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
     val out = rest.lift(1)
     val all = flags.contains("--all")
+    // --only=a,b re-measures the named queries (exact registry names)
+    // — for iterating on one query family without paying the full
+    // sweep. An unknown name throws here, before the session starts,
+    // instead of auditing nothing.
+    val qs = only.fold(
+      if (all) Registry.all else Registry.all.filter(_.bench))(
+      Registry.select)
     val spark = graft.Sessions.local()
 
-    val base = if (all) Registry.all else Registry.all.filter(_.bench)
-    // --only=a,b re-measures a named subset (substring match) — for
-    // iterating on one query family without paying the full sweep
-    val qs = only.fold(base)(names =>
-      base.filter(q => names.exists(q.name.contains)))
     // --teardown: clear session artifacts between measured queries
     // even in bench-set mode. Without it a sweep's checkpointed
     // artifacts accumulate across queries, so a later query's spill
@@ -153,7 +155,8 @@ object ShuffleAudit {
     val rows = measure(spark, sfDir, qs, warm = true, teardown = teardown)
     val doc = render(rows, sfDir,
       if (all) s"FULL registry, ${qs.length} queries, per-query artifact teardown"
-      else s"bench set, ${qs.length} queries" +
+      else s"${if (only.isDefined) "named" else "bench"} set, " +
+        s"${qs.length} queries" +
         (if (teardown) ", per-query artifact teardown" else ""))
     out match {
       case Some(p) =>

@@ -202,17 +202,23 @@ object StreamBench {
       graft.streaming.StreamingAnn.buildIndex(emb, tables = 2,
         bits = graft.queries.Dedup.bitsFor(nVecs, 20), cap = 128)
     }
-    val annStats = {
-      val q = graft.streaming.StreamingAnn.triageStream(
-          fileStream(s"$work/emb_in", embSchema), annIdx,
-          threshold = 0.9, s"$work/ckpt_ann") { (verdicts, _) =>
-        verdicts.write.mode("append").parquet(s"$work/ann_out")
+    // One stream-static twin run: `batch` over `input` through
+    // MicroBatch into $work/<name>_out (checkpoint $work/ckpt_<name>),
+    // the drain timed, the written rows counted back.
+    def twinStats(input: DataFrame, name: String, rows: Long)(
+        batch: DataFrame => DataFrame): StreamStats = {
+      val q = graft.streaming.MicroBatch.start(input, s"$work/ckpt_$name")(
+          batch) { (out, _) =>
+        out.write.mode("append").parquet(s"$work/${name}_out")
       }
       val (_, wall) = timed { q.processAllAvailable() }
-      val st = statsOf(q, nVecs, wall,
-        spark.read.parquet(s"$work/ann_out").count())
+      val st = statsOf(q, rows, wall,
+        spark.read.parquet(s"$work/${name}_out").count())
       q.stop(); st
     }
+
+    val annStats = twinStats(fileStream(s"$work/emb_in", embSchema), "ann",
+      nVecs)(graft.streaming.StreamingAnn.triageBatch(_, annIdx, 0.9))
 
     // PQ prefers the ATTACHED artifact codebooks (the tokenizer-style
     // read path); falls back to a one-off train when no artifact set
@@ -229,33 +235,15 @@ object StreamBench {
         graft.streaming.StreamingPq.buildIndex(emb))
       (idx, attached.nonEmpty, (System.nanoTime() - t0) / 1e9)
     }
-    val pqStats = {
-      val q = graft.streaming.StreamingPq.encodeStream(
-          fileStream(s"$work/emb_in", embSchema), pqIdx,
-          s"$work/ckpt_pq") { (codes, _) =>
-        codes.write.mode("append").parquet(s"$work/pq_out")
-      }
-      val (_, wall) = timed { q.processAllAvailable() }
-      val st = statsOf(q, nVecs, wall,
-        spark.read.parquet(s"$work/pq_out").count())
-      q.stop(); st
-    }
+    val pqStats = twinStats(fileStream(s"$work/emb_in", embSchema), "pq",
+      nVecs)(graft.streaming.StreamingPq.encodeBatch(_, pqIdx))
 
     val (phIdx, phPrep) = timed {
       graft.streaming.StreamingPhash.buildIndex(
         Tables.documents(spark, sfDir).select($"doc_id", $"text"))
     }
-    val phashStats = {
-      val q = graft.streaming.StreamingPhash.triageStream(
-          fileStream(s"$work/docs_in", docSchema), phIdx,
-          s"$work/ckpt_phash") { (verdicts, _) =>
-        verdicts.write.mode("append").parquet(s"$work/phash_out")
-      }
-      val (_, wall) = timed { q.processAllAvailable() }
-      val st = statsOf(q, nDocs, wall,
-        spark.read.parquet(s"$work/phash_out").count())
-      q.stop(); st
-    }
+    val phashStats = twinStats(fileStream(s"$work/docs_in", docSchema),
+      "phash", nDocs)(graft.streaming.StreamingPhash.triageBatch(_, phIdx))
 
     // ---- attached twins at full-corpus batch size (VERDICT r13 #5):
     // dedup's single-batch row proved throughput is per-batch-overhead
@@ -268,39 +256,14 @@ object StreamBench {
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", slices.toString).parquet(dir)
 
-    val annBigStats = {
-      val q = graft.streaming.StreamingAnn.triageStream(
-          fullStream(s"$work/emb_in", embSchema), annIdx,
-          threshold = 0.9, s"$work/ckpt_ann_big") { (verdicts, _) =>
-        verdicts.write.mode("append").parquet(s"$work/ann_big_out")
-      }
-      val (_, wall) = timed { q.processAllAvailable() }
-      val st = statsOf(q, nVecs, wall,
-        spark.read.parquet(s"$work/ann_big_out").count())
-      q.stop(); st
-    }
-    val pqBigStats = {
-      val q = graft.streaming.StreamingPq.encodeStream(
-          fullStream(s"$work/emb_in", embSchema), pqIdx,
-          s"$work/ckpt_pq_big") { (codes, _) =>
-        codes.write.mode("append").parquet(s"$work/pq_big_out")
-      }
-      val (_, wall) = timed { q.processAllAvailable() }
-      val st = statsOf(q, nVecs, wall,
-        spark.read.parquet(s"$work/pq_big_out").count())
-      q.stop(); st
-    }
-    val phashBigStats = {
-      val q = graft.streaming.StreamingPhash.triageStream(
-          fullStream(s"$work/docs_in", docSchema), phIdx,
-          s"$work/ckpt_phash_big") { (verdicts, _) =>
-        verdicts.write.mode("append").parquet(s"$work/phash_big_out")
-      }
-      val (_, wall) = timed { q.processAllAvailable() }
-      val st = statsOf(q, nDocs, wall,
-        spark.read.parquet(s"$work/phash_big_out").count())
-      q.stop(); st
-    }
+    val annBigStats = twinStats(fullStream(s"$work/emb_in", embSchema),
+      "ann_big", nVecs)(
+      graft.streaming.StreamingAnn.triageBatch(_, annIdx, 0.9))
+    val pqBigStats = twinStats(fullStream(s"$work/emb_in", embSchema),
+      "pq_big", nVecs)(graft.streaming.StreamingPq.encodeBatch(_, pqIdx))
+    val phashBigStats = twinStats(fullStream(s"$work/docs_in", docSchema),
+      "phash_big", nDocs)(
+      graft.streaming.StreamingPhash.triageBatch(_, phIdx))
 
     // ---- stateful machines + kill/restart midway, on BOTH state
     // store providers (VERDICT r14 #6: the HDFS-backed map is the

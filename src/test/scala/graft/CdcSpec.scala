@@ -1,12 +1,12 @@
 package graft
 
-import graft.model.{Listing, ListingEvent}
+import graft.model.Listing
 import graft.operators.Cdc
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
 
 /** T2/T5/J2/J3 semantics: the scripted 3-cycle scenario from SURVEY §5
-  * (new → price change → disappear) plus idempotence + streaming. */
+  * (new → price change → disappear) plus idempotence and restore from
+  * the state snapshot. The streaming form's cases are in
+  * CdcEventTimeSpec and CdcRecoverySpec. */
 class CdcSpec extends SparkSpec {
   import spark.implicits._
 
@@ -63,83 +63,21 @@ class CdcSpec extends SparkSpec {
       Seq(("A", "off_market"), ("B", "price_change"), ("C", "new_listing")))
   }
 
-  /** With ProcessingTimeTimeout the micro-batch engine keeps
-    * constructing timeout-check batches, so processAllAvailable never
-    * sees a quiescent stream — poll the sink with a deadline instead. */
-  private def awaitRows(table: String, pred: Seq[ListingEvent] => Boolean,
-      timeoutMs: Long = 60000): Seq[ListingEvent] = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var got = Seq.empty[ListingEvent]
-    while (System.currentTimeMillis() < deadline && !pred(got)) {
-      Thread.sleep(200)
-      got = spark.table(table).as[ListingEvent].collect().toSeq
-    }
-    got
-  }
-
-  test("streaming CDC: flatMapGroupsWithState emits new + price_change") {
-    implicit val sqlCtx = spark.sqlContext
-    val fixedNow = now // local copy — the closure must not capture the spec
-    val input = MemoryStream[Listing]
-    val events = Cdc.streamingEvents(input.toDS(), offMarketTimeoutMs = 600000,
-      nowEpoch = () => fixedNow)
-    val q = events.writeStream
-      .format("memory").queryName("cdc_out").outputMode(OutputMode.Append)
-      .start()
-    try {
-      input.addData(Listing.minimal("A", 100))
-      awaitRows("cdc_out", _.size >= 1)
-      input.addData(Listing.minimal("A", 80), Listing.minimal("B", 50))
-      val got = awaitRows("cdc_out", _.size >= 3)
-        .map(e => (e.mls, e.status)).sorted
-      assert(got == Seq(("A", "new_listing"), ("A", "price_change"),
-        ("B", "new_listing")))
-    } finally q.stop()
-  }
-
-  test("S11/T3: stream bootstrapped from the K2 JSON snapshot keeps continuity") {
+  test("S11/T3: a cycle restored from the K2 JSON snapshot keeps continuity") {
     // the reference loads SavedListings.json BEFORE polling (main.py:98):
     // a price change across a restart must be a price_change, never a
-    // new_listing. initialState seeds the state store from the snapshot.
-    implicit val sqlCtx = spark.sqlContext
-    val fixedNow = now
+    // new_listing. The cycle's path: the state goes out through
+    // writeState, comes back through readState, and batchEvents probes it.
     val dir = java.nio.file.Files.createTempDirectory("cdc_boot").toString + "/st"
     graft.sinks.CsvSinks.writeState(
       Seq(Listing.minimal("A", 100, foundDate = now - day)).toDS(), dir)
-    val init = graft.sinks.CsvSinks.readState(spark, dir)
-    val input = MemoryStream[Listing]
-    val events = Cdc.streamingEvents(input.toDS(), offMarketTimeoutMs = 600000,
-      nowEpoch = () => fixedNow, initialState = Some(init))
-    val q = events.writeStream
-      .format("memory").queryName("cdc_boot").outputMode(OutputMode.Append)
-      .start()
-    try {
-      input.addData(Listing.minimal("A", 80), Listing.minimal("B", 50))
-      val got = awaitRows("cdc_boot", _.size >= 2)
-        .map(e => (e.mls, e.status)).sorted
-      assert(got == Seq(("A", "price_change"), ("B", "new_listing")))
-      val a = spark.table("cdc_boot").as[ListingEvent]
-        .filter(_.mls == "A").head()
-      assert(a.oldPrice.contains(100L)) // old price came from the snapshot
-    } finally q.stop()
-  }
-
-  test("streaming CDC: processing-time timeout emits off_market") {
-    implicit val sqlCtx = spark.sqlContext
-    val fixedNow = now // local copy — the closure must not capture the spec
-    val input = MemoryStream[Listing]
-    val events = Cdc.streamingEvents(input.toDS(), offMarketTimeoutMs = 100,
-      nowEpoch = () => fixedNow)
-    val q = events.writeStream
-      .format("memory").queryName("cdc_timeout").outputMode(OutputMode.Append)
-      .start()
-    try {
-      input.addData(Listing.minimal("A", 100, foundDate = now - 3 * day))
-      val got = awaitRows("cdc_timeout", _.exists(_.status == "off_market"))
-      val off = got.filter(_.status == "off_market")
-      assert(off.map(_.mls) == Seq("A"))
-      assert(off.head.timeOnMarketDays.contains(3))
-    } finally q.stop()
+    val restored = graft.sinks.CsvSinks.readState(spark, dir)
+    val cur = Seq(Listing.minimal("A", 80), Listing.minimal("B", 50)).toDS()
+    val ev = Cdc.batchEvents(restored, cur, now).collect()
+    assert(ev.map(e => (e.mls, e.status)).sorted.toSeq ==
+      Seq(("A", "price_change"), ("B", "new_listing")))
+    // old price came from the snapshot
+    assert(ev.find(_.mls == "A").get.oldPrice.contains(100L))
   }
 
   test("SCD-2: repeated values collapse, intervals chain, one current row") {

@@ -176,17 +176,4 @@ class PipelineSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(salted == plain)
   }
-
-  test("salted join matches plain join") {
-    val li = Tables.lineitem(spark, sf("sf0.001")).limit(2000)
-    val s = Tables.supplier(spark, sf("sf0.001"))
-      .withColumnRenamed("s_suppkey", "l_suppkey")
-    val plain = li.join(s, Seq("l_suppkey"))
-      .groupBy($"s_name").count().collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    val salted = Skew.saltedJoin(li, s, "l_suppkey", 8)
-      .groupBy($"s_name").count().collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(salted == plain)
-  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.CountMinSketch
 import org.apache.spark.sql.functions._
 
 /** Scale-layout proofs: bucketed co-located joins eliminate the
@@ -456,26 +455,6 @@ class ScaleLayoutSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
-  }
-
-  test("CMS sketch: one-pass approximate frequencies with upper-bound guarantee") {
-    val cms = new CountMinSketch(depth = 4, width = 256)
-    val docs = Tables.documents(spark, sf("sf0.001"))
-    val truth = docs.groupBy($"source").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val n = truth.values.sum
-
-    val sketch = docs.select($"source").as[String]
-      .select(cms.toColumn).head()
-
-    truth.foreach { case (k, exact) =>
-      val est = cms.estimate(sketch, k)
-      assert(est >= exact, s"CMS must never undercount: $k $est < $exact")
-      assert(est <= exact + (0.05 * n).toLong,
-        s"CMS overcount beyond bound: $k est=$est exact=$exact n=$n")
-    }
-    // unseen key stays near zero
-    assert(cms.estimate(sketch, "no_such_source") <= (0.05 * n).toLong)
   }
 
   test("q_join_skew_report: three single-column pruned scans, no wide reads") {

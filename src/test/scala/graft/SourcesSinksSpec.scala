@@ -1,12 +1,11 @@
 package graft
 
 import graft.model.Listing
-import graft.operators.MediaPipeline
 import graft.sinks.CsvSinks
 import graft.sources.{FileScans, FixtureSource}
 import java.nio.file.Files
 
-/** S1/S7/S8/S9 sources, K2/K3/K4 sinks, and the multimodal pipeline. */
+/** S1/S7/S8/S9 sources and K2/K3/K4 sinks. */
 class SourcesSinksSpec extends SparkSpec {
   import spark.implicits._
 
@@ -136,48 +135,5 @@ class SourcesSinksSpec extends SparkSpec {
     // by Spark's state-store schema check; cross-version durability
     // rides this JSON snapshot (K2), the reference's own format.
     assert(rows.head.expiration_date.isEmpty)
-  }
-
-  test("multimodal: resize bounds payload by target dims; frame-sample explodes videos") {
-    val docs = Tables.documents(spark, sf("sf0.001"))
-    val assets = MediaPipeline.assetsFromDocuments(docs).cache()
-
-    val resized = MediaPipeline.resize(assets, 64, 64).cache()
-    assert(resized.count() == assets.count())
-    // output payload bounded by target resolution, not source size
-    assert(resized.collect().forall(r =>
-      r.payload.length <= 64 * 64 / 64 && r.width == 64 && r.height == 64))
-    // deterministic: re-run byte-identical
-    val again = MediaPipeline.resize(assets, 64, 64).collect()
-      .map(r => r.asset_id -> r.payload.toSeq).toMap
-    assert(resized.collect().forall(r => again(r.asset_id) == r.payload.toSeq))
-
-    val frames = MediaPipeline.sampleFrames(assets, every = 3).cache()
-    val byType = assets.collect().map(a => a.asset_id -> a).toMap
-    val counts = frames.groupByKey(_.asset_id).count().collect().toMap
-    counts.foreach { case (id, n) =>
-      val a = byType(id)
-      if (a.media_type == "video") {
-        val total = MediaPipeline.decodeStub(a.payload, a.media_type)._3
-        assert(n == (total + 2) / 3, s"asset $id: $n of $total frames")
-      } else assert(n == 1)
-    }
-    resized.unpersist(); frames.unpersist(); assets.unpersist()
-  }
-
-  test("multimodal: per-partition batched decode, deterministic features") {
-    val docs = Tables.documents(spark, sf("sf0.001"))
-    val assets = MediaPipeline.assetsFromDocuments(docs)
-    val feats = MediaPipeline.extractFeatures(assets).cache()
-    assert(feats.count() == docs.count())
-    val f = feats.filter(_.asset_id == 0).head()
-    assert(f.n_bytes > 0 && f.width >= 1 && f.width <= 640 && f.height >= 1)
-    // videos get multi-frame, images/audio exactly 1
-    assert(feats.filter(_.media_type != "video").collect().forall(_.n_frames == 1))
-    assert(feats.filter(_.media_type == "video").collect().forall(_.n_frames >= 2))
-    // deterministic: second run identical
-    val again = MediaPipeline.extractFeatures(assets).collect().toSet
-    assert(again == feats.collect().toSet)
-    feats.unpersist()
   }
 }

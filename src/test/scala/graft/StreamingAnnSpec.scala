@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.Dedup
-import graft.streaming.StreamingAnn
+import graft.streaming.{MicroBatch, StreamingAnn}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -36,7 +36,8 @@ class StreamingAnnSpec extends SparkSpec {
       .withColumn("embedding", $"embedding".cast("array<float>"))
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Row])]
     val ckpt = java.nio.file.Files.createTempDirectory("sann").toString
-    val q = StreamingAnn.triageStream(stream, idx, threshold, ckpt) {
+    val q = MicroBatch.start(stream, ckpt)(
+        StreamingAnn.triageBatch(_, idx, threshold)) {
       (verdicts, id) => seen.synchronized {
         seen += id -> verdicts.collect().toSeq }
     }

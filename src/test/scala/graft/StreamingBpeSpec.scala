@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingBpe
+import graft.streaming.{MicroBatch, StreamingBpe}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -36,7 +36,8 @@ class StreamingBpeSpec extends SparkSpec {
     val stream = input.toDF().toDF("doc_id", "text")
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Row])]
     val ckpt = java.nio.file.Files.createTempDirectory("sbpe").toString
-    val q = StreamingBpe.encodeStream(spark, stream, idx, ckpt) {
+    val q = MicroBatch.start(stream, ckpt)(
+        StreamingBpe.encodeBatch(spark, _, idx)) {
       (counts, id) => seen.synchronized { seen += id -> counts.collect().toSeq }
     }
     try {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingDsir
+import graft.streaming.{MicroBatch, StreamingDsir}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -72,7 +72,8 @@ class StreamingDsirSpec extends SparkSpec {
     val stream = input.toDF().toDF("doc_id", "text")
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Row])]
     val ckpt = java.nio.file.Files.createTempDirectory("sdsir").toString
-    val q = StreamingDsir.scoreStream(stream, idx, ckpt) {
+    val q = MicroBatch.start(stream, ckpt)(
+        StreamingDsir.scoreBatch(_, idx)) {
       (verdicts, id) => seen.synchronized {
         seen += id -> verdicts.collect().toSeq }
     }

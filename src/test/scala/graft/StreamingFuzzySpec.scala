@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingFuzzy
+import graft.streaming.{MicroBatch, StreamingFuzzy}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -63,8 +63,8 @@ class StreamingFuzzySpec extends SparkSpec {
     val input = MemoryStream[String]
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Row])]
     val ckpt = java.nio.file.Files.createTempDirectory("sfuzzy").toString
-    val q = StreamingFuzzy.triageStream(
-      input.toDF().toDF("name"), idx, ckpt) { (v, id) =>
+    val q = MicroBatch.start(input.toDF().toDF("name"), ckpt)(
+        StreamingFuzzy.triageBatch(_, idx)) { (v, id) =>
       seen.synchronized { seen += id -> v.collect().toSeq }
     }
     try {

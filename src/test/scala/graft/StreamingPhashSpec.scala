@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingPhash
+import graft.streaming.{MicroBatch, StreamingPhash}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -26,8 +26,8 @@ class StreamingPhashSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Row])]
     val ckpt = java.nio.file.Files.createTempDirectory("sphash").toString
-    val q = StreamingPhash.triageStream(
-      input.toDF().toDF("doc_id", "text"), idx, ckpt) { (v, id) =>
+    val q = MicroBatch.start(input.toDF().toDF("doc_id", "text"), ckpt)(
+        StreamingPhash.triageBatch(_, idx)) { (v, id) =>
       seen.synchronized { seen += id -> v.collect().toSeq }
     }
     try {

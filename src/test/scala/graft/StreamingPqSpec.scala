@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingPq
+import graft.streaming.{MicroBatch, StreamingPq}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -36,7 +36,8 @@ class StreamingPqSpec extends SparkSpec {
       .withColumn("embedding", $"embedding".cast("array<float>"))
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Row])]
     val ckpt = java.nio.file.Files.createTempDirectory("spq").toString
-    val q = StreamingPq.encodeStream(stream, idx, ckpt) {
+    val q = MicroBatch.start(stream, ckpt)(
+        StreamingPq.encodeBatch(_, idx)) {
       (codes, id) => seen.synchronized { seen += id -> codes.collect().toSeq }
     }
     try {

@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Encoder, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Checkpoint-restart recovery for the stream-static triage family
   * (StreamingAnn / StreamingPhash / StreamingFuzzy / StreamingQuality
@@ -35,13 +34,12 @@ class StreamingProbeRecoverySpec extends SparkSpec {
     * Returns the non-empty sink batches in batch-id order. */
   private def runPhase[T: Encoder](
       toStream: MemoryStream[T] => DataFrame, ckpt: String,
-      start: (DataFrame, String, (DataFrame, Long) => Unit) => StreamingQuery,
-      batches: Seq[T]*): Seq[Seq[Row]] = {
+      batch: DataFrame => DataFrame, batches: Seq[T]*): Seq[Seq[Row]] = {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[T]
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Row])]
-    val q = start(toStream(input), ckpt,
-      (df, id) => seen.synchronized { seen += id -> df.collect().toSeq })
+    val q = MicroBatch.start(toStream(input), ckpt)(batch) {
+      (df, id) => seen.synchronized { seen += id -> df.collect().toSeq } }
     try batches.foreach { b => input.addData(b); q.processAllAvailable() }
     finally q.stop()
     seen.synchronized(
@@ -86,10 +84,10 @@ class StreamingProbeRecoverySpec extends SparkSpec {
 
     val idx1 = StreamingAnn.buildIndex(corpus, 8, 4, cap = 64)
     val r1 = runPhase[(Long, Seq[Float])](vecStream, ckpt,
-      StreamingAnn.triageStream(_, idx1, 0.9, _)(_), b1)
+      StreamingAnn.triageBatch(_, idx1, 0.9), b1)
     val idx2 = StreamingAnn.buildIndex(corpus, 8, 4, cap = 64)
     val r2 = runPhase[(Long, Seq[Float])](vecStream, ckpt,
-      StreamingAnn.triageStream(_, idx2, 0.9, _)(_), b1, b2)
+      StreamingAnn.triageBatch(_, idx2, 0.9), b1, b2)
     checkRecovery(r1, r2,
       StreamingAnn.triageBatch(vecDf(b1), idx1, 0.9).collect().toSeq,
       StreamingAnn.triageBatch(vecDf(b2), idx2, 0.9).collect().toSeq,
@@ -108,11 +106,11 @@ class StreamingProbeRecoverySpec extends SparkSpec {
     val idx1 = StreamingPhash.buildIndex(corpus)
     val r1 = runPhase[(Long, String)](
       _.toDF().toDF("doc_id", "text"), ckpt,
-      StreamingPhash.triageStream(_, idx1, _)(_), b1)
+      StreamingPhash.triageBatch(_, idx1), b1)
     val idx2 = StreamingPhash.buildIndex(corpus)
     val r2 = runPhase[(Long, String)](
       _.toDF().toDF("doc_id", "text"), ckpt,
-      StreamingPhash.triageStream(_, idx2, _)(_), b1, b2)
+      StreamingPhash.triageBatch(_, idx2), b1, b2)
     checkRecovery(r1, r2,
       StreamingPhash.triageBatch(b1.toDF("doc_id", "text"), idx1).collect().toSeq,
       StreamingPhash.triageBatch(b2.toDF("doc_id", "text"), idx2).collect().toSeq,
@@ -131,10 +129,10 @@ class StreamingProbeRecoverySpec extends SparkSpec {
 
     val idx1 = StreamingFuzzy.buildIndex(catalog, tau = 1)
     val r1 = runPhase[String](_.toDF().toDF("name"), ckpt,
-      StreamingFuzzy.triageStream(_, idx1, _)(_), b1)
+      StreamingFuzzy.triageBatch(_, idx1), b1)
     val idx2 = StreamingFuzzy.buildIndex(catalog, tau = 1)
     val r2 = runPhase[String](_.toDF().toDF("name"), ckpt,
-      StreamingFuzzy.triageStream(_, idx2, _)(_), b1, b2)
+      StreamingFuzzy.triageBatch(_, idx2), b1, b2)
     checkRecovery(r1, r2,
       StreamingFuzzy.triageBatch(b1.toDF("name"), idx1).collect().toSeq,
       StreamingFuzzy.triageBatch(b2.toDF("name"), idx2).collect().toSeq,
@@ -153,11 +151,11 @@ class StreamingProbeRecoverySpec extends SparkSpec {
     val idx1 = StreamingQuality.buildLm(corpus)
     val r1 = runPhase[(Long, String)](
       _.toDF().toDF("doc_id", "text"), ckpt,
-      StreamingQuality.scoreStream(_, idx1, _)(_), b1)
+      StreamingQuality.scoreBatch(_, idx1), b1)
     val idx2 = StreamingQuality.buildLm(corpus)
     val r2 = runPhase[(Long, String)](
       _.toDF().toDF("doc_id", "text"), ckpt,
-      StreamingQuality.scoreStream(_, idx2, _)(_), b1, b2)
+      StreamingQuality.scoreBatch(_, idx2), b1, b2)
     checkRecovery(r1, r2,
       StreamingQuality.scoreBatch(b1.toDF("doc_id", "text"), idx1).collect().toSeq,
       StreamingQuality.scoreBatch(b2.toDF("doc_id", "text"), idx2).collect().toSeq,
@@ -175,10 +173,10 @@ class StreamingProbeRecoverySpec extends SparkSpec {
 
     val idx1 = StreamingPq.buildIndex(corpus)
     val r1 = runPhase[(Long, Seq[Float])](vecStream, ckpt,
-      StreamingPq.encodeStream(_, idx1, _)(_), b1)
+      StreamingPq.encodeBatch(_, idx1), b1)
     val idx2 = StreamingPq.buildIndex(corpus)
     val r2 = runPhase[(Long, Seq[Float])](vecStream, ckpt,
-      StreamingPq.encodeStream(_, idx2, _)(_), b1, b2)
+      StreamingPq.encodeBatch(_, idx2), b1, b2)
     checkRecovery(r1, r2,
       StreamingPq.encodeBatch(vecDf(b1), idx1).collect().toSeq,
       StreamingPq.encodeBatch(vecDf(b2), idx2).collect().toSeq,
@@ -199,11 +197,11 @@ class StreamingProbeRecoverySpec extends SparkSpec {
     val idx1 = StreamingDsir.buildIndex(corpus)
     val r1 = runPhase[(Long, String)](
       _.toDF().toDF("doc_id", "text"), ckpt,
-      StreamingDsir.scoreStream(_, idx1, _)(_), b1)
+      StreamingDsir.scoreBatch(_, idx1), b1)
     val idx2 = StreamingDsir.buildIndex(corpus)
     val r2 = runPhase[(Long, String)](
       _.toDF().toDF("doc_id", "text"), ckpt,
-      StreamingDsir.scoreStream(_, idx2, _)(_), b1, b2)
+      StreamingDsir.scoreBatch(_, idx2), b1, b2)
     checkRecovery(r1, r2,
       StreamingDsir.scoreBatch(b1.toDF("doc_id", "text"), idx1).collect().toSeq,
       StreamingDsir.scoreBatch(b2.toDF("doc_id", "text"), idx2).collect().toSeq,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingQuality
+import graft.streaming.{MicroBatch, StreamingQuality}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -69,7 +69,8 @@ class StreamingQualitySpec extends SparkSpec {
     val stream = input.toDF().toDF("doc_id", "text")
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Row])]
     val ckpt = java.nio.file.Files.createTempDirectory("squal").toString
-    val q = StreamingQuality.scoreStream(stream, idx, ckpt) {
+    val q = MicroBatch.start(stream, ckpt)(
+        StreamingQuality.scoreBatch(_, idx)) {
       (verdicts, id) => seen.synchronized {
         seen += id -> verdicts.collect().toSeq }
     }

@@ -158,8 +158,7 @@ class TextOpsSpec extends SparkSpec {
     assert(dup.get.getAs[Double]("jaccard") == 1.0 &&
       dup.get.getAs[Boolean]("is_dup"))
     // every verified pair is an LSH candidate (verify never widens)
-    val cand = queries.Dedup.lshCandidatePairs(
-      spark.read.parquet(s"$dir/documents.parquet"))
+    val cand = queries.Dedup.qLshPairs.run(spark, dir)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).forall(cand.contains))
