@@ -26,6 +26,25 @@ import org.apache.spark.sql.functions._
   */
 object HammingBands {
 
+  /** The `nBands` band values of a sketch column: band b holds bits
+    * [b·bandBits, (b+1)·bandBits). */
+  def bandValues(sh: Column, nBands: Int, bandBits: Int): Column = {
+    val mask = (1L << bandBits) - 1
+    array((0 until nBands).map(b =>
+      shiftright(sh, bandBits * b).bitwiseAND(lit(mask))): _*)
+  }
+
+  /** (doc_id, band, bval) memberships of (doc_id, sh) sketches, each
+    * (band, bval) bucket capped to its `cap` lowest doc_ids
+    * ([[BucketCap.lowestIds]]) — the band index nearDupPairs pairs
+    * within and StreamingPhash probes. */
+  def cappedBands(sketches: DataFrame, nBands: Int, bandBits: Int,
+      cap: Int): DataFrame =
+    BucketCap.lowestIds(
+      sketches.select(col("doc_id"),
+        posexplode(bandValues(col("sh"), nBands, bandBits)).as(Seq("band", "bval"))),
+      Seq("band", "bval"), "doc_id", cap)
+
   /** sketches: (doc_id, sh) — sh a ≤63-bit non-negative long sketch.
     * Returns (doc_a, doc_b, hamming, is_dup θ-verified), doc_a <
     * doc_b. */
@@ -34,46 +53,7 @@ object HammingBands {
     // deferred per-run scratch (round 15): un-registered, repeated
     // bench passes stacked a fresh generation of this checkpoint
     val sh = graft.tools.Checkpoints.defer(sketches.localCheckpoint(true))
-    val mask = (1L << bandBits) - 1
-    val bandVals: Column = array((0 until nBands).map(b =>
-      shiftright(col("sh"), bandBits * b).bitwiseAND(lit(mask))): _*)
-    // cap via the native bounded top-k aggregate, not a bucket window
-    // (round 15): row_number().over(partitionBy(band, bval)) sorted
-    // the whole exploded nBands×N table inside its bucket partitions;
-    // the aggregate keeps the cap lowest doc_ids per bucket with
-    // bounded map-side state, so the one shuffle moves ≤ cap entries
-    // per (bucket, input partition) and a degenerate bucket costs cap
-    // heap slots instead of a full bucket sort. score = −doc_id ranks
-    // lowest ids first (exact in a double up to 2^53 — far above any
-    // real doc-id space); the kept SET is identical to rn <= cap.
-    val banded = sh
-      .select(col("doc_id"), posexplode(bandVals).as(Seq("band", "bval")))
-    // threshold 1024, not 2^16 (ADVICE r15): TopKBuf preallocates
-    // 16·cap-byte buffers per bucket group and shift-inserts in
-    // O(cap) — near the old threshold that beats no window; only
-    // cap ≤ 256 is exercised today
-    val capped =
-      if (cap <= 1024)
-        banded
-          .groupBy(col("band"), col("bval"))
-          .agg(org.apache.spark.sql.graft.TopKAggregate
-            .of(col("doc_id"), -col("doc_id").cast("double"), cap).as("tk"))
-          .select(col("band"), col("bval"), explode(col("tk")).as("e"))
-          // cast back to the INPUT id type (ADVICE r15) so both cap
-          // branches agree on output schema (no-op for int64 ids)
-          .select(col("e.id").cast(sketches.schema("doc_id").dataType)
-            .as("doc_id"), col("band"), col("bval"))
-      else {
-        // cap effectively disabled (recall probes pass Int.MaxValue):
-        // the bounded aggregate would preallocate cap-sized buffers,
-        // so the uncapped diagnostic path keeps the window form
-        import org.apache.spark.sql.expressions.Window
-        banded
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("band"), col("bval"))
-              .orderBy(col("doc_id"))))
-          .filter(col("rn") <= cap).drop("rn")
-      }
+    val capped = cappedBands(sh, nBands, bandBits, cap)
     val pairs = capped.as("l")
       .join(capped.as("r"),
         col("l.band") === col("r.band") && col("l.bval") === col("r.bval") &&

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
+import graft.functions.VectorExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tools.{Artifacts, Checkpoints, SessionCache}
@@ -483,6 +484,15 @@ object Dedup {
       posexplode(org.apache.spark.sql.graft.HyperplaneBuckets
         .of(col("q"), tables, bits)).as(Seq("tbl", "bucket")))
 
+  /** (vec_id, tbl, bucket) memberships of [[annBuckets]] with each
+    * (tbl, bucket) capped to its `cap` lowest vec_ids
+    * ([[graft.operators.BucketCap.lowestIds]]) — the index
+    * [[annCandidatePairs]] pairs within and StreamingAnn probes. */
+  def annCappedBuckets(sig: DataFrame, tables: Int, bits: Int,
+      cap: Int): DataFrame =
+    graft.operators.BucketCap.lowestIds(annBuckets(sig, tables, bits),
+      Seq("tbl", "bucket"), "vec_id", cap)
+
   /** Candidate pairs from multi-table LSH with a deterministic
     * per-bucket population cap: within each (tbl, bucket) only the
     * `cap` lowest vec_ids participate in pairing, so a degenerate hot
@@ -491,42 +501,7 @@ object Dedup {
     * Pairs seen in several tables collapse via one distinct. */
   def annCandidatePairs(sig: DataFrame, tables: Int, bits: Int,
       cap: Int): DataFrame = {
-    // cap via the native bounded top-k aggregate, not a bucket window
-    // (the HammingBands recipe): the window form sorted the whole
-    // exploded tables×N bucket stream inside its partitions; the
-    // aggregate keeps the cap lowest vec_ids per (tbl, bucket) with
-    // bounded map-side state, so the one shuffle moves ≤ cap entries
-    // per (bucket, input partition) and a degenerate hot bucket costs
-    // cap heap slots instead of a full bucket sort. score = −vec_id
-    // ranks lowest ids first (exact in a double to 2^53); the kept SET
-    // is identical to rn <= cap. Recall probes pass Int.MaxValue —
-    // the bounded aggregate would preallocate cap-sized buffers, so
-    // the uncapped diagnostic path keeps the window form.
-    val buckets = annBuckets(sig, tables, bits)
-    // threshold 1024, not 2^16 (ADVICE r15): TopKBuf preallocates
-    // 16·cap-byte arrays per (tbl, bucket) group and shift-inserts in
-    // O(cap) — near the old threshold that is ~1 MB per group buffer
-    // and O(n·cap) on a hot bucket, likely worse than the window it
-    // replaces; only cap ≤ 256 is exercised today, and the window
-    // form stays correct (just unbounded-state) for bigger caps.
-    val capped =
-      if (cap <= 1024)
-        buckets
-          .groupBy(col("tbl"), col("bucket"))
-          .agg(org.apache.spark.sql.graft.TopKAggregate
-            .of(col("vec_id"), -col("vec_id").cast("double"), cap).as("tk"))
-          .select(col("tbl"), col("bucket"), explode(col("tk")).as("e"))
-          // cast back to the INPUT id type (ADVICE r15): the struct
-          // field is unconditionally BIGINT, so the two branches could
-          // disagree on output schema for non-long vec_id inputs
-          // (no-op for today's int64 ids)
-          .select(col("e.id").cast(sig.schema("vec_id").dataType)
-            .as("vec_id"), col("tbl"), col("bucket"))
-      else buckets
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("tbl"), col("bucket")).orderBy(col("vec_id"))))
-        .filter(col("rn") <= cap).drop("rn")
+    val capped = annCappedBuckets(sig, tables, bits, cap)
     val l = capped.select(col("vec_id").as("a_id"), col("tbl"), col("bucket"))
     val r = capped.select(col("vec_id").as("b_id"), col("tbl"), col("bucket"))
     l.join(r, Seq("tbl", "bucket"))
@@ -535,13 +510,14 @@ object Dedup {
   }
 
   /** Bucket memberships dropped by the cap — the no-silent-caps
-    * counter a production run would log/monitor per batch. */
+    * counter a production run would log/monitor per batch. 0 on an
+    * empty signature table, where the sum over no buckets is NULL. */
   def annDroppedCount(sig: DataFrame, tables: Int, bits: Int,
       cap: Int): Long =
     annBuckets(sig, tables, bits)
       .groupBy(col("tbl"), col("bucket")).count()
-      .select(sum(greatest(col("count") - cap,
-        lit(0L))).cast("long")).collect()(0).getLong(0)
+      .select(coalesce(sum(greatest(col("count") - cap, lit(0L))), lit(0L))
+        .cast("long")).collect()(0).getLong(0)
 
   /** Parameterized embedding near-dup: best candidate neighbor per
     * vector, flagged near_dup above `threshold`. Bits/tables/cap are
@@ -558,28 +534,11 @@ object Dedup {
     * parallelism follows the vec_id key space. */
   def embeddingNearDup(embeddings: DataFrame, tables: Int, bits: Int,
       cap: Int, threshold: Double): DataFrame = {
-    import graft.functions.VectorExpressions.{quantize, quantizedDot}
-    // per-vector norm materialized with the signature (not re-derived
-    // per candidate pair — same doubles, same op order, 2 fewer dots
-    // per pair)
-    val sig = embeddings
-      .select(col("vec_id"), quantize(col("embedding")).as("q"))
-      .withColumn("qn", sqrt(quantizedDot(col("q"), col("q")).cast("double")))
-      // zero-norm vectors are dropped symmetrically with the oracle's
-      // q CTE (see Similarity.cosineTopK scaladoc): their cosine is
-      // NaN everywhere and the two engines rank NaN differently
-      .filter(col("qn") > 0)
-      .localCheckpoint(true) // sig feeds buckets AND both cosine sides
-    val pairs = annCandidatePairs(sig, tables, bits, cap)
-    val qa = sig.select(col("vec_id").as("a_id"), col("q").as("aq"),
-      col("qn").as("an"))
-    val qb = sig.select(col("vec_id").as("b_id"), col("q").as("bq"),
-      col("qn").as("bn"))
-    val cos = round(
-      quantizedDot(col("aq"), col("bq")).cast("double") /
-        (col("an") * col("bn")), 6)
-    pairs.join(qa, "a_id").join(qb, "b_id")
-      .select(col("a_id"), col("b_id"), cos.as("cosine"))
+    // sig feeds buckets AND both cosine sides
+    val sig = VectorExpressions.signatures(embeddings, col("vec_id"))
+      .localCheckpoint(true)
+    VectorExpressions.pairCosine(
+        annCandidatePairs(sig, tables, bits, cap), sig)
       .groupBy(col("a_id"))
       .agg(ArgMax2.of(col("cosine"), -col("b_id")).as("m"))
       .select(col("a_id"), (-col("m.tie")).as("nearest_in_bucket"),
@@ -1209,26 +1168,19 @@ object Dedup {
   private[graft] def semanticDedup(s: org.apache.spark.sql.SparkSession,
       d: String, cap: Int, threshold: Double): DataFrame = {
     import s.implicits._
-    import graft.functions.VectorExpressions.{quantize, quantizedDot}
-    val sig = Tables.embeddings(s, d)
-      .select($"vec_id", quantize($"embedding").as("q"))
-      .withColumn("qn", sqrt(quantizedDot($"q", $"q").cast("double")))
-      .filter($"qn" > 0) // zero-norm policy — see cosineTopK scaladoc
+    val sig = VectorExpressions.signatures(Tables.embeddings(s, d), $"vec_id")
     val cells = sig.join(Similarity.sessionCoarseAssign(s, d), "vec_id")
       .localCheckpoint(true) // feeds scope selection, pairing, output
-    val scoped = cells.groupBy($"cell")
-      .agg(org.apache.spark.sql.graft.TopKAggregate
-        .of($"vec_id", -$"vec_id".cast("double"), cap).as("tk"))
-      .select(explode($"tk").as("e"))
-      .select($"e.id".as("vec_id"), lit(true).as("in_scope"))
+    val scoped = graft.operators.BucketCap
+      .lowestIds(cells, Seq("cell"), "vec_id", cap)
+      .select($"vec_id", lit(true).as("in_scope"))
     val p = cells.join(broadcast(scoped.select($"vec_id")), "vec_id")
       .select($"vec_id", $"q", $"qn", $"cell")
     val a = p.select($"cell", $"vec_id".as("a_id"), $"q".as("aq"),
       $"qn".as("an"))
     val b = p.select($"cell", $"vec_id".as("b_id"), $"q".as("bq"),
       $"qn".as("bn"))
-    val cos = round(
-      quantizedDot($"aq", $"bq").cast("double") / ($"an" * $"bn"), 6)
+    val cos = VectorExpressions.cosine($"aq", $"bq", $"an", $"bn")
     val near = a.join(broadcast(b), Seq("cell"))
       .filter($"a_id" =!= $"b_id")
       .filter(cos >= threshold)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
-import graft.functions.VectorExpressions
+import graft.functions.VectorExpressions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ArgMax2, TopKAggregate}
@@ -22,21 +22,13 @@ import org.apache.spark.sql.graft.{ArgMax2, TopKAggregate}
   */
 object Similarity {
 
-  /** Quantized embedding: int64 per element, exact both engines. */
-  private def quant(v: Column): Column = VectorExpressions.quantize(v)
-
-  /** Native codegen'd int64 dot product (see
-    * functions/VectorExpressions.scala; equivalence with the
-    * aggregate(zip_with(...)) formulation proven in VectorExprSpec). */
-  private def idot(a: Column, b: Column): Column =
-    VectorExpressions.quantizedDot(a, b)
-
   private val quantSql =
     "list_transform(%s, x -> CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT))"
 
   /** Oracle-side zero-norm guard: the `q` CTE every cosine oracle
     * reads admits only vectors with a positive squared norm — the SQL
-    * twin of the engine's `qn > 0` filter (see [[cosineTopK]]).
+    * twin of the engine's `qn > 0` filter
+    * ([[VectorExpressions.signatures]]).
     * Without the symmetric pair, a zero vector would be absent from
     * the native output (TopKAggregate drops its NaN cosine) but rank
     * FIRST in the oracle (DuckDB's IEEE ordering sorts NaN greatest
@@ -72,19 +64,11 @@ object Similarity {
     * (ZeroNormSpec exercises the synthetic all-zero vector). */
   private[graft] def cosineTopK(emb: org.apache.spark.sql.DataFrame,
       k: Int = 5): org.apache.spark.sql.DataFrame = {
-    // norms are per-VECTOR, not per-pair: compute sqrt(q·q) once per
-    // row on each side (vs once per joined row — 2/3 of the dot
-    // products in the 20×N nested loop were redundant self-dots).
-    // Same doubles, same operation order → bit-identical cosine.
-    val e = emb
-      .select(col("vec_id"), quant(col("embedding")).as("q"))
-      .withColumn("qn", sqrt(idot(col("q"), col("q")).cast("double")))
-      .filter(col("qn") > 0)
+    val e = signatures(emb, col("vec_id"))
     val probes = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("probe_id"), col("q").as("pq"),
         col("qn").as("pn"))
-    val cos = round(
-      idot(col("pq"), col("q")).cast("double") / (col("pn") * col("qn")), 6)
+    val cos = cosine(col("pq"), col("q"), col("pn"), col("qn"))
     e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), cos.as("cosine"))
       .groupBy(col("probe_id"))
@@ -124,7 +108,7 @@ object Similarity {
     "sim_lsh_buckets",
     (s, d) => {
       import s.implicits._
-      val e = Tables.embeddings(s, d).select($"vec_id", quant($"embedding").as("q"))
+      val e = Tables.embeddings(s, d).select($"vec_id", quantize($"embedding").as("q"))
       // single table of 8 sign planes — same native expression as the
       // multi-table ANN path (planes 0..7 == this query's planes)
       val bucket = org.apache.spark.sql.graft.HyperplaneBuckets
@@ -160,7 +144,7 @@ object Similarity {
     (s, d) => {
       import s.implicits._
       val e = Tables.embeddings(s, d)
-        .select($"label", quant($"embedding").as("q"))
+        .select($"label", quantize($"embedding").as("q"))
       e.select($"label", posexplode($"q").as(Seq("pos", "v")))
         .groupBy($"label", $"pos")
         .agg((sum($"v").cast("double") / count(lit(1)) / 10000)
@@ -205,20 +189,11 @@ object Similarity {
       // per-vector norm computed ONCE before the checkpoint — every
       // downstream pairing (centroid assignment and within-cell
       // search) reuses it instead of re-deriving a self-dot per pair.
-      val e = Tables.embeddings(s, d)
-        .select($"vec_id", $"label", quant($"embedding").as("q"))
-        .withColumn("qn", sqrt(idot($"q", $"q").cast("double")))
-        .filter($"qn" > 0) // zero-norm policy — see cosineTopK scaladoc
+      val e = signatures(Tables.embeddings(s, d), $"vec_id", $"label")
         .localCheckpoint(true) // feeds centroids, assignment, search
       // centroid direction per label = element-wise sum vector
-      val cent = e.select($"label".as("clabel"), posexplode($"q").as(Seq("pos", "v")))
-        .groupBy($"clabel", $"pos").agg(sum($"v").as("sv"))
-        .groupBy($"clabel")
-        .agg(transform(array_sort(collect_list(struct($"pos", $"sv"))),
-          x => x("sv")).as("cv"))
-        .withColumn("cn", sqrt(idot($"cv", $"cv").cast("double")))
-      val ccos = round(
-        idot($"q", $"cv").cast("double") / ($"qn" * $"cn"), 6)
+      val cent = centroids(e, $"label".as("clabel"))
+      val ccos = cosine($"q", $"cv", $"qn", $"cn")
       val scored = e.crossJoin(broadcast(cent))
         .select($"vec_id", ccos.as("ccos"), $"clabel")
       // nearest centroid per vector: max(struct) — no window
@@ -237,8 +212,7 @@ object Similarity {
       val probes = cells.filter($"vec_id" < 20)
         .select($"vec_id".as("probe_id"), $"q".as("pq"), $"qn".as("pn"))
         .join(probeCells, "probe_id")
-      val cos = round(
-        idot($"pq", $"q").cast("double") / ($"pn" * $"qn"), 6)
+      val cos = cosine($"pq", $"q", $"pn", $"qn")
       cells.join(broadcast(probes),
           $"cell" === $"pcell" && $"vec_id" =!= $"probe_id")
         .select($"probe_id", $"vec_id", cos.as("cosine"))
@@ -321,17 +295,10 @@ object Similarity {
     "sim_knn_graph",
     (s, d) => {
       import s.implicits._
-      val sig = Tables.embeddings(s, d)
-        .select($"vec_id", quant($"embedding").as("q"))
-        .withColumn("qn", sqrt(idot($"q", $"q").cast("double")))
-        .filter($"qn" > 0) // zero-norm policy — see cosineTopK scaladoc
+      val sig = signatures(Tables.embeddings(s, d), $"vec_id")
         .localCheckpoint(true) // feeds buckets AND both cosine sides
       val pairs = Dedup.annCandidatePairs(sig, tables = 2, bits = 8, cap = 128)
-      val qa = sig.select($"vec_id".as("a_id"), $"q".as("aq"), $"qn".as("an"))
-      val qb = sig.select($"vec_id".as("b_id"), $"q".as("bq"), $"qn".as("bn"))
-      val cos = round(idot($"aq", $"bq").cast("double") / ($"an" * $"bn"), 6)
-      pairs.join(qa, "a_id").join(qb, "b_id")
-        .select($"a_id", $"b_id", cos.as("cosine"))
+      pairCosine(pairs, sig)
         .groupBy($"a_id")
         .agg(TopKAggregate.of($"b_id", $"cosine", 3).as("tk"))
         .select($"a_id", posexplode($"tk").as(Seq("pos", "e")))
@@ -410,8 +377,7 @@ object Similarity {
       guarded: Boolean): Column = {
     val scored = cents.sortBy(_._1).map { case (c, cv) =>
       val cn = math.sqrt(driverDot(cv, cv).toDouble)
-      val raw = round(idot(q, lit(cv.toArray)).cast("double") /
-        (qn * lit(cn)), 6)
+      val raw = cosine(q, lit(cv.toArray), qn, lit(cn))
       val ccos =
         if (!guarded) raw
         else when(qn > 0 && lit(cn) > 0, raw).otherwise(-2.0)
@@ -449,11 +415,8 @@ object Similarity {
     * materialization, never carried across runs. */
   private[graft] def quantCorpus(emb: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    graft.tools.Checkpoints.defer(emb
-      .select(col("vec_id"), quant(col("embedding")).as("q"))
-      .withColumn("qn", sqrt(idot(col("q"), col("q")).cast("double")))
-      .filter(col("qn") > 0) // zero-norm policy — see cosineTopK scaladoc
-      .localCheckpoint(true))
+    graft.tools.Checkpoints.defer(
+      signatures(emb, col("vec_id")).localCheckpoint(true))
 
   /** The coarse k-means training loop over a pre-built
     * [[quantCorpus]] frame — returns the trained model (empty when
@@ -651,9 +614,9 @@ object Similarity {
     * [[qPqCodes]]). */
   private[graft] def pqAssignTo(ej: org.apache.spark.sql.DataFrame,
       cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val cn = sqrt(idot(col("cv"), col("cv")).cast("double"))
+    val cn = norm(col("cv"))
     val ccos = when(col("qn") > 0 && cn > 0,
-      round(idot(col("q"), col("cv")).cast("double") / (col("qn") * cn), 6))
+      cosine(col("q"), col("cv"), col("qn"), cn))
       .otherwise(-2.0)
     ej.crossJoin(broadcast(cent))
       .select(col("vec_id"), ccos.as("ccos"), col("cell"))
@@ -669,7 +632,7 @@ object Similarity {
       Seq[org.apache.spark.sql.DataFrame] =
     (0 until 4).map { j =>
       e.select(col("vec_id"), slice(col("q"), j * 16 + 1, 16).as("q"))
-        .withColumn("qn", sqrt(idot(col("q"), col("q")).cast("double")))
+        .withColumn("qn", norm(col("q")))
     }
 
   /** Per-subspace sliced (vec_id, q, qn) tables from raw embeddings —
@@ -926,7 +889,7 @@ object Similarity {
           .select($"vec_id".as("p_id"), $"q")
           .crossJoin(broadcast(book))
           .select($"p_id", lit(j).as("j"), $"cell",
-            idot($"q", $"cv").as("pd"))
+            quantizedDot($"q", $"cv").as("pd"))
       }.reduce(_ unionByName _)
       val cells = trained.zipWithIndex.map { case ((_, _, a), j) =>
         a.select($"vec_id", lit(j).as("j"), $"cell")
@@ -996,9 +959,9 @@ object Similarity {
     (s, d) => {
       import s.implicits._
       val fits = pqTrained(s, d).zipWithIndex.map { case ((ej, book, a), j) =>
-        val cn = sqrt(idot($"cv", $"cv").cast("double"))
+        val cn = norm($"cv")
         val fit = when($"qn" > 0 && cn > 0,
-          round(idot($"q", $"cv").cast("double") / ($"qn" * cn), 6))
+          cosine($"q", $"cv", $"qn", cn))
           .otherwise(-2.0)
         ej.join(a, "vec_id").join(broadcast(book), "cell")
           .select($"vec_id", fit.as(s"fit_$j"))
@@ -1051,17 +1014,13 @@ object Similarity {
     "sim_ivf_trained_topk",
     (s, d) => {
       import s.implicits._
-      val e = Tables.embeddings(s, d)
-        .select($"vec_id", quant($"embedding").as("q"))
-        .withColumn("qn", sqrt(idot($"q", $"q").cast("double")))
-        .filter($"qn" > 0)
+      val e = signatures(Tables.embeddings(s, d), $"vec_id")
       val cells = e.join(sessionCoarseAssign(s, d), "vec_id")
         .select($"vec_id", $"q", $"qn", $"cell")
       val probes = cells.filter($"vec_id" < 20)
         .select($"vec_id".as("probe_id"), $"q".as("pq"),
           $"qn".as("pn"), $"cell".as("pcell"))
-      val cos = round(
-        idot($"pq", $"q").cast("double") / ($"pn" * $"qn"), 6)
+      val cos = cosine($"pq", $"q", $"pn", $"qn")
       cells.join(broadcast(probes),
           $"cell" === $"pcell" && $"vec_id" =!= $"probe_id")
         .select($"probe_id", $"vec_id", cos.as("cosine"))
@@ -1163,7 +1122,7 @@ object Similarity {
             .select($"vec_id".as("p_id"), $"q")
             .crossJoin(broadcast(book))
             .select($"p_id", lit(j).as("j"), $"cell".as("pq_cell"),
-              idot($"q", $"cv").as("pd"))
+              quantizedDot($"q", $"cv").as("pd"))
         }.reduce(_ unionByName _)
         val probeCoarse = coarse.filter($"vec_id" < 10)
           .select($"vec_id".as("p_id"), $"cell".as("pcoarse"))
@@ -1218,7 +1177,7 @@ object Similarity {
             val sliced = e.select($"vec_id", $"q", $"qn",
               slice($"q", j * 16 + 1, 16).as("qj"))
             val normed = sliced.select($"vec_id", $"q", $"qn", $"qj",
-              sqrt(idot($"qj", $"qj").cast("double")).as("qnj"))
+              norm($"qj").as("qnj"))
             normed.select($"vec_id",
               bestCellExpr($"q", $"qn", cent, guarded = false).as("cell"),
               lit(j).as("j"),
@@ -1232,7 +1191,7 @@ object Similarity {
               .select($"vec_id".as("p_id"), $"q")
               .crossJoin(broadcast(book))
               .select($"p_id", lit(j).as("j"), $"cell".as("pq_cell"),
-                idot($"q", $"cv").as("pd"))
+                quantizedDot($"q", $"cv").as("pd"))
           }.reduce(_ unionByName _)
           val probeCoarse = e.filter($"vec_id" < 10)
             .select($"vec_id".as("p_id"),
@@ -1294,18 +1253,9 @@ object Similarity {
     "sim_centroid_outliers",
     (s, d) => {
       import s.implicits._
-      val e = Tables.embeddings(s, d)
-        .select($"vec_id", $"label", quant($"embedding").as("q"))
-        .withColumn("qn", sqrt(idot($"q", $"q").cast("double")))
-        .filter($"qn" > 0) // zero-norm policy — see cosineTopK scaladoc
-      val cent = e.select($"label", posexplode($"q").as(Seq("pos", "v")))
-        .groupBy($"label", $"pos").agg(sum($"v").as("sv"))
-        .groupBy($"label")
-        .agg(transform(array_sort(collect_list(struct($"pos", $"sv"))),
-          x => x("sv")).as("cv"))
-        .withColumn("cn", sqrt(idot($"cv", $"cv").cast("double")))
-      val ccos = round(
-        idot($"q", $"cv").cast("double") / ($"qn" * $"cn"), 6)
+      val e = signatures(Tables.embeddings(s, d), $"vec_id", $"label")
+      val cent = centroids(e, $"label")
+      val ccos = cosine($"q", $"cv", $"qn", $"cn")
       e.join(broadcast(cent), "label")
         .select($"vec_id", $"label", ccos.as("centroid_cos"),
           (ccos < 0.2).as("is_outlier"))
@@ -1360,27 +1310,19 @@ object Similarity {
     "sim_cluster_quality",
     (s, d) => {
       import s.implicits._
-      val e = Tables.embeddings(s, d)
-        .select($"vec_id", quant($"embedding").as("q"))
-        .withColumn("qn", sqrt(idot($"q", $"q").cast("double")))
-        .filter($"qn" > 0) // zero-norm policy — see cosineTopK scaladoc
+      val e = signatures(Tables.embeddings(s, d), $"vec_id")
       val ea = e.join(sessionCoarseAssign(s, d), "vec_id")
         .localCheckpoint(true) // centroid sums + intra scoring read it
-      val cent = ea.select($"cell", posexplode($"q").as(Seq("pos", "v")))
-        .groupBy($"cell", $"pos").agg(sum($"v").as("sv"))
-        .groupBy($"cell")
-        .agg(transform(array_sort(collect_list(struct($"pos", $"sv"))),
-          x => x("sv")).as("cv"))
-        .withColumn("cn", sqrt(idot($"cv", $"cv").cast("double")))
+      val cent = centroids(ea, $"cell")
         .localCheckpoint(true) // intra join + the pairwise table
       val cmicro = floor(
-        idot($"q", $"cv").cast("double") / ($"qn" * $"cn") * 1e6 + 0.5)
+        quantizedDot($"q", $"cv").cast("double") / ($"qn" * $"cn") * 1e6 + 0.5)
         .cast("long")
       val intra = ea.join(broadcast(cent), "cell")
         .groupBy($"cell")
         .agg(count(lit(1)).as("n_vectors"), sum(cmicro).as("csum"))
       val pmicro = floor(
-        idot($"cv", $"ocv").cast("double") / ($"cn" * $"ocn") * 1e6 + 0.5)
+        quantizedDot($"cv", $"ocv").cast("double") / ($"cn" * $"ocn") * 1e6 + 0.5)
         .cast("long")
       val nn = cent.select($"cell", $"cv", $"cn")
         .crossJoin(broadcast(cent.select($"cell".as("ocell"),
@@ -1463,21 +1405,14 @@ object Similarity {
     (s, d) => {
       import s.implicits._
       val e = Tables.embeddings(s, d)
-      val sig = e.select($"vec_id", quant($"embedding").as("q"))
-        .withColumn("qn", sqrt(idot($"q", $"q").cast("double")))
-        .filter($"qn" > 0) // zero-norm policy — see cosineTopK scaladoc
+      val sig = signatures(e, $"vec_id")
         .localCheckpoint(true) // feeds buckets AND both cosine sides
       val lab = e.select($"vec_id", $"label")
-      val pairs = Dedup.annCandidatePairs(sig, tables = 2, bits = 8, cap = 128)
-      val qa = sig.select($"vec_id".as("a_id"), $"q".as("aq"), $"qn".as("an"))
-      val qb = sig.select($"vec_id".as("b_id"), $"q".as("bq"), $"qn".as("bn"))
-      val cos = round(idot($"aq", $"bq").cast("double") / ($"an" * $"bn"), 6)
-      pairs
+      val crossLabel = Dedup.annCandidatePairs(sig, tables = 2, bits = 8, cap = 128)
         .join(lab.select($"vec_id".as("a_id"), $"label".as("a_label")), "a_id")
         .join(lab.select($"vec_id".as("b_id"), $"label".as("b_label")), "b_id")
         .filter($"a_label" =!= $"b_label")
-        .join(qa, "a_id").join(qb, "b_id")
-        .select($"a_id", $"b_id", cos.as("cosine"))
+      pairCosine(crossLabel, sig)
         .groupBy($"a_id")
         .agg(TopKAggregate.of($"b_id", $"cosine", 1).as("tk"))
         .select($"a_id", $"tk".getItem(0).getField("id").as("hard_neg"),
@@ -1575,7 +1510,7 @@ object Similarity {
   private def gramFrame(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
     import s.implicits._
-    Tables.embeddings(s, d).select(quant($"embedding").as("q"))
+    Tables.embeddings(s, d).select(quantize($"embedding").as("q"))
       .select($"q", posexplode($"q").as(Seq("i0", "vi")))
       .select($"vi", ($"i0" + 1).cast("long").as("i"),
         posexplode($"q").as(Seq("j0", "vj")))

@@ -1,8 +1,8 @@
 package graft.streaming
 
+import graft.functions.VectorExpressions
 import graft.queries.Dedup
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.ArgMax2
 import org.apache.spark.sql.functions._
 
@@ -40,23 +40,17 @@ object StreamingAnn {
   final case class CorpusIndex(sig: DataFrame, buckets: DataFrame,
       tables: Int, bits: Int)
 
-  /** Build the corpus index once: quantized signatures (zero-norm
-    * dropped, same policy as the whole cosine family) and per-bucket
-    * DETERMINISTICALLY capped memberships (lowest vec_ids — the same
-    * skew guard as annCandidatePairs, applied corpus-side so a hot
-    * bucket costs every batch ≤ cap joins, not pop joins). */
+  /** Build the corpus index once, with the batch operator's own code:
+    * the family's zero-norm signatures and the per-bucket
+    * DETERMINISTICALLY capped memberships annCandidatePairs pairs
+    * within ([[Dedup.annCappedBuckets]], lowest vec_ids), applied
+    * corpus-side so a hot bucket costs every batch ≤ cap joins, not
+    * pop joins. */
   def buildIndex(corpus: DataFrame, tables: Int, bits: Int,
       cap: Int): CorpusIndex = {
-    import graft.functions.VectorExpressions.{quantize, quantizedDot}
-    val sig = corpus
-      .select(col("vec_id"), quantize(col("embedding")).as("q"))
-      .withColumn("qn", sqrt(quantizedDot(col("q"), col("q")).cast("double")))
-      .filter(col("qn") > 0)
+    val sig = VectorExpressions.signatures(corpus, col("vec_id"))
       .localCheckpoint(true)
-    val buckets = Dedup.annBuckets(sig, tables, bits)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("tbl"), col("bucket")).orderBy(col("vec_id"))))
-      .filter(col("rn") <= cap).drop("rn")
+    val buckets = Dedup.annCappedBuckets(sig, tables, bits, cap)
       .localCheckpoint(true)
     CorpusIndex(sig, buckets, tables, bits)
   }
@@ -68,20 +62,14 @@ object StreamingAnn {
     * Pure batch semantics — callable directly or from foreachBatch. */
   def triageBatch(newVecs: DataFrame, idx: CorpusIndex,
       threshold: Double): DataFrame = {
-    import graft.functions.VectorExpressions.{quantize, quantizedDot}
-    val nsig = newVecs
-      .select(col("vec_id").as("n_id"), quantize(col("embedding")).as("nq"))
-      .withColumn("nn", sqrt(quantizedDot(col("nq"), col("nq")).cast("double")))
-      .filter(col("nn") > 0)
+    val nsig = VectorExpressions.signatures(newVecs, col("vec_id").as("n_id"))
     val nbuckets = nsig.select(col("n_id"),
       posexplode(org.apache.spark.sql.graft.HyperplaneBuckets
-        .of(col("nq"), idx.tables, idx.bits)).as(Seq("tbl", "bucket")))
+        .of(col("q"), idx.tables, idx.bits)).as(Seq("tbl", "bucket")))
     val cands = nbuckets
       .join(idx.buckets, Seq("tbl", "bucket"))
       .select(col("n_id"), col("vec_id").as("c_id")).distinct()
-    val cos = round(
-      quantizedDot(col("nq"), col("cq")).cast("double") /
-        (col("nn") * col("cn")), 6)
+    val cos = VectorExpressions.cosine(col("q"), col("cq"), col("qn"), col("cn"))
     val best = cands
       .join(nsig, "n_id")
       .join(idx.sig.select(col("vec_id").as("c_id"), col("q").as("cq"),

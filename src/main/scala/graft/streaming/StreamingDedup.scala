@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -7,8 +8,8 @@ import org.apache.spark.sql.functions._
   * for a continuously-arriving document stream (the ingest edge of a
   * training-data pipeline).
   *
-  * Content fingerprint = md5 of whitespace-normalized text (identical
-  * to the batch query), deduped with
+  * Content fingerprint = md5 of whitespace-normalized text, the batch
+  * queries' own [[Dedup.fingerprintExpr]], deduped with
   * `dropDuplicatesWithinWatermark`: state holds one fingerprint per
   * unique document and is EVICTED once the watermark passes it —
   * bounded state at 100 TB/day ingest, unlike a plain
@@ -19,14 +20,10 @@ import org.apache.spark.sql.functions._
   */
 object StreamingDedup {
 
-  /** Fingerprint expression shared with the batch path. */
-  def fingerprint(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    md5(array_join(split(trim(text), "\\s+"), " "))
-
   def dedupByFingerprint(docs: DataFrame, tsCol: String,
       watermarkDelay: String): DataFrame =
     docs
-      .withColumn("fp", fingerprint(col("text")))
+      .withColumn("fp", Dedup.fingerprintExpr)
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark("fp")
 
@@ -44,10 +41,10 @@ object StreamingDedup {
     * as a shuffled stream-static join keyed on fp. */
   def triageAgainstCorpus(docs: DataFrame, corpus: DataFrame): DataFrame = {
     val corpusFp = corpus
-      .groupBy(fingerprint(col("text")).as("fp"))
+      .groupBy(Dedup.fingerprintExpr.as("fp"))
       .agg(min(col("doc_id")).as("exact_of"))
     docs
-      .withColumn("fp", fingerprint(col("text")))
+      .withColumn("fp", Dedup.fingerprintExpr)
       .join(broadcast(corpusFp), Seq("fp"), "left")
       .withColumn("status",
         when(col("exact_of").isNotNull, "exact_dup").otherwise("novel"))

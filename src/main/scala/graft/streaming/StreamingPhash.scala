@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.HammingBands
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.BlockHash60
 
@@ -31,14 +30,7 @@ object StreamingPhash {
     val sk = corpus
       .select(col("doc_id"), BlockHash60.of(col("text")).as("sh"))
       .localCheckpoint(true)
-    val mask = (1L << bandBits) - 1
-    val bandVals = array((0 until nBands).map(b =>
-      shiftright(col("sh"), bandBits * b).bitwiseAND(lit(mask))): _*)
-    val buckets = sk
-      .select(col("doc_id"), posexplode(bandVals).as(Seq("band", "bval")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("band"), col("bval")).orderBy(col("doc_id"))))
-      .filter(col("rn") <= cap).drop("rn")
+    val buckets = HammingBands.cappedBands(sk, nBands, bandBits, cap)
       .localCheckpoint(true)
     PhashIndex(sk, buckets, nBands, bandBits, theta)
   }
@@ -49,11 +41,9 @@ object StreamingPhash {
   def triageBatch(arrivals: DataFrame, idx: PhashIndex): DataFrame = {
     val nsk = arrivals
       .select(col("doc_id").as("n_id"), BlockHash60.of(col("text")).as("nsh"))
-    val mask = (1L << idx.bandBits) - 1
-    val bandVals = array((0 until idx.nBands).map(b =>
-      shiftright(col("nsh"), idx.bandBits * b).bitwiseAND(lit(mask))): _*)
-    val probes = nsk
-      .select(col("n_id"), posexplode(bandVals).as(Seq("band", "bval")))
+    val probes = nsk.select(col("n_id"),
+      posexplode(HammingBands.bandValues(col("nsh"), idx.nBands, idx.bandBits))
+        .as(Seq("band", "bval")))
     val ham = expr("bit_count(nsh ^ sh)").cast("int")
     val best = probes
       .join(idx.buckets, Seq("band", "bval"))

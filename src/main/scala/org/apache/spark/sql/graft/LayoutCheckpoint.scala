@@ -41,14 +41,8 @@ import org.apache.spark.storage.StorageLevel
   */
 object LayoutCheckpoint {
 
-  /** A/B kill-switch for perf attribution: SPARK_GRAFT_LAYOUT_CK=0
-    * restores the plain (layout-forgetting) localCheckpoint. */
-  private val enabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_LAYOUT_CK", "1") != "0"
-
   /** Eager localCheckpoint at `level`, preserving the executed layout. */
   def checkpoint[T](ds: Dataset[T], level: StorageLevel): DataFrame = {
-    if (!enabled) return ds.localCheckpoint(true, level).toDF()
     val ck = ds.localCheckpoint(true, level).toDF()
     val finalPlan = ds.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan

@@ -118,6 +118,11 @@ class AnnRecallSpec extends SparkSpec {
     assert(capped < uncapped)
   }
 
+  test("dropped count is 0 on an empty signature table") {
+    // an empty or all-zero-norm corpus leaves no buckets to sum over
+    assert(Dedup.annDroppedCount(sig.filter($"vec_id" < 0), 1, 2, 8) == 0L)
+  }
+
   test("bitsFor holds bucket population flat as the corpus grows") {
     // the registry's 2×8-bit instantiation is this rule applied to the
     // sweep's largest corpus (~5k vectors at ~20/bucket)

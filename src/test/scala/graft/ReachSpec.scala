@@ -107,8 +107,6 @@ object Reach {
       "the reference's E14 detail-URL template as a column; PaginationSpec checks it",
     "graft.functions.Cleaning.lastToken" ->
       "the reference's E16 facts-line rule as a column; CleaningSpec checks it",
-    "graft.functions.VectorExpressions.quantizedCosine" ->
-      "cosine over the native quantized_dot; VectorExprSpec checks it",
     "graft.operators.BpeTrainer.vocab" ->
       "the vocabulary train's merges yield; BpeSpec checks merged symbols and mass conservation on it",
     "graft.queries.Dedup.annDroppedCount" ->

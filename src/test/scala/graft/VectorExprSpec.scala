@@ -60,10 +60,10 @@ class VectorExprSpec extends SparkSpec {
     assert(got == 50L)
   }
 
-  test("quantizedCosine of identical vectors is 1.0") {
-    val e = Tables.embeddings(spark, sf("sf0.001")).limit(5)
-      .select(VectorExpressions.quantize($"embedding").as("q"))
-    val cos = e.select(VectorExpressions.quantizedCosine($"q", $"q").as("c"))
+  test("rounded cosine of identical vectors is 1.0") {
+    val e = VectorExpressions.signatures(
+      Tables.embeddings(spark, sf("sf0.001")).limit(5), $"vec_id")
+    val cos = e.select(VectorExpressions.cosine($"q", $"q", $"qn", $"qn").as("c"))
       .as[Double].collect()
     assert(cos.forall(c => math.abs(c - 1.0) < 1e-12))
   }
