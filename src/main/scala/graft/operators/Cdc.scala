@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.model.{Listing, ListingEvent}
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful change-data-capture (SURVEY §2.9 T2, §2.4 J2/J3):

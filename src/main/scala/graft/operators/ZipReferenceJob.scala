@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** S12 — the zip-code reference one-shot job (utahZip.py:54-68):
@@ -42,7 +42,7 @@ object ZipReferenceJob {
   }
 
   /** Write all three artifacts like the reference's save_data_to_file. */
-  def run(spark: SparkSession, rows: DataFrame, outDir: String): Unit = {
+  def run(rows: DataFrame, outDir: String): Unit = {
     import java.nio.file.{Files, Paths}
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(outDir, "county_city_zips.json"),

@@ -808,7 +808,7 @@ object Cdc {
     // bounded driver action on a checkpointed V-scale table; both
     // forms are exact aggregations, so results are identical either
     // way (PagerankSpec's degree-cap gate case checks the parity).
-    val degStats = selfW.agg(sum($"dg"), max($"dg")).first
+    val degStats = selfW.agg(sum($"dg"), max($"dg")).first()
     val hotGather = !degStats.isNullAt(1) &&
       degStats.getLong(1) > 4L * math.max(1L, degStats.getLong(0) / parts)
     // 3 materialized rounds (the next reads its labels twice: neighbor

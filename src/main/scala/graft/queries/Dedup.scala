@@ -23,17 +23,6 @@ import org.apache.spark.sql.graft.ArgMax2
   */
 object Dedup {
 
-  /** 3-word shingles, distinct, as a column expression. */
-  private def shingles(text: Column): Column = {
-    val toks = split(trim(text), "\\s+")
-    array_distinct(
-      when(size(toks) >= 3,
-        transform(sequence(lit(1), size(toks) - 2),
-          i => concat_ws(" ", element_at(toks, i),
-            element_at(toks, i + 1), element_at(toks, i + 2))))
-      .otherwise(array(array_join(toks, " "))))
-  }
-
   import org.apache.spark.sql.graft.ShingleMinHash
   private val P = ShingleMinHash.P
 
@@ -115,15 +104,32 @@ object Dedup {
     (s, d) => sessionSignatures(s, d),
     Some(s"""$sigCte SELECT doc_id, ${(0 until 8).map(i => s"mh$i").mkString(", ")} FROM sig"""))
 
-  /** Materialized signature table (doc_id, mh0..mh7), checkpointed
-    * before any consumer: a lazy plan would re-derive the shingle
-    * hashes once per referencing column per self-join side.
-    * Production does the same — the signature table is a PERSISTED
-    * artifact; banding reads it. */
-  def signatureTable(docs: DataFrame): DataFrame =
+  // The three per-doc artifacts as pure row derivations of a docs
+  // frame: the session accessors below checkpoint them for the
+  // registry, and the corpus-drop job writes them for a new batch, so
+  // a batch's rows equal the full derivation's rows by construction.
+
+  /** Signature table (doc_id, mh0..mh7). */
+  private[graft] def signatureTable(docs: DataFrame): DataFrame =
     withSignature(docs)
       .select(col("doc_id") +: (0 until 8).map(i => col(s"mh$i")): _*)
-      .localCheckpoint(true)
+
+  /** The normalized-text exact-dup fingerprint — ONE expression shared
+    * by dd_exact, the keeper derivation, incremental triage, the
+    * corpus-drop job and the streaming triage twin, so no consumer can
+    * drift on normalization. */
+  private[graft] def fingerprintExpr: Column =
+    md5(array_join(split(trim(col("text")), "\\s+"), " "))
+
+  /** Fingerprint table (doc_id, fp). */
+  private[graft] def fingerprintTable(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), fingerprintExpr.as("fp"))
+
+  /** Shingle-hash set table (doc_id, hsh): sorted-distinct int64
+    * shingle hashes per doc. */
+  private[graft] def shingleTable(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      org.apache.spark.sql.graft.ShingleHashes.of(col("text")).as("hsh"))
 
   /** How many times any of the four dedup artifacts was actually
     * DERIVED (vs served from the session cache or a persisted table)
@@ -147,23 +153,14 @@ object Dedup {
     * (dd_minhash_signature, dd_lsh_candidate_pairs, dd_dup_clusters)
     * read the same artifact; computing the signatures once per
     * (session, dataset) is exactly the persisted-artifact shape —
-    * a sweep pays the signature pass once instead of three times. */
+    * a sweep pays the signature pass once instead of three times.
+    * Checkpointed before any consumer: a lazy plan would re-derive
+    * the shingle hashes once per referencing column per self-join
+    * side. */
   private val signatureCache = SessionCache[String, DataFrame]()
   def sessionSignatures(s: SparkSession, d: String): DataFrame =
     artifact(signatureCache, "signatures", s, d)(
-      signatureTable(Tables.documents(s, d)))
-
-  /** The normalized-text exact-dup fingerprint — ONE expression shared
-    * by dd_exact, the keeper derivation, incremental triage and the
-    * corpus-drop job, so no consumer can drift on normalization. */
-  private[graft] def fingerprintExpr: Column =
-    md5(array_join(split(trim(col("text")), "\\s+"), " "))
-
-  /** Per-doc fingerprint table for an arbitrary document frame —
-    * the batch-side derivation the corpus-drop job applies to a new
-    * ingest batch (per-row expression, zero shuffle). */
-  private[graft] def fingerprintTable(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), fingerprintExpr.as("fp"))
+      signatureTable(Tables.documents(s, d)).localCheckpoint(true))
 
   /** Session-scoped fingerprint table — the fourth dedup artifact
     * (alongside signatures, clusters, shingles): dd_exact, the
@@ -200,10 +197,7 @@ object Dedup {
   private val shingleCache = SessionCache[String, DataFrame]()
   def sessionShingleSets(s: SparkSession, d: String): DataFrame =
     artifact(shingleCache, "shingles", s, d)(
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          org.apache.spark.sql.graft.ShingleHashes.of(col("text")).as("hsh"))
-        .localCheckpoint(true))
+      shingleTable(Tables.documents(s, d)).localCheckpoint(true))
 
   /** (doc_id, band, bucket, mh0..mh7) rows — 4 bands × 2 signature
     * rows per doc; the probe table both the self-join pair generator
@@ -217,20 +211,25 @@ object Dedup {
     }.reduce(_ union _)
 
   /** Signature agreement count between the l./r. sides of a band join. */
-  private[graft] def sigAgreement: Column =
+  private def sigAgreement: Column =
     (0 until 8).map(i =>
       when(col(s"l.mh$i") === col(s"r.mh$i"), 1).otherwise(0))
       .reduce(_ + _)
 
+  /** The LSH band join: `l` and `r` band-frame rows sharing a (band,
+    * bucket), under the aliases `l` and `r`. `ordered` keeps only
+    * l.doc_id < r.doc_id — each unordered pair of a self-join once. */
+  private[graft] def bandJoin(l: DataFrame, r: DataFrame,
+      ordered: Boolean): DataFrame = {
+    val on = col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket")
+    l.as("l").join(r.as("r"),
+      if (ordered) on && col("l.doc_id") < col("r.doc_id") else on)
+  }
+
   private def pairsFromSignatures(sig: DataFrame): DataFrame = {
     val bands = bandFrame(sig)
-    val l = bands.as("l")
-    val r = bands.as("r")
     val agree = sigAgreement
-    l.join(r,
-        col("l.band") === col("r.band") &&
-        col("l.bucket") === col("r.bucket") &&
-        col("l.doc_id") < col("r.doc_id"))
+    bandJoin(bands, bands, ordered = true)
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
         (agree.cast("double") / 8).as("est_jaccard"))
       .distinct()
@@ -878,6 +877,41 @@ object Dedup {
              ELSE 'none' END AS relation
       FROM sc"""))
 
+  /** Exact-of: the lowest doc id per fingerprint of a (doc_id, fp)
+    * frame, as (fp, `as`) — the keeper frame's exact canonical and
+    * triage's exact match. */
+  private[graft] def lowestIdPerFp(fps: DataFrame, as: String): DataFrame =
+    fps.groupBy(col("fp")).agg(min(col("doc_id")).as(as))
+
+  /** The triage verdict: exact beats near and near beats novel;
+    * `dup_of` is the winning match. */
+  private[graft] def triageVerdict(exactOf: Column, nearOf: Column): Seq[Column] =
+    Seq(when(exactOf.isNotNull, "exact_dup")
+        .when(nearOf.isNotNull, "near_dup")
+        .otherwise("novel").as("status"),
+      coalesce(exactOf, nearOf).as("dup_of"))
+
+  /** (doc_id, status, dup_of) per batch doc. `batchFps` are the batch's
+    * (doc_id, fp) rows; `exactOf` is (fp, exact_of) over the corpus
+    * ([[lowestIdPerFp]]), an argument so each caller chooses how the
+    * corpus side is pre-filtered. Near-of is the best corpus candidate
+    * sharing a band bucket with at least 4 of 8 signature agreements:
+    * most agreements, ties to the lowest id ([[ArgMax2]]). */
+  private[graft] def triage(batchFps: DataFrame, exactOf: DataFrame,
+      corpusBands: DataFrame, batchBands: DataFrame): DataFrame = {
+    val exact = batchFps.join(exactOf, Seq("fp"), "left")
+      .select(col("doc_id"), col("exact_of"))
+    val near = bandJoin(corpusBands, batchBands, ordered = false)
+      .select(col("r.doc_id").as("doc_id"),
+        col("l.doc_id").as("cand"), sigAgreement.as("agree"))
+      .filter(col("agree") >= 4)
+      .groupBy(col("doc_id"))
+      .agg(ArgMax2.of(col("agree"), -col("cand")).as("m"))
+      .select(col("doc_id"), (-col("m.tie")).as("near_of"))
+    exact.join(near, Seq("doc_id"), "left")
+      .select(col("doc_id") +: triageVerdict(col("exact_of"), col("near_of")): _*)
+  }
+
   /** Incremental-ingestion dedup triage — the shape a production
     * corpus actually runs: a NEW batch (doc_id ≥ 400; the pinned
     * stand-in for "this cycle's ingest") is checked against the
@@ -896,33 +930,16 @@ object Dedup {
     * corpus re-scan); both the fingerprint join and the band probe
     * shuffle batch-sized, not corpus-sized, data on hash keys; the
     * best-candidate pick is a max(struct) hash-aggregate keyed on
-    * batch doc_id, not a window. */
+    * batch doc_id, not a window. The rules are [[triage]]'s, which
+    * the corpus-drop job runs against its persisted artifacts. */
   val qIncremental = GraftQuery(
     "dd_incremental",
     (s, d) => {
-      import s.implicits._
       val fps = sessionFingerprints(s, d)
-      val corpusFp = fps.filter($"doc_id" < 400)
-        .groupBy($"fp").agg(min($"doc_id").as("exact_of"))
-      val exact = fps.filter($"doc_id" >= 400)
-        .join(corpusFp, Seq("fp"), "left")
-        .select($"doc_id", $"exact_of")
       val bands = bandFrame(sessionSignatures(s, d))
-      val near = bands.filter(col("doc_id") < 400).as("l")
-        .join(bands.filter(col("doc_id") >= 400).as("r"),
-          col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket"))
-        .select(col("r.doc_id").as("doc_id"),
-          col("l.doc_id").as("cand"), sigAgreement.as("agree"))
-        .filter($"agree" >= 4)
-        .groupBy($"doc_id")
-        .agg(ArgMax2.of($"agree", -$"cand").as("m"))
-        .select($"doc_id", (-$"m.tie").as("near_of"))
-      exact.join(near, Seq("doc_id"), "left")
-        .select($"doc_id",
-          when($"exact_of".isNotNull, "exact_dup")
-            .when($"near_of".isNotNull, "near_dup")
-            .otherwise("novel").as("status"),
-          coalesce($"exact_of", $"near_of").as("dup_of"))
+      triage(fps.filter(col("doc_id") >= 400),
+        lowestIdPerFp(fps.filter(col("doc_id") < 400), "exact_of"),
+        bands.filter(col("doc_id") < 400), bands.filter(col("doc_id") >= 400))
     },
     Some(s"""$sigCte, $bandsCte,
       fp AS (SELECT doc_id, md5(array_to_string(toks, ' ')) AS fp FROM t),
@@ -1058,17 +1075,34 @@ object Dedup {
     * joins. Nothing driver-side, nothing keyed on a bounded space. */
   /** (doc_id, exact_canonical, keeper) for every corpus document —
     * the decision core of [[qKeepList]], shared with the corpus-yield
-    * report (TextAnalysis.qCorpusYield). */
-  private[queries] def keeperFrame(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    import s.implicits._
+    * report (TextAnalysis.qCorpusYield) and the corpus-drop job's
+    * initial keeper state. */
+  private[graft] def keeperFrame(s: SparkSession, d: String): DataFrame = {
     val fps = sessionFingerprints(s, d)
-    val canon = fps.groupBy($"fp").agg(min($"doc_id").as("exact_canonical"))
-    val base = fps.join(canon, "fp").select($"doc_id", $"exact_canonical")
-    base.join(sessionClusters(s, d), Seq("doc_id"), "left")
-      .withColumn("keeper", coalesce($"cluster_id", $"exact_canonical"))
-      .select($"doc_id", $"exact_canonical", $"keeper")
+    withKeeper(fps.join(lowestIdPerFp(fps, "exact_canonical"), "fp")
+        .select(col("doc_id"), col("exact_canonical")),
+      sessionClusters(s, d))
   }
+
+  /** The keeper rule over (doc_id, exact_canonical) rows: a doc's LSH
+    * cluster label (its component's min id) if it is in any
+    * candidate pair, else its exact canonical. */
+  private[graft] def withKeeper(canon: DataFrame,
+      clusters: DataFrame): DataFrame =
+    canon.join(clusters, Seq("doc_id"), "left")
+      .withColumn("keeper", coalesce(col("cluster_id"), col("exact_canonical")))
+      .select(col("doc_id"), col("exact_canonical"), col("keeper"))
+
+  /** dd_keep_list's rows from a keeper frame: keep ⇔ doc_id == keeper;
+    * a dropped doc is an `exact_dup` when its exact canonical is a
+    * lower copy, else a `near_dup`, and points at its keeper. */
+  private[graft] def keepList(keepers: DataFrame): DataFrame =
+    keepers.select(col("doc_id"),
+      (col("doc_id") === col("keeper")).as("keep"),
+      when(col("doc_id") === col("keeper"), "keep")
+        .when(col("doc_id") =!= col("exact_canonical"), "exact_dup")
+        .otherwise("near_dup").as("reason"),
+      when(col("doc_id") =!= col("keeper"), col("keeper")).as("dup_of"))
 
   /** Oracle CTE chain producing `keeper(doc_id, exact_canonical,
     * keeper)` — the SQL twin of [[keeperFrame]]; requires $sigCte (as
@@ -1085,16 +1119,7 @@ object Dedup {
 
   val qKeepList = GraftQuery(
     "dd_keep_list",
-    (s, d) => {
-      import s.implicits._
-      keeperFrame(s, d)
-        .select($"doc_id",
-          ($"doc_id" === $"keeper").as("keep"),
-          when($"doc_id" === $"keeper", "keep")
-            .when($"doc_id" =!= $"exact_canonical", "exact_dup")
-            .otherwise("near_dup").as("reason"),
-          when($"doc_id" =!= $"keeper", $"keeper").as("dup_of"))
-    },
+    (s, d) => keepList(keeperFrame(s, d)),
     Some(s"""${sigCte.replaceFirst("WITH ", "WITH RECURSIVE ")}, $bandsCte,
       $clusterCtes, $keeperCtes
       SELECT doc_id,
@@ -1289,8 +1314,7 @@ object Dedup {
     * grams available, so candidate volume tracks the RARE end of the
     * df distribution; FuzzyJoinSpec pins this with an adversarial
     * shared-hot-gram vocabulary. */
-  private[graft] def fuzzyCandidates(s: org.apache.spark.sql.SparkSession,
-      names: DataFrame, tau: Int): DataFrame = {
+  private[graft] def fuzzyCandidates(names: DataFrame, tau: Int): DataFrame = {
     val minLong = 3 * tau + 3
     val k = 3 * tau + 1
     val longNames = names.filter(length(col("name")) >= minLong)
@@ -1323,9 +1347,8 @@ object Dedup {
   /** Tau-edit pairs over the deduped catalog `names`. The gram path
     * and both sidecar sides each read `names`, so callers pass it
     * materialized ([[partNames]]). */
-  private[graft] def fuzzyJoin(s: SparkSession, names: DataFrame,
-      tau: Int): DataFrame =
-    fuzzyCandidates(s, names, tau)
+  private[graft] def fuzzyJoin(names: DataFrame, tau: Int): DataFrame =
+    fuzzyCandidates(names, tau)
       .filter(abs(length(col("name_a")) - length(col("name_b"))) <= tau)
       .select(col("name_a"), col("name_b"),
         levenshtein(col("name_a"), col("name_b"), tau).cast("long").as("lev"))
@@ -1340,7 +1363,7 @@ object Dedup {
 
   val qFuzzyJoin = GraftQuery(
     "dd_fuzzy_join",
-    (s, d) => fuzzyJoin(s, partNames(s, d), tau = 1),
+    (s, d) => fuzzyJoin(partNames(s, d), tau = 1),
     Some("""
       WITH n AS (SELECT DISTINCT p_name AS name FROM part)
       SELECT a.name AS name_a, b.name AS name_b,
@@ -1365,7 +1388,7 @@ object Dedup {
     "dd_fuzzy_canonical",
     (s, d) => {
       val names = partNames(s, d)
-      val pairs = fuzzyJoin(s, names, tau = 1)
+      val pairs = fuzzyJoin(names, tau = 1)
         .select(col("name_a").as("doc_a"), col("name_b").as("doc_b"))
       val labels = Checkpoints.defer(connectedComponents(pairs,
         Tables.scaledPartitions(s, d, Seq("part"))))

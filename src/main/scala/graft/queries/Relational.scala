@@ -877,7 +877,6 @@ object Relational {
   val qTableProfileApprox = GraftQuery(
     "q_table_profile_approx",
     (s, d) => {
-      import s.implicits._
       val li = Tables.lineitem(s, d)
       val cols = Seq("l_orderkey", "l_partkey", "l_suppkey",
         "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",

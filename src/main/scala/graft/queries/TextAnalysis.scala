@@ -51,13 +51,10 @@ object TextAnalysis {
       ttr * 0.25
   }
 
-  /** Alphabetical-first argmax language prediction over a text column
-    * (shared by t_lang_id and the corpus-yield verdict). */
-  private def predictedLangExpr(text: Column): Column =
-    predictedLangFromToks(tokens(text))
-
-  /** Language prediction over an already-split token array — see
-    * [[qualityScoreFromToks]] for why the split is hoisted. */
+  /** Alphabetical-first argmax language prediction over an
+    * already-split token array (shared by t_lang_id and the
+    * corpus-yield verdict) — see [[qualityScoreFromToks]] for why the
+    * split is hoisted. */
   private def predictedLangFromToks(toks: Column): Column = {
     val scores = markers.map { case (lang, words) =>
       lang -> size(filter(toks, t => t.isInCollection(words)))
@@ -726,7 +723,7 @@ object TextAnalysis {
     *   2. `drop_quality` — composite quality score < 0.5
     *      ([[qualityScoreExpr]], same expression as t_quality_score);
     *   3. `drop_lang`    — the language scorer can't identify it
-    *      ([[predictedLangExpr]] == "unknown");
+    *      ([[predictedLangFromToks]] == "unknown");
     *   4. `kept`.
     *
     * This composes dedup + quality + lang-id through their SHARED
@@ -761,22 +758,43 @@ object TextAnalysis {
         verdict.as("verdict"))
   }
 
+  /** The seven yield measures over a contribution frame, each an
+    * integer sum, so reports over disjoint contributions add up
+    * exactly ([[yieldMerge]]). */
+  private val yieldMeasures: Seq[(String, Column)] = Seq(
+    "n_docs" -> count(lit(1)),
+    "n_tokens" -> sum(col("n_tok")),
+    "n_kept" -> sum(when(col("verdict") === "kept", 1L).otherwise(0L)),
+    "n_tokens_kept" ->
+      sum(when(col("verdict") === "kept", col("n_tok")).otherwise(0L)),
+    "n_drop_dedup" ->
+      sum(when(col("verdict") === "drop_dedup", 1L).otherwise(0L)),
+    "n_drop_quality" ->
+      sum(when(col("verdict") === "drop_quality", 1L).otherwise(0L)),
+    "n_drop_lang" ->
+      sum(when(col("verdict") === "drop_lang", 1L).otherwise(0L)))
+
   /** The (lang, source) yield rollup over a contribution frame —
     * [[qCorpusYield]]'s aggregate, also applied by the corpus-drop
     * job to batch-only contributions. */
   private[graft] def yieldAggregate(contrib: DataFrame): DataFrame =
-    contrib.groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tok")).as("n_tokens"),
-        sum(when(col("verdict") === "kept", 1L).otherwise(0L)).as("n_kept"),
-        sum(when(col("verdict") === "kept", col("n_tok")).otherwise(0L))
-          .as("n_tokens_kept"),
-        sum(when(col("verdict") === "drop_dedup", 1L).otherwise(0L))
-          .as("n_drop_dedup"),
-        sum(when(col("verdict") === "drop_quality", 1L).otherwise(0L))
-          .as("n_drop_quality"),
-        sum(when(col("verdict") === "drop_lang", 1L).otherwise(0L))
-          .as("n_drop_lang"))
+    aggregateYield(contrib, yieldMeasures.map { case (n, m) => m.as(n) })
+
+  /** A yield report with every measure negated: adding it retracts
+    * the contributions it was aggregated from. */
+  private[graft] def yieldNegate(report: DataFrame): DataFrame =
+    report.select(col("lang") +: col("source") +:
+      yieldMeasures.map { case (n, _) => (-col(n)).as(n) }: _*)
+
+  /** The sum of yield reports per (lang, source), keeping the groups
+    * with documents left. */
+  private[graft] def yieldMerge(reports: Seq[DataFrame]): DataFrame =
+    aggregateYield(reports.reduce(_ unionByName _),
+      yieldMeasures.map { case (n, _) => sum(col(n)).as(n) })
+      .filter(col("n_docs") > 0)
+
+  private def aggregateYield(df: DataFrame, aggs: Seq[Column]): DataFrame =
+    df.groupBy(col("lang"), col("source")).agg(aggs.head, aggs.tail: _*)
 
   val qCorpusYield = GraftQuery(
     "t_corpus_yield",

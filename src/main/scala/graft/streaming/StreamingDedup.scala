@@ -29,9 +29,11 @@ object StreamingDedup {
 
   /** Streaming twin of `dd_incremental`'s exact triage: each arriving
     * document is classified `exact_dup` (same normalized-text
-    * fingerprint as a corpus doc, with the canonical corpus id) or
+    * fingerprint as a corpus doc, with the lowest such corpus id) or
     * `novel`, via a stream-static left join against the corpus
-    * fingerprint table.
+    * fingerprint table — the batch query's own exact-of
+    * ([[Dedup.lowestIdPerFp]]) and verdict ([[Dedup.triageVerdict]])
+    * with no near half.
     *
     * Scale shape: the static side is the PERSISTED fingerprint
     * artifact (16-byte md5 + id per corpus doc) and is broadcast —
@@ -40,14 +42,13 @@ object StreamingDedup {
     * batch. At corpus sizes past broadcast range the same plan runs
     * as a shuffled stream-static join keyed on fp. */
   def triageAgainstCorpus(docs: DataFrame, corpus: DataFrame): DataFrame = {
-    val corpusFp = corpus
-      .groupBy(Dedup.fingerprintExpr.as("fp"))
-      .agg(min(col("doc_id")).as("exact_of"))
+    val corpusFp =
+      Dedup.lowestIdPerFp(Dedup.fingerprintTable(corpus), "exact_of")
     docs
       .withColumn("fp", Dedup.fingerprintExpr)
       .join(broadcast(corpusFp), Seq("fp"), "left")
-      .withColumn("status",
-        when(col("exact_of").isNotNull, "exact_dup").otherwise("novel"))
-      .withColumnRenamed("exact_of", "dup_of")
+      .select(col("*") +:
+        Dedup.triageVerdict(col("exact_of"), lit(null).cast("long")): _*)
+      .drop("exact_of")
   }
 }

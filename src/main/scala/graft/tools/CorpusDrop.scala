@@ -23,13 +23,18 @@ import org.apache.spark.sql.functions._
   *
   * == Exactness contract (CorpusDropSpec / the sf1 certificate) ==
   * The refreshed keep-list, cluster table and corpus-yield report are
-  * BIT-IDENTICAL to a full recompute over old ∪ batch:
+  * BIT-IDENTICAL to a full recompute over old ∪ batch. Every decision
+  * rule is the registry's own function, not a copy of it:
   *
-  *  - per-doc artifacts (signatures, shingles, fingerprints) are
-  *    pure row expressions — batch rows computed batch-only, unioned
-  *    with the persisted corpus rows, equal the full derivation;
+  *  - per-doc artifacts are [[Dedup.signatureTable]],
+  *    [[Dedup.shingleTable]] and [[Dedup.fingerprintTable]], pure row
+  *    derivations — batch rows computed batch-only, unioned with the
+  *    persisted corpus rows, equal the full derivation;
+  *  - triage is [[Dedup.triage]], dd_incremental's rules, fed the
+  *    corpus exact-of ([[Dedup.lowestIdPerFp]]) of only the
+  *    fingerprints the batch carries;
   *  - exact canonicals: batch doc_ids are strictly greater than every
-  *    corpus id (validated), so min(doc_id) per fingerprint group is
+  *    corpus id (validated), so the lowest id per fingerprint is
   *    unchanged for existing groups and batch-computable for new ones;
   *  - clusters: candidate pairs depend only on each doc's own band
   *    buckets, so the combined corpus's pair set is exactly
@@ -39,10 +44,15 @@ import org.apache.spark.sql.functions._
   *    labels, since every old component's min IS its label — as CC
   *    over the full pair set. Only components adjacent to a new pair
   *    can change, so CC runs on the affected subgraph only;
-  *  - keep-list/yield follow functionally from canonicals + clusters;
-  *    the yield delta reuses [[TextAnalysis.yieldContrib]] — the same
-  *    expression set as t_corpus_yield — with signed weights, and
-  *    integer sums make the merged report exactly the full aggregate.
+  *  - keepers are [[Dedup.withKeeper]] (the rule of
+  *    [[Dedup.keeperFrame]]) over canonicals + clusters, and the
+  *    keep-list is [[Dedup.keepList]] of the persisted keepers;
+  *  - the yield delta is t_corpus_yield's own
+  *    [[TextAnalysis.yieldContrib]] and [[TextAnalysis.yieldAggregate]]
+  *    over the batch and the docs whose kept-ness flipped, the old
+  *    contributions retracted by [[TextAnalysis.yieldNegate]]; the
+  *    measures are integer sums, so [[TextAnalysis.yieldMerge]] of the
+  *    published report and the deltas is exactly the full aggregate.
   *
   * == Scale shape (the 100 TB argument) ==
   * No step re-derives a corpus-sized artifact and no step shuffles
@@ -150,11 +160,13 @@ object CorpusDrop {
     Artifacts.materialize(spark, gen1, artifactsDir(stateDir, 1))
     Artifacts.attach(spark, artifactsDir(stateDir, 1))
     try {
-      keeperState(spark, gen1)
-        .write.mode("overwrite").parquet(keepersDir(stateDir, 1))
+      // exact_canonical persists with the keeper: the incremental path
+      // needs it without re-scanning corpus text
+      val keepers = Dedup.keeperFrame(spark, gen1)
+      keepers.write.mode("overwrite").parquet(keepersDir(stateDir, 1))
       TextAnalysis.yieldAggregate(TextAnalysis.yieldContrib(
           graft.Tables.documents(spark, gen1),
-          keeperState(spark, gen1).select(col("doc_id"), col("keeper"))))
+          keepers.select(col("doc_id"), col("keeper"))))
         .write.mode("overwrite").parquet(yieldDir(stateDir, 1))
     } finally Artifacts.detach(spark)
     Versioned.writeFile(spark, pointer(stateDir), "1")
@@ -165,29 +177,6 @@ object CorpusDrop {
     Versioned.fsOf(spark, srcDir).listStatus(new Path(srcDir))
       .map(_.getPath.getName).filter(_.endsWith(".parquet"))
       .map(_.stripSuffix(".parquet")).toSeq.sorted
-
-  /** The keeper state (doc_id, exact_canonical, keeper) — the
-    * persisted superset of dd_keep_list (which is a pure projection,
-    * [[keepListFrom]]); exact_canonical must persist because the
-    * incremental path needs it without re-scanning corpus text. */
-  private def keeperState(spark: SparkSession, d: String): DataFrame = {
-    val fps = Dedup.sessionFingerprints(spark, d)
-    val canon = fps.groupBy(col("fp"))
-      .agg(min(col("doc_id")).as("exact_canonical"))
-    fps.join(canon, "fp").select(col("doc_id"), col("exact_canonical"))
-      .join(Dedup.sessionClusters(spark, d), Seq("doc_id"), "left")
-      .withColumn("keeper", coalesce(col("cluster_id"), col("exact_canonical")))
-      .select(col("doc_id"), col("exact_canonical"), col("keeper"))
-  }
-
-  /** dd_keep_list's exact output shape from a keeper-state frame. */
-  def keepListFrom(keepers: DataFrame): DataFrame =
-    keepers.select(col("doc_id"),
-      (col("doc_id") === col("keeper")).as("keep"),
-      when(col("doc_id") === col("keeper"), "keep")
-        .when(col("doc_id") =!= col("exact_canonical"), "exact_dup")
-        .otherwise("near_dup").as("reason"),
-      when(col("doc_id") =!= col("keeper"), col("keeper")).as("dup_of"))
 
   // ------------------------------------------------------------------
   // drop: one incremental batch against the current generation
@@ -235,15 +224,15 @@ object CorpusDrop {
           .select("doc_id", "text", "lang", "source", "n_chars")
         val oldMax = read(keepersDir(stateDir, baseGen))
           .agg(max(col("doc_id"))).head().getLong(0)
-        val (n, nd, bMin) = b.agg(count(lit(1)), countDistinct(col("doc_id")),
-          min(col("doc_id"))).head() match {
+        val (n, nd, nLow) = b.agg(count(lit(1)), countDistinct(col("doc_id")),
+          count(when(col("doc_id") <= oldMax, 1))).head() match {
           case r => (r.getLong(0), r.getLong(1), r.getLong(2))
         }
         require(n > 0, "empty batch")
         require(n == nd, s"batch doc_ids not unique: $n rows, $nd distinct")
-        require(bMin > oldMax,
+        require(nLow == 0,
           s"batch ids must exceed the corpus maximum (append-only " +
-            s"contract): batch min $bMin <= corpus max $oldMax")
+            s"contract): $nLow batch ids <= corpus max $oldMax")
         b.write.mode("overwrite").parquet(out)
       }
       val batchDocs = read(batchDocsP)
@@ -256,9 +245,7 @@ object CorpusDrop {
         writeLikeBase(Dedup.signatureTable(batchDocs), "signatures", out)
       }
       val batchShinglesP = step("batch_shingles") { out =>
-        writeLikeBase(batchDocs.select(col("doc_id"),
-            org.apache.spark.sql.graft.ShingleHashes.of(col("text")).as("hsh")),
-          "shingles", out)
+        writeLikeBase(Dedup.shingleTable(batchDocs), "shingles", out)
       }
       val batchFpsP = step("batch_fingerprints") { out =>
         writeLikeBase(Dedup.fingerprintTable(batchDocs), "fingerprints", out)
@@ -266,52 +253,29 @@ object CorpusDrop {
       val batchSigs = read(batchSigsP)
       val batchFps = read(batchFpsP)
 
-      // -- 2. triage: dd_incremental semantics vs persisted artifacts
+      // -- 2. triage: dd_incremental's rules vs persisted artifacts
       val oldFps = Dedup.sessionFingerprints(spark, gen)
-      // min matching corpus id per batch fingerprint: the corpus side
-      // is probed with the broadcast batch fp set, so only matched
-      // rows aggregate (batch-sized shuffle over one artifact scan)
-      val corpusFpMin = oldFps
-        .join(broadcast(batchFps.select(col("fp")).distinct()), "fp")
-        .groupBy(col("fp")).agg(min(col("doc_id")).as("exact_of"))
+      // lowest matching corpus id per batch fingerprint: the corpus
+      // side is probed with the broadcast batch fp set, so only
+      // matched rows aggregate (batch-sized shuffle over one artifact
+      // scan)
+      val corpusFpMin = Dedup.lowestIdPerFp(
+        oldFps.join(broadcast(batchFps.select(col("fp")).distinct()), "fp"),
+        "exact_of")
       val oldBands = Dedup.bandFrame(Dedup.sessionSignatures(spark, gen))
       val batchBands = Dedup.bandFrame(batchSigs)
       val triageP = step("triage") { out =>
-        val exact = batchFps.join(corpusFpMin, Seq("fp"), "left")
-          .select(col("doc_id"), col("exact_of"))
-        val near = oldBands.as("l")
-          .join(batchBands.as("r"),
-            col("l.band") === col("r.band") &&
-              col("l.bucket") === col("r.bucket"))
-          .select(col("r.doc_id").as("doc_id"),
-            col("l.doc_id").as("cand"), Dedup.sigAgreement.as("agree"))
-          .filter(col("agree") >= 4)
-          .groupBy(col("doc_id"))
-          .agg(org.apache.spark.sql.graft.ArgMax2
-            .of(col("agree"), -col("cand")).as("m"))
-          .select(col("doc_id"), (-col("m.tie")).as("near_of"))
-        exact.join(near, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("exact_of").isNotNull, "exact_dup")
-              .when(col("near_of").isNotNull, "near_dup")
-              .otherwise("novel").as("status"),
-            coalesce(col("exact_of"), col("near_of")).as("dup_of"))
+        Dedup.triage(batchFps, corpusFpMin, oldBands, batchBands)
           .write.mode("overwrite").parquet(out)
       }
 
       // -- 3. new candidate pairs (cross + batch-self) ---------------
       val pairsP = step("pairs") { out =>
-        val cross = oldBands.as("l")
-          .join(batchBands.as("r"),
-            col("l.band") === col("r.band") &&
-              col("l.bucket") === col("r.bucket"))
-          .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-        val self = batchBands.as("l")
-          .join(batchBands.as("r"),
-            col("l.band") === col("r.band") &&
-              col("l.bucket") === col("r.bucket") &&
-              col("l.doc_id") < col("r.doc_id"))
-          .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
+        def pairs(l: DataFrame, r: DataFrame, ordered: Boolean) =
+          Dedup.bandJoin(l, r, ordered)
+            .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
+        val cross = pairs(oldBands, batchBands, ordered = false)
+        val self = pairs(batchBands, batchBands, ordered = true)
         cross.union(self).distinct().write.mode("overwrite").parquet(out)
       }
       val newPairs = read(pairsP)
@@ -341,8 +305,7 @@ object CorpusDrop {
       // -- 5. keeper refresh -----------------------------------------
       val oldKeepers = read(keepersDir(stateDir, baseGen))
       val keepersP = step("keepers") { out =>
-        val batchMin = batchFps.groupBy(col("fp"))
-          .agg(min(col("doc_id")).as("batch_min"))
+        val batchMin = Dedup.lowestIdPerFp(batchFps, "batch_min")
         val batchCanon = batchFps.join(batchMin, "fp")
           .join(corpusFpMin, Seq("fp"), "left")
           .select(col("doc_id"),
@@ -360,10 +323,8 @@ object CorpusDrop {
           .select(col("doc_id"))
         val affected = oldKeepers.select(col("doc_id"), col("exact_canonical"))
           .join(broadcast(touched.union(affByCluster).distinct()), "doc_id")
-        val updated = affected.unionByName(batchCanon)
-          .join(newClusters, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("exact_canonical"),
-            coalesce(col("cluster_id"), col("exact_canonical")).as("keeper"))
+        val updated = Dedup.withKeeper(affected.unionByName(batchCanon),
+          newClusters)
         oldKeepers.join(broadcast(updated.select(col("doc_id"))),
             Seq("doc_id"), "left_anti")
           .unionByName(updated)
@@ -373,20 +334,6 @@ object CorpusDrop {
 
       // -- 6. corpus-yield delta -------------------------------------
       val yieldP = step("yield") { out =>
-        def signedAgg(contrib: DataFrame, w: Int): DataFrame =
-          contrib.groupBy(col("lang"), col("source"))
-            .agg(sum(lit(w.toLong)).as("n_docs"),
-              sum(col("n_tok") * w).as("n_tokens"),
-              sum(when(col("verdict") === "kept", w.toLong).otherwise(0L))
-                .as("n_kept"),
-              sum(when(col("verdict") === "kept", col("n_tok") * w)
-                .otherwise(0L)).as("n_tokens_kept"),
-              sum(when(col("verdict") === "drop_dedup", w.toLong)
-                .otherwise(0L)).as("n_drop_dedup"),
-              sum(when(col("verdict") === "drop_quality", w.toLong)
-                .otherwise(0L)).as("n_drop_quality"),
-              sum(when(col("verdict") === "drop_lang", w.toLong)
-                .otherwise(0L)).as("n_drop_lang"))
         val batchContrib = TextAnalysis.yieldContrib(batchDocs,
           newKeepers.select(col("doc_id"), col("keeper")))
         // old docs whose KEPT-ness flipped (the verdict only reads
@@ -412,19 +359,10 @@ object CorpusDrop {
             .select(col("doc_id"), col("old_keeper").as("keeper")))
         val newContrib = TextAnalysis.yieldContrib(flippedDocs,
           read(flippedPath).select(col("doc_id"), col("keeper")))
-        read(yieldDir(stateDir, baseGen))
-          .unionByName(signedAgg(batchContrib, 1))
-          .unionByName(signedAgg(newContrib, 1))
-          .unionByName(signedAgg(oldContrib, -1))
-          .groupBy(col("lang"), col("source"))
-          .agg(sum(col("n_docs")).as("n_docs"),
-            sum(col("n_tokens")).as("n_tokens"),
-            sum(col("n_kept")).as("n_kept"),
-            sum(col("n_tokens_kept")).as("n_tokens_kept"),
-            sum(col("n_drop_dedup")).as("n_drop_dedup"),
-            sum(col("n_drop_quality")).as("n_drop_quality"),
-            sum(col("n_drop_lang")).as("n_drop_lang"))
-          .filter(col("n_docs") > 0)
+        TextAnalysis.yieldMerge(Seq(read(yieldDir(stateDir, baseGen)),
+            TextAnalysis.yieldAggregate(batchContrib),
+            TextAnalysis.yieldAggregate(newContrib),
+            TextAnalysis.yieldNegate(TextAnalysis.yieldAggregate(oldContrib))))
           .write.mode("overwrite").parquet(out)
       }
 

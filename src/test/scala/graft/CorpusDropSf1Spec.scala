@@ -71,7 +71,7 @@ class CorpusDropSf1Spec extends SparkSpec {
     val nFull = wantKeep.count()
     val fullSec = (System.nanoTime() - tFull0) / 1e9
 
-    val gotKeep = CorpusDrop.keepListFrom(
+    val gotKeep = queries.Dedup.keepList(
       spark.read.parquet(CorpusDrop.keepersDir(state, 2)))
     assert(gotKeep.count() == nFull)
     // set equality via anti-joins — at 1M rows a driver-side

@@ -18,7 +18,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *  - the drop's triage report equals dd_incremental's output;
   *  - a drop never re-derives a corpus artifact
   *    (Dedup.artifactDerivations stays flat — the O(batch) contract
-  *    in counter form);
+  *    in counter form) and leaves no RDD persisted;
   *  - attach on the published artifact set flips registry consumers
   *    to the refreshed tables, still derivation-free — which also
   *    proves the hardlink+delta bucketed append reads correctly;
@@ -85,7 +85,7 @@ class CorpusDropSpec extends SparkSpec {
 
     // published products equal the fresh combined derivation
     val keepers = spark.read.parquet(CorpusDrop.keepersDir(state, 2))
-    assert(rows(CorpusDrop.keepListFrom(keepers)) == wantKeep,
+    assert(rows(queries.Dedup.keepList(keepers)) == wantKeep,
       "published keep-list must equal full recompute over old ∪ batch")
     assert(rows(spark.read.parquet(CorpusDrop.yieldDir(state, 2))) == wantYield,
       "published corpus-yield must equal full recompute")
@@ -166,9 +166,20 @@ class CorpusDropSpec extends SparkSpec {
       resumed.stepSeconds.contains("publish"),
       s"remaining steps must run: ${resumed.stepSeconds}")
     val keepers = spark.read.parquet(CorpusDrop.keepersDir(stateB, 2))
-    assert(rows(CorpusDrop.keepListFrom(keepers)) == wantKeep,
+    assert(rows(queries.Dedup.keepList(keepers)) == wantKeep,
       "a resumed drop must publish the same keep-list")
     assert(rows(spark.read.parquet(CorpusDrop.yieldDir(stateB, 2))) == wantYield)
+  }
+
+  test("a drop leaves nothing persisted") {
+    val state = Files.createTempDirectory("graft_dropleak").toString
+    CorpusDrop.init(spark, datasetWith($"doc_id" < 400), state)
+    val batch = batchWith($"doc_id" >= 400)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    CorpusDrop.drop(spark, state, batch, "drop1")
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty,
+      s"a drop must release every RDD it persists: ${added.toSeq.sorted} left")
   }
 
   test("consecutive drops chain generations; retention keeps one predecessor") {
@@ -187,7 +198,7 @@ class CorpusDropSpec extends SparkSpec {
     assert(r2.baseGen == 2 && CorpusDrop.currentGen(spark, state).contains(3))
 
     val keepers = spark.read.parquet(CorpusDrop.keepersDir(state, 3))
-    assert(rows(CorpusDrop.keepListFrom(keepers)) == wantKeep,
+    assert(rows(queries.Dedup.keepList(keepers)) == wantKeep,
       "two chained drops must converge to the full-recompute keep-list")
     assert(rows(spark.read.parquet(CorpusDrop.yieldDir(state, 3))) == wantYield)
 

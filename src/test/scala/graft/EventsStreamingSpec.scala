@@ -51,7 +51,7 @@ class EventsStreamingSpec extends SparkSpec {
       ("Utah", "Orem", "84058"), ("Salt Lake", "Sandy", "84070"),
       ("Salt Lake", "Sandy", "bad1")) // F6 drops
       .toDF("county", "city", "zip")
-    ZipReferenceJob.run(spark, rows, dir)
+    ZipReferenceJob.run(rows, dir)
 
     val back = FileScans.nestedZips(spark, s"$dir/county_city_zips.json")
     assert(back.count() == 4)

@@ -31,7 +31,7 @@ class FuzzyJoinSpec extends SparkSpec {
   }
 
   private def blocked(names: Seq[String], tau: Int): Set[(String, String, Long)] =
-    queries.Dedup.fuzzyJoin(spark, names.toDF("name").distinct(), tau)
+    queries.Dedup.fuzzyJoin(names.toDF("name").distinct(), tau)
       .as[(String, String, Long)].collect().toSet
 
   test("tau=1: gram-destroying edits at the minLong boundary are not missed") {
@@ -86,7 +86,7 @@ class FuzzyJoinSpec extends SparkSpec {
 
     val quadratic = names.size.toLong * (names.size - 1) / 2
     val cands = queries.Dedup.fuzzyCandidates(
-      spark, names.toDF("name").localCheckpoint(true), 1).count()
+      names.toDF("name").localCheckpoint(true), 1).count()
     assert(cands < quadratic / 5,
       s"hot gram not suppressed: $cands candidates vs $quadratic quadratic")
     assert(blocked(names, 1) == naive(names, 1))
@@ -98,7 +98,7 @@ class FuzzyJoinSpec extends SparkSpec {
     // cluster closure maps all three to one canonical
     val names = Seq("aaaa", "aaab", "aabb", "zzzz").toDF("name")
     val labels = queries.Dedup.connectedComponents(
-      queries.Dedup.fuzzyJoin(spark, names, 1)
+      queries.Dedup.fuzzyJoin(names, 1)
         .select($"name_a".as("doc_a"), $"name_b".as("doc_b")), parts = 4)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(labels == Map("aaaa" -> "aaaa", "aaab" -> "aaaa",

@@ -115,8 +115,6 @@ object Reach {
       "reader-atomic compaction through Versioned; CompactSpec holds it to wholly-old-or-new reads",
     "graft.tools.Layout.publishZorder" ->
       "reader-atomic z-order re-layout through Versioned; CompactSpec checks it",
-    "graft.tools.CorpusDrop.keepListFrom" ->
-      "projects keeper state onto dd_keep_list's shape; CorpusDropSpec compares drops with it",
     "graft.tools.PlanAudit.pinnedScaledBroadcasts" ->
       "the scaled-broadcast gate RegistrySweep records and PlanAuditSpec asserts")
 
